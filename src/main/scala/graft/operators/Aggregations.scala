@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{Det, Q, Tables => T}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2.4 A1–A12: hash aggregation surface.
@@ -154,62 +153,6 @@ object Aggregations {
     * primitive engines expose as `histogram()`/`width_bucket`. One narrow
     * aggregation; empty buckets are absent (sparse form).
     */
-  /** Exact interpolated percentiles per l_returnflag as a COUNTING
-    * aggregate + per-group cumulative window: `base` carries
-    * (l_returnflag, v0, v1) integer-valued LONG measures; the result has
-    * one row per distinct l_returnflag (an all-NULL group keeps its row,
-    * like `percentile()`) with r0 = percentile(v0, p0) and
-    * r1 = percentile(v1, p1), both DOUBLE and bit-identical to the
-    * built-in — the interpolation replicates Percentile.getPercentile's
-    * double arithmetic exactly: position = pct * (n-1); lower = floor,
-    * higher = ceil; result = (higher-position)*v_lo + (position-lower)*v_hi
-    * (AggregationsSpec pins the equality against `percentile()` itself).
-    */
-  private[graft] def histogramPercentiles(
-      base: org.apache.spark.sql.DataFrame, p0: Double,
-      p1: Double): org.apache.spark.sql.DataFrame = {
-    // (m, v): m=0 -> v0 at pct p0, m=1 -> v1 at pct p1
-    val stacked = base
-      .selectExpr("l_returnflag", "stack(2, 0, v0, 1, v1) as (m, v)")
-      .filter(col("v").isNotNull)
-    val counts = stacked.groupBy(col("l_returnflag"), col("m"), col("v"))
-      .agg(count(lit(1)).as("c"))
-    val w = Window.partitionBy("l_returnflag", "m").orderBy("v")
-    val cum = counts.withColumn("hi", sum(col("c")).over(w))
-      .withColumn("lo", col("hi") - col("c"))
-    val tot = counts.groupBy(col("l_returnflag"), col("m"))
-      .agg(sum(col("c")).as("n"))
-    val pos = cum.join(tot, Seq("l_returnflag", "m"))
-      .withColumn("pct", when(col("m") === 0, lit(p0)).otherwise(lit(p1)))
-      .withColumn("position", col("pct") * (col("n") - 1).cast("double"))
-      .withColumn("rk_lo", floor(col("position")))
-      .withColumn("rk_hi", ceil(col("position")))
-    // the one or two histogram rows covering the target ranks (a row
-    // covers 0-based multiset index k iff lo <= k < hi)
-    val picked = pos
-      .groupBy(col("l_returnflag"), col("m"), col("position"),
-        col("rk_lo"), col("rk_hi"))
-      .agg(
-        max(when(col("lo") <= col("rk_lo") && col("rk_lo") < col("hi"),
-          col("v"))).as("v_lo"),
-        max(when(col("lo") <= col("rk_hi") && col("rk_hi") < col("hi"),
-          col("v"))).as("v_hi"))
-    val res = picked.withColumn("r",
-      when(col("rk_lo") === col("rk_hi"), col("v_lo").cast("double"))
-        .otherwise(
-          (col("rk_hi").cast("double") - col("position")) *
-            col("v_lo").cast("double") +
-          (col("position") - col("rk_lo").cast("double")) *
-            col("v_hi").cast("double")))
-    val perFlag = res.groupBy(col("l_returnflag"))
-      .agg(max(when(col("m") === 0, col("r"))).as("r0"),
-        max(when(col("m") === 1, col("r"))).as("r1"))
-    // group-set fidelity: percentile() over an all-NULL group returns a
-    // row with NULL measures; the histogram path alone would drop it
-    base.select("l_returnflag").distinct()
-      .join(perFlag, Seq("l_returnflag"), "left")
-  }
-
   def equiWidthHistogram(df: org.apache.spark.sql.DataFrame,
       centsCol: org.apache.spark.sql.Column, widthCents: Long)
       : org.apache.spark.sql.DataFrame =
@@ -459,14 +402,10 @@ object Aggregations {
     // absorb last-ulp interpolation differences).
     //
     // Measured alternative, round 15: a histogram + cumulative-window
-    // spelling ([[histogramPercentiles]], bit-identical per
-    // AggregationsSpec) was built to replace the non-codegen
-    // ObjectHashAggregate here — and benched SLOWER (Prof warm total
-    // 1.92 -> 2.58 s at sf0.1): price cents are near-unique, so the
-    // histogram degenerates to the raw row count and its per-group window
-    // sort costs more than percentile()'s count-map merge. The built-in
-    // stays; the helper remains as the documented (and unit-pinned)
-    // distributed spelling for value domains with real repetition.
+    // spelling benched SLOWER than the non-codegen ObjectHashAggregate
+    // here (price cents are near-unique, so the histogram degenerates to
+    // the raw row count); the built-in stays. Numbers and the removed
+    // spelling: OPTIMIZATION_r15.md.
     "q_agg_percentile" -> ((s, dir) => {
       T.lineitem(s, dir)
         .groupBy("l_returnflag")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Q
+import graft.{MetaFiles, Q}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,8 +32,9 @@ object Versioned {
   // upsert's partition pointers (a lost update) — same for any mutator
   // that derives its new version from the tip (upsert/deleteWhere/
   // deleteWhereDv/compact/restore/rename/optimize). Those mutators
-  // therefore serialize on an exclusive `_mutate._claim` — the E146
-  // IndexStore protocol verbatim: O_EXCL create, heartbeat while held,
+  // therefore serialize on an exclusive `_mutate._claim` — the shared
+  // held-claim protocol of [[MetaFiles.withClaim]] (the index store's
+  // builder claim is the same code): O_EXCL create, heartbeat while held,
   // stale-claim takeover by atomic rename (exactly one waiter wins), and
   // per-thread re-entrancy so compound mutators (the stats-sidecar
   // upserts) nest without deadlock. Round-13 invariant: EVERY
@@ -49,108 +50,8 @@ object Versioned {
   // (microseconds), so concurrent ingest stays the designed parallel
   // path. Readers never touch the claim.
 
-  private[graft] var mutateClaimTimeoutMs: Long = 10L * 60 * 1000
-  private val mutateSeq = new java.util.concurrent.atomic.AtomicLong()
-  private val mutateHeld: ThreadLocal[scala.collection.mutable.Set[String]] =
-    ThreadLocal.withInitial(() => scala.collection.mutable.Set.empty[String])
-  private def mutateClaimPath(dir: String) =
-    java.nio.file.Paths.get(dir, "_mutate._claim")
-
-  private[graft] def withMutateClaim[A](dir: String)(body: => A): A = {
-    import java.nio.file.Files
-    if (mutateHeld.get.contains(dir)) return body // re-entrant
-    val p = mutateClaimPath(dir)
-    // Owner token: after a stale-claim takeover the OLD holder may still
-    // be alive (merely paused past the timeout). Its heartbeat must not
-    // refresh the NEW holder's claim file and its finally-block must not
-    // delete it — otherwise a THIRD mutator could acquire while the
-    // second still holds, breaking mutual exclusion in exactly the
-    // recovery path the takeover exists for. Every touch therefore
-    // verifies the file still carries THIS acquisition's token (pid +
-    // sequence, unique across processes and threads); a holder that
-    // observes a foreign token has lost ownership and raises after its
-    // body so the caller knows the mutation may have raced. (The
-    // verify-then-delete pair in the finally block is not atomic, but a
-    // takeover in that window requires the file to look ≥timeout stale
-    // microseconds after a heartbeat/ownership read — only reachable via
-    // another timeout-length pause exactly there.)
-    val token =
-      s"${ProcessHandle.current().pid()}-${mutateSeq.incrementAndGet()}"
-    def ownsClaim(): Boolean =
-      try Files.readString(p).trim == token
-      catch { case _: Throwable => false }
-    def tryCreate(): Boolean =
-      try {
-        Files.createDirectories(p.getParent)
-        Files.write(p,
-          token.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    while (!tryCreate()) {
-      val stale =
-        try {
-          System.currentTimeMillis() -
-            Files.getLastModifiedTime(p).toMillis > mutateClaimTimeoutMs
-        } catch { case _: Throwable => false } // vanished → re-race
-      if (stale) {
-        try {
-          // Capture the stale claim's content BEFORE evicting: a waiter
-          // paused between the staleness read and the move could
-          // otherwise evict a SUCCESSOR'S freshly created claim —
-          // a brief double-hold the owner token only detects after the
-          // second holder's mutation ran. Verifying the moved file still
-          // carries the observed-stale content (tokens are unique per
-          // acquisition) and moving a fresh claim BACK shrinks that
-          // window to a double timeout-length pause.
-          val observed =
-            try Files.readString(p) catch { case _: Throwable => null }
-          val aside = p.resolveSibling(s".mutate-stale-" +
-            s"${ProcessHandle.current().pid()}-${mutateSeq.incrementAndGet()}")
-          Files.move(p, aside, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          val moved =
-            try Files.readString(aside) catch { case _: Throwable => null }
-          if (observed != null && moved != null && moved != observed) {
-            // evicted a FRESH claim — restore it (on failure a third
-            // party already claimed; the evicted holder's own token
-            // check raises, the existing safety net)
-            try Files.move(aside, p,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            catch { case _: Throwable => Files.deleteIfExists(aside); () }
-          } else { Files.deleteIfExists(aside); () }
-        } catch { case _: Throwable => () } // lost the takeover race
-      } else Thread.sleep(20)
-    }
-    val lost = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val beat = new Thread(() => {
-      try {
-        while (!Thread.interrupted() && !lost.get) {
-          Thread.sleep(math.max(50L, mutateClaimTimeoutMs / 4))
-          if (ownsClaim())
-            Files.setLastModifiedTime(p,
-              java.nio.file.attribute.FileTime.fromMillis(
-                System.currentTimeMillis()))
-          else lost.set(true) // taken over — stop touching it
-        }
-      } catch { case _: Throwable => () }
-    })
-    beat.setDaemon(true)
-    beat.start()
-    mutateHeld.get += dir
-    try {
-      val r = body
-      if (lost.get)
-        sys.error(s"mutator claim on $dir was taken over mid-mutation " +
-          "(this holder was paused past the staleness timeout); the " +
-          "mutation may have raced a concurrent writer — verify the tip")
-      r
-    } finally {
-      mutateHeld.get -= dir
-      beat.interrupt()
-      try { if (ownsClaim()) Files.deleteIfExists(p); () }
-      catch { case _: Throwable => () }
-    }
-  }
+  private[graft] def withMutateClaim[A](dir: String)(body: => A): A =
+    MetaFiles.withClaim(java.nio.file.Paths.get(dir, "_mutate._claim"))(body)
 
   private def markerPath(dir: String) = java.nio.file.Paths.get(dir, "_latest")
   private def claimPath(dir: String, v: Int) =
@@ -209,13 +110,12 @@ object Versioned {
     * safe without any lock or transaction log:
     *
     *  1. the writer CLAIMS a number by exclusively creating `v<N>._claim`
-    *     (`Files.createFile` = O_EXCL — atomic on POSIX filesystems and on
-    *     HDFS-style stores with atomic create-if-absent); a loser that
+    *     ([[MetaFiles.createExclusive]], O_EXCL); a loser that
     *     raced to the same number retries at N+1, so two committers can
     *     never write the same version dir;
     *  2. the version dir is written in full, then `v<N>._commit` is
     *     created — the durable commit record [[latest]] derives from;
-    *  3. the `_latest` hint swaps by write-temp + ATOMIC_MOVE, so a reader
+    *  3. the `_latest` hint swaps by [[MetaFiles.writeAtomic]], so a reader
     *     never sees a half-written pointer. Concurrent commits can leave
     *     the hint one step behind the true max for an instant; [[latest]]
     *     takes the max of hint and commit marks, so reads stay monotonic.
@@ -235,45 +135,40 @@ object Versioned {
     * the many claim-holding callers (upsert/restore/compact/SQL DML)
     * nest unchanged.
     */
-  def commit(df: DataFrame, dir: String): Int = withMutateClaim(dir) {
-    val v = claimNext(dir)
-    df.write.mode("overwrite").parquet(s"$dir/v$v")
-    seal(dir, v)
-    v
-  }
+  def commit(df: DataFrame, dir: String): Int =
+    commitVersion(dir)(v => df.write.mode("overwrite").parquet(s"$dir/v$v"))
 
-  /** Claim the next free version number via O_EXCL (step 1 above). */
-  private def claimNext(dir: String): Int = {
-    var v = latest(dir) + 1
-    while (true) {
-      try {
-        java.nio.file.Files.createFile(claimPath(dir, v))
-        return v
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => v += 1
-      }
-    }
-    -1 // unreachable
-  }
-
-  /** Durable commit mark + best-effort `_latest` hint (steps 2–3 above).
-    * The mark file carries the commit's wall-clock epoch-millis — the
-    * record [[versionAtTime]] resolves `timestampAsOf` reads against.
-    * Creation is still O_EXCL-atomic (`CREATE_NEW`), and readers that
-    * only care about existence ([[isCommitted]]) never parse it.
+  /** Steps 1–3 above, claim-held — every version-creating commit goes
+    * through here: claim the next free number, let `write` fill that
+    * version, then SEAL it — the durable commit mark plus the best-effort
+    * `_latest` hint. The mark carries the commit's wall-clock epoch-millis,
+    * the record [[versionAtTime]] resolves `timestampAsOf` reads against;
+    * readers that only care about existence ([[isCommitted]]) never parse
+    * it. Returns the version.
     */
-  private def seal(dir: String, v: Int): Unit = {
-    java.nio.file.Files.write(commitMarkPath(dir, v),
-      System.currentTimeMillis().toString.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8),
-      java.nio.file.StandardOpenOption.CREATE_NEW)
-    val tmp = java.nio.file.Paths.get(dir, s".latest-$v")
-    java.nio.file.Files.writeString(tmp, v.toString)
-    java.nio.file.Files.move(tmp, markerPath(dir),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
+  private def commitVersion(dir: String)(write: Int => Unit): Int =
+    withMutateClaim(dir) {
+      var v = latest(dir) + 1
+      while (!MetaFiles.createExclusive(claimPath(dir, v))) v += 1
+      write(v)
+      val mark = commitMarkPath(dir, v)
+      if (!MetaFiles.createExclusive(mark, System.currentTimeMillis().toString))
+        throw new java.nio.file.FileAlreadyExistsException(mark.toString)
+      MetaFiles.writeAtomic(markerPath(dir), v.toString)
+      v
+    }
+
+  /** Commit a metadata-only version: claim the next number, write one
+    * sidecar (`at(dir, v)`) into its otherwise empty dir, seal. Returns
+    * the version.
+    */
+  private def commitMetaOnly(dir: String,
+      at: (String, Int) => java.nio.file.Path, body: String): Int =
+    commitVersion(dir) { v =>
+      val p = at(dir, v)
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.writeString(p, body)
+    }
 
   /** Retention: physically remove versions (and their claim/commit marks)
     * older than the newest `keepLast` (never the served latest). Time
@@ -301,9 +196,12 @@ object Versioned {
       .reduceOption(_ min _).getOrElse(Int.MaxValue)
     val cut = math.min(
       math.min(tip - math.max(1, keepLast) + 1, liveBase), tagFloor)
+    // commit marks go first: a crash mid-cut then leaves uncommitted
+    // debris, never a committed version whose data is gone
     Option(new java.io.File(dir).listFiles())
       .getOrElse(Array.empty[java.io.File])
       .filter(f => versionOf(f.getName).exists(_ < cut))
+      .sortBy(f => !f.getName.endsWith("._commit"))
       .foreach(rmTree)
     // sweep ORPHANED DML temp dirs: a row-level operation's write
     // commit/abort deletes its own `.rowlevel-scan-*`/`.staging-*` dirs,
@@ -409,7 +307,7 @@ object Versioned {
   // ---- timestamp-based time travel --------------------------------------
 
   /** Version `v`'s commit wall-clock (epoch millis), recorded in its
-    * commit mark by [[seal]]. None for an uncommitted version or a mark
+    * commit mark by [[commitVersion]]. None for an uncommitted version or a mark
     * predating timestamp recording (an empty legacy mark file).
     */
   def commitTimeOf(dir: String, v: Int): Option[Long] = {
@@ -658,8 +556,7 @@ object Versioned {
     * the buried-snapshot anomaly, on the partitioned surface.
     */
   def commitPartitioned(df: DataFrame, dir: String,
-      partCol: String): Int = withMutateClaim(dir) {
-    val v = claimNext(dir)
+      partCol: String): Int = commitVersion(dir) { v =>
     // cluster rows to their partition before the write: each hive dir gets
     // one file instead of one per producing task — the small-file posture
     // a 100 TB partitioned commit needs
@@ -667,8 +564,6 @@ object Versioned {
       .write.partitionBy(partCol).mode("overwrite").parquet(s"$dir/v$v/data")
     val parts = dataDirPartValues(dir, v, partCol)
     writeManifest(dir, v, parts.map(_ -> v).toMap)
-    seal(dir, v)
-    v
   }
 
   /** The table as of version `v`: one partition-pruned scan per version
@@ -787,13 +682,12 @@ object Versioned {
         old.columns.map(c => s"`$c`"): _*), key)
       case None => updates
     }
-    val v = claimNext(dir)
-    clusterForWrite(merged, partCol).write.partitionBy(partCol)
-      .mode("overwrite").parquet(s"$dir/v$v/data")
-    val newParts = dataDirPartValues(dir, v, partCol)
-    writeManifest(dir, v, man ++ newParts.map(_ -> v).toMap)
-    seal(dir, v)
-    v
+    commitVersion(dir) { v =>
+      clusterForWrite(merged, partCol).write.partitionBy(partCol)
+        .mode("overwrite").parquet(s"$dir/v$v/data")
+      val newParts = dataDirPartValues(dir, v, partCol)
+      writeManifest(dir, v, man ++ newParts.map(_ -> v).toMap)
+    }
   }
 
   /** OPTIMIZE: rewrite every live partition into one fresh version so
@@ -900,14 +794,13 @@ object Versioned {
       val scattered = man.filter(_._2 != majority)
       val partCol = firstPartCol(dir, majority)
       val moved = readManifestSubset(s, dir, cur, scattered)
-      val v = claimNext(dir)
-      clusterForWrite(moved, partCol)
-        .write.partitionBy(partCol).mode("overwrite")
-        .parquet(s"$dir/v$v/data")
-      writeManifest(dir, v,
-        man.map { case (p, o) => p -> (if (o == majority) o else v) })
-      seal(dir, v)
-      v
+      commitVersion(dir) { v =>
+        clusterForWrite(moved, partCol)
+          .write.partitionBy(partCol).mode("overwrite")
+          .parquet(s"$dir/v$v/data")
+        writeManifest(dir, v,
+          man.map { case (p, o) => p -> (if (o == majority) o else v) })
+      }
     }
   }
 
@@ -954,10 +847,7 @@ object Versioned {
       key: String): Int = withMutateClaim(dir) {
     val keys = readAtDv(s, dir, latest(dir)).filter(cond)
       .select(col(key)).distinct()
-    val v = claimNext(dir)
-    keys.write.mode("overwrite").parquet(dvPath(dir, v))
-    seal(dir, v)
-    v
+    commitVersion(dir)(v => keys.write.mode("overwrite").parquet(dvPath(dir, v)))
   }
 
   /** The table as of version `v` with the delta chain applied: the
@@ -1343,15 +1233,25 @@ object Versioned {
   // operation's scan pinned (optimistic concurrency: a conflicting
   // commit fails the DML loudly instead of silently dropping it).
 
-  private[graft] def adoptStagedSnapshot(dir: String,
-      staging: String): Int = withMutateClaim(dir) {
-    val v = claimNext(dir)
-    java.nio.file.Files.move(java.nio.file.Paths.get(staging),
-      java.nio.file.Paths.get(dir, s"v$v"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    seal(dir, v)
-    v
+  /** The one staged-adoption sequence, claim-held: claim the next
+    * number, move the finished `staged` dir into `v<N>` (or, as a delta,
+    * into its `_add` link with the harvested footer stats beside it), run
+    * `beforeSeal` for side-effects that must land before the commit mark,
+    * seal. Returns the version.
+    */
+  private def adoptStaged(dir: String, staged: String, delta: Boolean,
+      harvested: Option[(Seq[String], Map[String, AddColStats])] = None,
+      beforeSeal: Int => Unit = _ => ()): Int = commitVersion(dir) { v =>
+    val src = java.nio.file.Paths.get(staged)
+    if (delta) {
+      MetaFiles.moveAtomic(src, java.nio.file.Paths.get(addPath(dir, v)))
+      writeAddStats(dir, v, harvested)
+    } else MetaFiles.moveAtomic(src, java.nio.file.Paths.get(dir, s"v$v"))
+    beforeSeal(v)
   }
+
+  private[graft] def adoptStagedSnapshot(dir: String, staging: String): Int =
+    adoptStaged(dir, staging, delta = false)
 
   private[graft] def adoptStagedAppend(dir: String,
       staging: String): Int = {
@@ -1363,15 +1263,7 @@ object Versioned {
       require(latest(dir) >= 0,
         s"staged append: no committed versions in $dir — the initial " +
           "version must be a full commit")
-      val v = claimNext(dir)
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(dir, s"v$v"))
-      java.nio.file.Files.move(java.nio.file.Paths.get(staging),
-        java.nio.file.Paths.get(addPath(dir, v)),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      writeAddStats(dir, v, harvested)
-      seal(dir, v)
-      v
+      adoptStaged(dir, staging, delta = true, harvested)
     }
   }
 
@@ -1400,20 +1292,10 @@ object Versioned {
       val valid = s"$dir/.staging-valid-${java.util.UUID.randomUUID()}"
       batch.filter(ok).write.mode("overwrite").parquet(valid)
       val harvested = harvestAddStats(valid)
-      val v = withMutateClaim(dir) {
-        val v = claimNext(dir)
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(dir, s"v$v"))
-        java.nio.file.Files.move(java.nio.file.Paths.get(valid),
-          java.nio.file.Paths.get(addPath(dir, v)),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        writeAddStats(dir, v, harvested)
-        batch.filter(!ok).withColumn("violations", viol)
+      val v = adoptStaged(dir, valid, delta = true, harvested,
+        v => batch.filter(!ok).withColumn("violations", viol)
           .withColumn("commit_version", lit(v))
-          .write.mode("overwrite").parquet(quarantineDir(dir, v))
-        seal(dir, v)
-        v
-      }
+          .write.mode("overwrite").parquet(quarantineDir(dir, v)))
       rmTree(new java.io.File(staging))
       v
     }
@@ -1445,7 +1327,7 @@ object Versioned {
   // resolves through it, so reproducible reads ("the snapshot we trained
   // on") survive tip churn without anyone memorizing version numbers.
   // Tags live as one tiny file each under `_tags/` (value = the version
-  // number), swapped by write-temp + ATOMIC_MOVE so a reader never sees
+  // number), swapped by [[MetaFiles.writeAtomic]] so a reader never sees
   // a half-written pointer; re-tagging MOVES the name (last writer
   // wins — the Iceberg replace-tag semantic). Names must not look like
   // integers (those are plain version literals) and never collide with
@@ -1478,12 +1360,7 @@ object Versioned {
     require(materializedBaseAt(dir, v).isDefined,
       s"tag '$name': v$v has no readable chain base (vacuumed?)")
     java.nio.file.Files.createDirectories(tagsDir(dir))
-    val tmp = tagsDir(dir).resolve(s".$name.tmp-${java.util.UUID.randomUUID()}")
-    java.nio.file.Files.writeString(tmp, v.toString)
-    java.nio.file.Files.move(tmp, tagsDir(dir).resolve(name),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
+    MetaFiles.writeAtomic(tagsDir(dir).resolve(name), v.toString)
   }
 
   /** Drop tag `name` (releases its retention pin). Returns the version
@@ -1559,15 +1436,7 @@ object Versioned {
     // destination-claim-serialized (metadata-only, so the hold is
     // microseconds): a claim-free pointer seal racing a claim-holding
     // COW rewrite of the DESTINATION would be silently buried by it
-    withMutateClaim(dstDir) {
-      val v = claimNext(dstDir)
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(dstDir, s"v$v"))
-      java.nio.file.Files.writeString(clonePath(dstDir, v),
-        s"$srcCanon\n$srcV")
-      seal(dstDir, v)
-      v
-    }
+    commitMetaOnly(dstDir, clonePath, s"$srcCanon\n$srcV")
   }
 
   private def batchIdPath(dir: String, v: Int) =
@@ -1579,7 +1448,7 @@ object Versioned {
     * batch with the same id after a crash — the scan over committed
     * `_batchid` markers (metadata-scale: one tiny file per version) makes
     * the retry a no-op, so the sink is idempotent and the stream
-    * exactly-once end to end. A crash BETWEEN the data write and [[seal]]
+    * exactly-once end to end. A crash BETWEEN the data write and the seal
     * leaves an uncommitted claim hole whose marker [[latest]] ignores, so
     * the replay re-appends — at-least-once at the storage layer, exactly
     * once observably. On an empty table the first batch is the initial
@@ -1609,33 +1478,19 @@ object Versioned {
       val harvested = harvestAddStats(staging)
       withMutateClaim(dir) {
         if (seen()) { rmTree(new java.io.File(staging)); None }
-        else {
-          val v = claimNext(dir)
-          if (latest(dir) < 0)
-            java.nio.file.Files.move(java.nio.file.Paths.get(staging),
-              java.nio.file.Paths.get(dir, s"v$v"),
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          else {
-            java.nio.file.Files.createDirectories(
-              java.nio.file.Paths.get(dir, s"v$v"))
-            java.nio.file.Files.move(java.nio.file.Paths.get(staging),
-              java.nio.file.Paths.get(addPath(dir, v)),
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            writeAddStats(dir, v, harvested)
-          }
-          java.nio.file.Files.writeString(batchIdPath(dir, v),
-            batchId.toString)
-          // side-effects that must be REPLAY-REPAIRABLE run before the
-          // seal (the gated-ingest quarantine write into the version's
-          // own dir): a crash after the seal would make the replay
-          // short-circuit on the batch-id marker and never re-run them;
-          // a crash BEFORE it leaves an uncommitted hole whose dir —
-          // debris included — [[quarantine]] never reads and [[vacuum]]
-          // removes.
-          beforeSeal(v)
-          seal(dir, v)
-          Some(v)
-        }
+        else Some(adoptStaged(dir, staging, delta = latest(dir) >= 0,
+          harvested, { v =>
+            java.nio.file.Files.writeString(batchIdPath(dir, v),
+              batchId.toString)
+            // side-effects that must be REPLAY-REPAIRABLE run before the
+            // seal (the gated-ingest quarantine write into the version's
+            // own dir): a crash after the seal would make the replay
+            // short-circuit on the batch-id marker and never re-run them;
+            // a crash BEFORE it leaves an uncommitted hole whose dir —
+            // debris included — [[quarantine]] never reads and [[vacuum]]
+            // removes.
+            beforeSeal(v)
+          }))
       }
     }
   }
@@ -1694,17 +1549,10 @@ object Versioned {
     // sees the exception; the debris is invisible and vacuumed).
     val valid = s"$dir/.staging-expect-${java.util.UUID.randomUUID()}"
     df.filter(ok).write.mode("overwrite").parquet(valid)
-    withMutateClaim(dir) {
-      val v = claimNext(dir)
-      java.nio.file.Files.move(java.nio.file.Paths.get(valid),
-        java.nio.file.Paths.get(dir, s"v$v"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      df.filter(!ok).withColumn("violations", viol)
+    adoptStaged(dir, valid, delta = false, beforeSeal =
+      v => df.filter(!ok).withColumn("violations", viol)
         .withColumn("commit_version", lit(v))
-        .write.mode("overwrite").parquet(quarantineDir(dir, v))
-      seal(dir, v)
-      v
-    }
+        .write.mode("overwrite").parquet(quarantineDir(dir, v)))
   }
 
   /** Every quarantined row of the table's RETAINED COMMITTED history —
@@ -2252,12 +2100,7 @@ object Versioned {
     val cols = readAtDv(s, dir, tip).columns.toSet
     require(cols.contains(from), s"renameColumn: no column '$from' in $dir")
     require(!cols.contains(to), s"renameColumn: column '$to' already exists")
-    val v = claimNext(dir)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(dir, s"v$v"))
-    java.nio.file.Files.writeString(renamePath(dir, v), s"$from\t$to")
-    seal(dir, v)
-    v
+    commitMetaOnly(dir, renamePath, s"$from\t$to")
   }
 
   // ---- column-mapping drops (zero-copy, the RENAME machinery's twin) ------
@@ -2303,12 +2146,7 @@ object Versioned {
     require(cols.contains(name), s"dropColumn: no column '$name' in $dir")
     require((cols - name - "gpart").nonEmpty,
       s"dropColumn: '$name' is the last data column of $dir")
-    val v = claimNext(dir)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(dir, s"v$v"))
-    java.nio.file.Files.writeString(dropPath(dir, v), name)
-    seal(dir, v)
-    v
+    commitMetaOnly(dir, dropPath, name)
   }
 
   // ---- hidden partitioning (partition transforms) ------------------------

@@ -30,12 +30,6 @@ private[pipeline] object IndexStore {
     * exercise both sides of the gate without 30-minute sleeps.
     */
   private[pipeline] var sweepGraceMs: Long = 30L * 60 * 1000
-
-  /** Builder-claim staleness bound: a `_build._claim` older than this is
-    * treated as abandoned (crashed builder) and taken over. A var only so
-    * the takeover unit doesn't sleep 10 minutes.
-    */
-  private[pipeline] var claimTimeoutMs: Long = 10L * 60 * 1000
 }
 
 private[pipeline] final class IndexStore(envVar: String, defaultName: String,
@@ -91,138 +85,51 @@ private[pipeline] final class IndexStore(envVar: String, defaultName: String,
   private def markerPath(d: String) =
     java.nio.file.Paths.get(d, "_GRAFT_INDEX")
 
-  // ---- cross-process builder claim (the Versioned claim/seal posture) ----
+  // ---- cross-process builder claim ----------------------------------------
   //
   // The JVM `lock` above serializes same-process builders; two PROCESSES
   // sharing one artifact dir additionally serialize on `_build._claim`,
-  // created with `Files.createFile` (O_EXCL — atomic on POSIX filesystems
-  // and HDFS-style stores with atomic create-if-absent, exactly the
-  // `Versioned.claimNext` protocol). The winner builds and swaps the
-  // marker; a loser spins until the claim frees, then re-checks the marker
-  // — so concurrent `ensure()` calls from N processes build ONCE.
-  //
-  // Liveness without losing safety:
-  //  - the holder HEARTBEATS the claim (mtime touch every timeout/4) for
-  //    as long as its build runs, so a build longer than `claimTimeoutMs`
-  //    never looks abandoned — the timeout bounds crash detection, not
-  //    build duration;
-  //  - a crashed builder's orphan claim (no heartbeats) is taken over by
-  //    atomically RENAMING it aside (ATOMIC_MOVE — exactly one waiter's
-  //    rename succeeds; every other waiter's rename throws and re-loops),
-  //    then re-racing the O_EXCL create. A blind delete here would race:
-  //    two waiters that both judged the old claim stale could otherwise
-  //    have the second delete the first's FRESH claim, yielding two
-  //    concurrent holders.
+  // held through [[graft.MetaFiles.withClaim]] — the same held-claim
+  // protocol as a versioned table's `_mutate._claim` (owner token,
+  // heartbeat, verified stale takeover). The winner builds and swaps the
+  // marker; a loser waits until the claim frees, then re-checks the marker
+  // — so concurrent `ensure()` calls from N processes build ONCE. The
+  // heartbeat makes the staleness timeout bound crash detection, not
+  // build duration.
   //
   // Readers never touch the claim: they resolve the marker, which only
   // ever swaps atomically to a COMPLETE version, so a reader is never
   // blocked by (or exposed to) a build in progress.
 
-  private def claimPath(d: String) =
-    java.nio.file.Paths.get(d, "_build._claim")
+  private def withClaim[A](d: String)(body: => A): A =
+    graft.MetaFiles.withClaim(java.nio.file.Paths.get(d, "_build._claim"))(body)
 
-  /** Block until this process holds the exclusive builder claim on `d`,
-    * then run `body` while a daemon heartbeat keeps the claim visibly
-    * live; always releases.
+  /** The marker's `(fingerprint, version dir)`, if the marker exists and
+    * its version dir does. Marker format: `<fingerprint>\n<version>`.
     */
-  private def withClaim[A](d: String)(body: => A): A = {
-    import java.nio.file.Files
-    val p = claimPath(d)
-    // Owner token (same rationale as Versioned.withMutateClaim): after a
-    // stale-claim takeover the old holder may still be alive; its
-    // heartbeat must not refresh the new holder's claim and its release
-    // must not delete it, or a third builder could acquire while the
-    // second holds. Builds land in fresh immutable version dirs and the
-    // marker swap is atomic, so a doubled build is wasted work, never a
-    // correctness hazard — the token only has to stop cross-holder file
-    // touches.
-    val token =
-      s"${ProcessHandle.current().pid()}-${seq.incrementAndGet()}"
-    def ownsClaim(): Boolean =
-      try Files.readString(p).trim == token
-      catch { case _: Throwable => false }
-    while (!tryCreateClaim(p, token)) {
-      val stale =
-        try {
-          val age = System.currentTimeMillis() -
-            Files.getLastModifiedTime(p).toMillis
-          age > IndexStore.claimTimeoutMs
-        } catch { case _: Throwable => false } // vanished → just re-race
-      if (stale) {
-        // exclusive takeover: exactly one waiter wins the atomic rename
-        try {
-          val aside = p.resolveSibling(
-            s".claim-stale-${ProcessHandle.current().pid()}-${seq.incrementAndGet()}")
-          Files.move(p, aside, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          Files.deleteIfExists(aside); ()
-        } catch { case _: Throwable => () } // lost the rename race → re-loop
-      } else Thread.sleep(25)
-    }
-    // heartbeat: touch the claim so a long build never reads as abandoned
-    // — but only while it still carries OUR token (see above)
-    val beat = new Thread(() => {
-      try {
-        var owned = true
-        while (!Thread.interrupted() && owned) {
-          Thread.sleep(math.max(50L, IndexStore.claimTimeoutMs / 4))
-          if (ownsClaim())
-            Files.setLastModifiedTime(p,
-              java.nio.file.attribute.FileTime.fromMillis(
-                System.currentTimeMillis()))
-          else owned = false // taken over — never touch the new holder's file
-        }
-      } catch { case _: Throwable => () } // interrupt or deleted claim: stop
-    })
-    beat.setDaemon(true)
-    beat.start()
-    try body
-    finally {
-      beat.interrupt()
-      try { if (ownsClaim()) Files.deleteIfExists(p); () }
-      catch { case _: Throwable => () }
-    }
-  }
-
-  private def tryCreateClaim(p: java.nio.file.Path, token: String): Boolean =
-    try {
-      // CREATE_NEW keeps the O_EXCL create; the token rides in the same
-      // call so every holder can verify ownership before touching the file
-      java.nio.file.Files.write(p,
-        token.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE_NEW)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-    }
-
-  /** The complete version dir the marker points at, if its fingerprint
-    * matches the current source. Marker format: `<fingerprint>\n<version>`.
-    */
-  private def currentVersion(d: String, sfDir: String): Option[String] = {
+  private def marker(d: String): Option[(String, String)] = {
     val m = markerPath(d)
     if (!java.nio.file.Files.exists(m)) None
     else java.nio.file.Files.readString(m).split("\n", 2) match {
-      case Array(fp, v) if fp == fingerprint(sfDir) &&
-          java.nio.file.Files.exists(java.nio.file.Paths.get(d, v)) =>
-        Some(s"$d/$v")
+      case Array(fp, v)
+          if java.nio.file.Files.exists(java.nio.file.Paths.get(d, v)) =>
+        Some((fp, s"$d/$v"))
       case _ => None
     }
   }
+
+  /** The complete version dir the marker points at, if its fingerprint
+    * matches the current source.
+    */
+  private def currentVersion(d: String, sfDir: String): Option[String] =
+    marker(d).collect { case (fp, vd) if fp == fingerprint(sfDir) => vd }
 
   /** The version dir currently being served, regardless of freshness —
     * compaction reads the components it is about to rewrite from here.
     * None if no complete version exists.
     */
   def servedVersion(sfDir: String): Option[String] = lock.synchronized {
-    val d = dir(sfDir)
-    val m = markerPath(d)
-    if (!java.nio.file.Files.exists(m)) None
-    else java.nio.file.Files.readString(m).split("\n", 2) match {
-      case Array(_, v)
-          if java.nio.file.Files.exists(java.nio.file.Paths.get(d, v)) =>
-        Some(s"$d/$v")
-      case _ => None
-    }
+    marker(dir(sfDir)).map(_._2)
   }
 
   /** Build-if-absent: reuse a fresh index, rebuild a missing/stale one.
@@ -261,14 +168,20 @@ private[pipeline] final class IndexStore(envVar: String, defaultName: String,
 
   /** [[rebuild]] body — caller must hold the JVM lock AND the claim. */
   private def rebuildClaimed(sfDir: String)(build: String => Unit): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     val d = dir(sfDir)
-    Files.createDirectories(Paths.get(d))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
     // Fingerprint the source BEFORE building: if the source is regenerated
     // mid-build, the stale marker then mismatches on the next ensure() and
     // triggers a fresh rebuild — stamping the fingerprint afterwards would
     // instead certify an index built from data that no longer exists.
-    val fp = fingerprint(sfDir)
+    swapIn(d, fingerprint(sfDir), build)
+  }
+
+  /** Build a fresh immutable version dir, then point the marker at it
+    * (certified with fingerprint `fp`) and sweep superseded versions.
+    * Caller holds the JVM lock AND the claim.
+    */
+  private def swapIn(d: String, fp: String, build: String => Unit): String = {
     // Wall-clock-ordered names (epoch millis + per-JVM counter + pid) so
     // the sweep's lexicographic "newest first" holds across JVM restarts
     // and machines sharing storage — nanoTime has an arbitrary per-JVM
@@ -276,10 +189,7 @@ private[pipeline] final class IndexStore(envVar: String, defaultName: String,
     val v = f"v-${System.currentTimeMillis()}%015d-${seq.incrementAndGet()}%06d-${ProcessHandle.current().pid()}"
     val vd = s"$d/$v"
     build(vd)
-    val tmp = Paths.get(d, s".marker-$v")
-    Files.writeString(tmp, fp + "\n" + v)
-    Files.move(tmp, markerPath(d), StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
+    graft.MetaFiles.writeAtomic(markerPath(d), fp + "\n" + v)
     sweepOldVersions(d, keep = Set(v))
     vd
   }
@@ -292,23 +202,13 @@ private[pipeline] final class IndexStore(envVar: String, defaultName: String,
     */
   def rewriteVersion(sfDir: String)(build: String => Unit): String =
     lock.synchronized {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
       val d = dir(sfDir)
       withClaim(d) {
-        val m = markerPath(d)
         // the served-marker read happens UNDER the claim: a concurrent
         // mutator's swap either fully precedes (we inherit its version's
         // fingerprint) or fully follows this rewrite
-        val fp = java.nio.file.Files.readString(m).split("\n", 2)(0)
-        val v = f"v-${System.currentTimeMillis()}%015d-${seq.incrementAndGet()}%06d-${ProcessHandle.current().pid()}"
-        val vd = s"$d/$v"
-        build(vd)
-        val tmp = Paths.get(d, s".marker-$v")
-        Files.writeString(tmp, fp + "\n" + v)
-        Files.move(tmp, m, StandardCopyOption.REPLACE_EXISTING,
-          StandardCopyOption.ATOMIC_MOVE)
-        sweepOldVersions(d, keep = Set(v))
-        vd
+        val fp = java.nio.file.Files.readString(markerPath(d)).split("\n", 2)(0)
+        swapIn(d, fp, build)
       }
     }
 

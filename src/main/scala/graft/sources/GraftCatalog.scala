@@ -590,28 +590,23 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     val to = dirOf(newIdent)
     if (Versioned.latest(to) >= 0)
       throw new TableAlreadyExistsException(newIdent)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(to).getParent)
-    java.nio.file.Files.move(java.nio.file.Paths.get(from),
-      java.nio.file.Paths.get(to),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ()
+    graft.MetaFiles.moveAtomic(java.nio.file.Paths.get(from),
+      java.nio.file.Paths.get(to))
   }
 }
 
 private[graft] object GraftCatalog {
   /** One k=v sidecar file (sorted lines, deleted when empty) — shared by
     * the table `_props` and namespace `_namespace` property stores.
+    * Replaced atomically: an in-place rewrite truncates first, so a crash
+    * or a concurrent [[readKv]] mid-write would see an empty file.
     */
   private[sources] def writeKv(p: java.nio.file.Path,
       kv: Map[String, String]): Unit =
     if (kv.isEmpty) { java.nio.file.Files.deleteIfExists(p); () }
-    else {
-      java.nio.file.Files.writeString(p,
-        kv.toSeq.sorted.map { case (k, v) => s"$k=$v" }
-          .mkString("", "\n", "\n"))
-      ()
-    }
+    else graft.MetaFiles.writeAtomic(p,
+      kv.toSeq.sorted.map { case (k, v) => s"$k=$v" }
+        .mkString("", "\n", "\n"))
 
   private[sources] def readKv(
       p: java.nio.file.Path): Map[String, String] =

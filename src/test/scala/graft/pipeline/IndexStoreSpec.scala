@@ -1,15 +1,17 @@
 package graft.pipeline
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Cross-process safety of the shared artifact-index store: the O_EXCL
-  * builder claim (the `Versioned.claimNext` protocol, extended to the five
-  * persisted artifact families in round 11). Two `IndexStore` INSTANCES
+/** Cross-process safety of the held claim both persistent stores share
+  * ([[graft.MetaFiles.withClaim]]): the artifact index's `_build._claim`
+  * and a versioned table's `_mutate._claim`. Two `IndexStore` INSTANCES
   * here stand in for two JVMs: each instance has its own in-process lock
   * object, so the only thing serializing them is the `_build._claim` file
-  * — exactly the cross-process seam.
+  * — exactly the cross-process seam. The timeout/takeover/blocking tests
+  * run once per store.
   */
-class IndexStoreSpec extends AnyFunSuite {
+class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** A corpus dir with one source file, so fingerprinting has bytes. */
   private def freshCorpus(): String = {
@@ -86,78 +88,116 @@ class IndexStoreSpec extends AnyFunSuite {
       new java.io.File(served.get, "component.parquet").exists())
   }
 
-  test("heartbeat keeps a long build's claim live past the timeout — no mid-build takeover") {
-    val (a, b, _) = freshStore("heartbeat")
+  /** One claim-guarded store: `claim` is its claim file, `mutate(i, onHeld)`
+    * runs one mutation through writer `i`'s write path and calls `onHeld`
+    * while the claim is held.
+    */
+  private final class ClaimStore(val claim: java.nio.file.Path,
+      val mutate: (Int, () => Unit) => Unit)
+
+  /** The artifact index's `_build._claim`; writers alternate between two
+    * instances (two JVMs' worth of in-process locks).
+    */
+  private def indexStore(tag: String): ClaimStore = {
+    val (a, b, _) = freshStore(tag)
     val corpus = freshCorpus()
-    val old = IndexStore.claimTimeoutMs
-    IndexStore.claimTimeoutMs = 200 // build below runs 4x longer than this
-    try {
-      val builds = new java.util.concurrent.atomic.AtomicInteger()
-      val spans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-      def slowBuild(vd: String): Unit = {
-        val t0 = System.nanoTime()
-        builds.incrementAndGet()
-        Thread.sleep(800) // >> claimTimeoutMs: only the heartbeat keeps it
+    val d = java.nio.file.Paths.get(a.dir(corpus))
+    java.nio.file.Files.createDirectories(d)
+    new ClaimStore(d.resolve("_build._claim"), (i, onHeld) => {
+      (if (i % 2 == 0) a else b).rebuild(corpus) { vd =>
+        onHeld()
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(vd))
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(vd, "component.parquet"), "built")
-        spans.add((t0, System.nanoTime())); ()
       }
-      val t1 = new Thread(() => { a.rebuild(corpus)(slowBuild); () })
-      t1.start()
-      Thread.sleep(150) // let A win the claim and enter its long build
-      val t2 = new Thread(() => { b.rebuild(corpus)(slowBuild); () })
-      t2.start()
-      t1.join(30000); t2.join(30000)
-      import scala.jdk.CollectionConverters._
-      assert(builds.get() === 2)
-      val sorted = spans.asScala.toSeq.sortBy(_._1)
-      assert(sorted(0)._2 <= sorted(1)._1,
-        "the second builder took over a live (heartbeated) claim mid-build")
-    } finally IndexStore.claimTimeoutMs = old
-  }
-
-  test("orphan claim from a crashed builder is taken over after the timeout") {
-    val (a, _, _) = freshStore("takeover")
-    val corpus = freshCorpus()
-    val d = a.dir(corpus)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-    val orphan = java.nio.file.Paths.get(d, "_build._claim")
-    java.nio.file.Files.writeString(orphan, "dead-pid:0")
-    // age the claim past the (test-shrunk) timeout
-    val old = IndexStore.claimTimeoutMs
-    IndexStore.claimTimeoutMs = 200
-    try {
-      orphan.toFile.setLastModified(System.currentTimeMillis() - 1000)
-      val builds = new java.util.concurrent.atomic.AtomicInteger()
-      val spans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-      val vd = a.ensure(corpus)(doBuild(builds, spans))
-      assert(builds.get() === 1 && new java.io.File(vd).exists())
-    } finally IndexStore.claimTimeoutMs = old
-  }
-
-  test("a live claim blocks a second builder until released") {
-    val (a, _, _) = freshStore("block")
-    val corpus = freshCorpus()
-    val d = a.dir(corpus)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-    val claim = java.nio.file.Paths.get(d, "_build._claim")
-    java.nio.file.Files.writeString(claim, "holder")
-    val releaseAt = new java.util.concurrent.atomic.AtomicLong()
-    val releaser = new Thread(() => {
-      Thread.sleep(400)
-      releaseAt.set(System.nanoTime())
-      java.nio.file.Files.deleteIfExists(claim); ()
+      ()
     })
-    releaser.start()
-    val builds = new java.util.concurrent.atomic.AtomicInteger()
-    val spans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    val vd = a.ensure(corpus)(doBuild(builds, spans))
-    releaser.join()
-    import scala.jdk.CollectionConverters._
-    val (start, _) = spans.asScala.head
-    assert(start >= releaseAt.get(),
-      "the build must not start while another process holds the claim")
-    assert(builds.get() === 1 && new java.io.File(vd).exists())
+  }
+
+  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
+    .master("local[2]")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  override def afterAll(): Unit = spark.stop()
+
+  /** A versioned table's `_mutate._claim`, taken by `Versioned.commit`
+    * (re-entrantly inside the outer hold that runs `onHeld`).
+    */
+  private def lakeStore(): ClaimStore = {
+    val s = spark // start the session before any test shrinks the timeout
+    val dir = java.nio.file.Files.createTempDirectory("claim-lake").toString
+    new ClaimStore(java.nio.file.Paths.get(dir, "_mutate._claim"), (_, onHeld) =>
+      graft.operators.Versioned.withMutateClaim(dir) {
+        onHeld()
+        graft.operators.Versioned.commit(s.range(3).toDF(), dir)
+        ()
+      })
+  }
+
+  /** Runs `body` with the one claim staleness timeout shrunk to `ms`. */
+  private def withTimeout(ms: Long)(body: => Unit): Unit = {
+    val old = graft.MetaFiles.claimTimeoutMs
+    graft.MetaFiles.claimTimeoutMs = ms
+    try body finally graft.MetaFiles.claimTimeoutMs = old
+  }
+
+  private val stores: Seq[(String, String => ClaimStore)] = Seq(
+    "" -> (tag => indexStore(tag)),
+    " — versioned table" -> (_ => lakeStore()))
+
+  for ((suffix, mk) <- stores) {
+    test("heartbeat keeps a long build's claim live past the timeout — no mid-build takeover" + suffix) {
+      val st = mk("heartbeat")
+      withTimeout(200) { // the first hold below runs 4x longer than this
+        val spans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+        def held(sleepMs: Long)(): Unit = {
+          val t0 = System.nanoTime()
+          Thread.sleep(sleepMs) // >> timeout: only the heartbeat keeps it
+          spans.add((t0, System.nanoTime())); ()
+        }
+        val t1 = new Thread(() => st.mutate(0, held(800)))
+        t1.start()
+        Thread.sleep(150) // let writer 0 win the claim and enter its hold
+        val t2 = new Thread(() => st.mutate(1, held(10)))
+        t2.start()
+        t1.join(30000); t2.join(30000)
+        import scala.jdk.CollectionConverters._
+        assert(spans.size === 2)
+        val sorted = spans.asScala.toSeq.sortBy(_._1)
+        assert(sorted(0)._2 <= sorted(1)._1,
+          "the second writer took over a live (heartbeated) claim mid-hold")
+      }
+    }
+
+    test("orphan claim from a crashed builder is taken over after the timeout" + suffix) {
+      val st = mk("takeover")
+      java.nio.file.Files.writeString(st.claim, "dead-pid:0")
+      withTimeout(200) {
+        // age the claim past the (test-shrunk) timeout
+        st.claim.toFile.setLastModified(System.currentTimeMillis() - 1000)
+        val ran = new java.util.concurrent.atomic.AtomicInteger()
+        st.mutate(0, () => { ran.incrementAndGet(); () })
+        assert(ran.get() === 1)
+        assert(!st.claim.toFile.exists(), "the taker must release the claim")
+      }
+    }
+
+    test("a live claim blocks a second builder until released" + suffix) {
+      val st = mk("block")
+      java.nio.file.Files.writeString(st.claim, "holder")
+      val releaseAt = new java.util.concurrent.atomic.AtomicLong()
+      val releaser = new Thread(() => {
+        Thread.sleep(400)
+        releaseAt.set(System.nanoTime())
+        java.nio.file.Files.deleteIfExists(st.claim); ()
+      })
+      releaser.start()
+      val start = new java.util.concurrent.atomic.AtomicLong()
+      st.mutate(0, () => { start.set(System.nanoTime()); () })
+      releaser.join()
+      assert(start.get() >= releaseAt.get(),
+        "the mutation must not start while another process holds the claim")
+    }
   }
 }
