@@ -69,13 +69,22 @@ object TextHashes {
     */
   def simHashMd5(c: Column): Column = column(SimHashMd5(expression(c)))
 
-  /** k-perm MinHash signature over md5(shingle ++ "|" ++ perm) — the
+  /** k-perm MinHash signature over the 60-bit md5 hashes of the shingles,
+    * permuted by XOR with md5-derived constants ([[Md5Hash60]]) — the
     * cross-engine twin of [[minHashSig]] (same min-over-permuted-hashes
     * semantics, md5 instead of Spark-private xxhash64). Input is the STRING
     * shingle array; 60-bit hashes as in [[simHashMd5]].
     */
   def minHashSigMd5(c: Column, k: Int = 8): Column =
     column(MinHashSigMd5(expression(c), k))
+
+  /** [[minHashSigMd5]] from the shingles' 60-bit hashes (the
+    * [[md5Hash60Array]] of the same shingle array) instead of the strings:
+    * bit-identical output with no second digest per shingle, for callers
+    * that keep the hashed set anyway (the LSH verify needs it).
+    */
+  def minHashSigMd5Hashed(hv: Column, k: Int = 8): Column =
+    column(MinHashSigMd5Hashed(expression(hv), k))
 
   /** Jaccard similarity of two distinct-long-element arrays in one pass
     * (sort + merge count) — replaces array_intersect + array_union, which
@@ -313,13 +322,7 @@ case class SimHashMd5(child: Expression)
     val words = text.split("\\s+")
     var i = 0
     while (i < words.length) {
-      md.reset()
-      val digest = md.digest(words(i).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // first 15 hex chars = the high 60 bits of the first 8 digest bytes
-      var h = 0L
-      var j = 0
-      while (j < 8) { h = (h << 8) | (digest(j) & 0xffL); j += 1 }
-      h = h >>> 4 // drop the 16th hex char: 64 -> 60 bits, always positive
+      val h = Md5Hash60(md, words(i))
       var b = 0
       while (b < 60) {
         if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
@@ -337,13 +340,16 @@ case class SimHashMd5(child: Expression)
     copy(child = c)
 }
 
-case class MinHashSigMd5(child: Expression, k: Int)
-    extends UnaryExpression with CodegenFallback {
-  require(k >= 1, s"signature size must be >= 1, got $k")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig_md5"
-
-  private def hash60(md: java.security.MessageDigest, s: String): Long = {
+/** The 60-bit md5 bridge and the md5 MinHash built on it, in ONE place.
+  * `hash60(s)` is the first 15 hex chars of md5(s) as a positive long —
+  * the value DuckDB gets from `('0x' || substr(md5(s), 1, 15))::BIGINT`.
+  * The md5 MinHash permutes that 60-bit space by XOR with one md5-derived
+  * constant per permutation, c_p = hash60("perm|p"): a bijection, exact in
+  * both engines (no overflow, stays positive), so sig(p) = min_j(hv_j ^ c_p)
+  * needs one digest per shingle, not k.
+  */
+private[graft] object Md5Hash60 {
+  def apply(md: java.security.MessageDigest, s: String): Long = {
     md.reset()
     val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     var h = 0L
@@ -352,38 +358,73 @@ case class MinHashSigMd5(child: Expression, k: Int)
     h >>> 4 // first 15 hex chars, always positive
   }
 
-  // One 60-bit constant per permutation, md5-derived so DuckDB reproduces
-  // them: c_p = hash60(md5("perm|p")). Computed once per expression
-  // instance, not per row.
-  private lazy val permConsts: Array[Long] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    Array.tabulate(k)(p => hash60(md, "perm|" + (p + 1)))
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    // ONE digest per shingle (round-2 did k×|shingles| digests — 4× the
-    // next-slowest query at sf0.1); the k permutations are XOR bijections
-    // on the 60-bit space, exact in both engines (no overflow, stays
-    // positive).
-    val arr = input.asInstanceOf[ArrayData]
+  /** Element-wise hash of a string array. SQL-exposed callers may pass a
+    * null ELEMENT, which must not NPE the task: it hashes as the empty
+    * string (internal callers never produce null elements).
+    */
+  def ofArray(arr: ArrayData): Array[Long] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val n = arr.numElements()
-    val hs = new Array[Long](n)
+    val out = new Array[Long](n)
     var i = 0
-    while (i < n) { hs(i) = hash60(md, arr.getUTF8String(i).toString); i += 1 }
-    val sig = new Array[Long](k)
+    while (i < n) {
+      val s = arr.getUTF8String(i)
+      out(i) = apply(md, if (s == null) "" else s.toString)
+      i += 1
+    }
+    out
+  }
+
+  /** c_1..c_k; callers compute them once per expression instance. */
+  def permConsts(k: Int): Array[Long] = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    Array.tabulate(k)(p => apply(md, "perm|" + (p + 1)))
+  }
+
+  /** sig(p) = min_j(hs_j ^ c_p); an empty set gives Long.MaxValue rows. */
+  def xorMinSig(hs: Array[Long], consts: Array[Long]): GenericArrayData = {
+    val sig = new Array[Long](consts.length)
     var p = 0
-    while (p < k) {
-      val c = permConsts(p)
+    while (p < consts.length) {
+      val c = consts(p)
       var m = Long.MaxValue
       var j = 0
-      while (j < n) { val v = hs(j) ^ c; if (v < m) m = v; j += 1 }
+      while (j < hs.length) { val v = hs(j) ^ c; if (v < m) m = v; j += 1 }
       sig(p) = m; p += 1
     }
     new GenericArrayData(sig)
   }
+}
+
+case class MinHashSigMd5(child: Expression, k: Int)
+    extends UnaryExpression with CodegenFallback {
+  require(k >= 1, s"signature size must be >= 1, got $k")
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "minhash_sig_md5"
+
+  @transient private lazy val permConsts = Md5Hash60.permConsts(k)
+
+  override def nullSafeEval(input: Any): Any =
+    Md5Hash60.xorMinSig(Md5Hash60.ofArray(input.asInstanceOf[ArrayData]),
+      permConsts)
 
   override protected def withNewChildInternal(c: Expression): MinHashSigMd5 =
+    copy(child = c)
+}
+
+/** [[MinHashSigMd5]] over the already-hashed shingle set (`hv`). */
+case class MinHashSigMd5Hashed(child: Expression, k: Int)
+    extends UnaryExpression with CodegenFallback {
+  require(k >= 1, s"signature size must be >= 1, got $k")
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "minhash_sig_md5_hashed"
+
+  @transient private lazy val permConsts = Md5Hash60.permConsts(k)
+
+  override def nullSafeEval(input: Any): Any =
+    Md5Hash60.xorMinSig(input.asInstanceOf[ArrayData].toLongArray(), permConsts)
+
+  override protected def withNewChildInternal(c: Expression): MinHashSigMd5Hashed =
     copy(child = c)
 }
 
@@ -489,28 +530,8 @@ case class Md5Hash60Array(child: Expression)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "md5_hash60_array"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val n = arr.numElements()
-    val out = new Array[Long](n)
-    var i = 0
-    while (i < n) {
-      val s = arr.getUTF8String(i)
-      // SQL-exposed: a null ELEMENT must not NPE the task — hash it as the
-      // empty string (internal callers never produce null elements)
-      val bytes = if (s == null) Array.emptyByteArray
-        else s.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      md.reset()
-      val d = md.digest(bytes)
-      var h = 0L
-      var j = 0
-      while (j < 8) { h = (h << 8) | (d(j) & 0xffL); j += 1 }
-      out(i) = h >>> 4 // first 15 hex chars, always positive
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    new GenericArrayData(Md5Hash60.ofArray(input.asInstanceOf[ArrayData]))
 
   override protected def withNewChildInternal(c: Expression): Md5Hash60Array =
     copy(child = c)
@@ -523,15 +544,6 @@ case class WordChunksMd5(child: Expression, avgBits: Int)
   override def prettyName: String = "word_chunks_md5"
 
   private val mask = (1L << avgBits) - 1
-
-  private def hash60(md: java.security.MessageDigest, s: String): Long = {
-    md.reset()
-    val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var h = 0L
-    var j = 0
-    while (j < 8) { h = (h << 8) | (d(j) & 0xffL); j += 1 }
-    h >>> 4 // first 15 hex chars, always positive
-  }
 
   private def hex15(md: java.security.MessageDigest, s: String): UTF8String = {
     md.reset()
@@ -569,7 +581,7 @@ case class WordChunksMd5(child: Expression, avgBits: Int)
     }
     var i = 1
     while (i < toks.length) {
-      if ((hash60(md, toks(i - 1) + " " + toks(i)) & mask) == 0L) close(i + 1)
+      if ((Md5Hash60(md, toks(i - 1) + " " + toks(i)) & mask) == 0L) close(i + 1)
       i += 1
     }
     if (start < toks.length) close(toks.length)

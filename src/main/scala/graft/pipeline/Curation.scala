@@ -28,9 +28,13 @@ import org.apache.spark.sql.functions._
   * Scale shape (100 TB): stages 1–2 and 5 are per-row expressions — no
   * shuffle, applied BEFORE anything wide so the expensive stages see only
   * survivors. Stage 3 is one hash-shuffle on a 128-bit key with map-side
-  * combine. Stage 4 is the banded-LSH pipeline (one exchange on the small
-  * band key, candidates ~n·bands — never n²) plus a half-width anti-join on
-  * doc_id. Total: three narrow shuffles over ever-shrinking survivor sets.
+  * combine. Stage 4 materializes the stage-3 survivors ONCE, together with
+  * their shingle hashes and signature (one md5 per shingle): that job is
+  * the only one that reads the input and runs the gates and the stage-3
+  * shuffle. The banded-LSH pipeline (one exchange on the small band key,
+  * candidates ~n·bands — never n²) and the half-width anti-join on doc_id
+  * both read the materialization. Total: three narrow shuffles over
+  * ever-shrinking survivor sets, each run once.
   *
   * Near-dup drop rule: "larger id of any verified pair" is the greedy
   * first-seen-wins rule (Lee et al.-style). On a pair chain a–b, b–c it can
@@ -80,8 +84,18 @@ object Curation {
         col("r.text"))
 
   /** Stage 4: drop the larger id of every LSH-verified near-dup pair among
-    * the survivors. The anti-join key is the bare doc_id — document text
-    * never rides this exchange.
+    * the survivors. Returns `docs`' columns (which must not include
+    * `hv`/`sig`). The anti-join key is the bare doc_id — document text never
+    * rides this exchange.
+    *
+    * Without `precomputedPairs` the pairs are derived in-query, with
+    * [[Dedup.nearDuplicatePairsMd5]]'s signature, banding and verify code
+    * ([[DedupIndex.withSignatures]] → [[DedupIndex.signedComponents]] →
+    * [[DedupIndex.selfPairs]]): `docs` is checkpointed ONCE together with
+    * its `hv`/`sig` columns, and that one materialization serves the
+    * components and the anti-join's left side. Left lazy, `docs` would be
+    * re-derived per consumer — its whole upstream (scan, gates, exact
+    * shuffle) run twice.
     *
     * `precomputedPairs` (the persisted [[DedupIndex]] pair table) skips the
     * in-query LSH derivation: near-dup pairs among a SUBSET of the corpus
@@ -89,28 +103,37 @@ object Curation {
     * keys and Jaccard are per-document/per-pair facts), so two semi-joins
     * on bare ids replace the whole shingle→signature→band→verify pipeline —
     * at 100 TB, the difference between an id-join job and a corpus re-scan.
+    * This branch leaves `docs` as given: the caller materializes it if it
+    * has more consumers ([[curate]] does).
     */
   def stageNear(docs: DataFrame, precomputedPairs: Option[DataFrame] = None):
       DataFrame = {
-    val pairs = precomputedPairs match {
+    def dropLarger(from: DataFrame, pairs: DataFrame): DataFrame =
+      from.join(pairs.select(col("doc_b").as("doc_id")).distinct(),
+        Seq("doc_id"), "left_anti")
+    precomputedPairs match {
       case Some(p) =>
         val ids = docs.select(col("doc_id"))
-        p.join(ids.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
-          .join(ids.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
-      case None => Dedup.nearDuplicatePairsMd5(docs, "text", "doc_id")
+        dropLarger(docs,
+          p.join(ids.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
+            .join(ids.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi"))
+      case None =>
+        val signed = graft.Ckpt(DedupIndex.withSignatures(docs, "text"))
+        dropLarger(signed,
+          DedupIndex.selfPairs(DedupIndex.signedComponents(signed, "doc_id")))
+          .drop("hv", "sig")
     }
-    docs.join(pairs.select(col("doc_b").as("doc_id")).distinct(),
-      Seq("doc_id"), "left_anti")
   }
 
   /** Stage 5: reproducible hash-bucket sample (see [[Sampling.hashBucket]]). */
   def stageSample(docs: DataFrame, pct: Int = 50): DataFrame =
     docs.filter(Sampling.hashBucket(col("doc_id")) < pct)
 
-  /** The full chain; emits the curated (doc_id, lang, source). With
-    * `precomputedPairs` the survivor set feeds three id-joins (two semi,
-    * one anti), so it is checkpointed once instead of re-deriving the
-    * gate+exact chain per consumer.
+  /** The full chain; emits the curated (doc_id, lang, source). Either way
+    * the stage-3 survivors are materialized once, so the input is read and
+    * the gate+exact chain runs once per call: without `precomputedPairs`
+    * [[stageNear]] checkpoints them with their signatures; with it they feed
+    * three id-joins (two semi, one anti) and are checkpointed here.
     */
   def curate(docs: DataFrame,
       precomputedPairs: Option[DataFrame] = None): DataFrame = {

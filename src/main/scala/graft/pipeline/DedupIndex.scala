@@ -37,19 +37,34 @@ object DedupIndex {
   /** The two index components for one corpus, as DataFrames. */
   case class Components(sigs: DataFrame, buckets: DataFrame)
 
-  /** Per-document signature rows (doc, hv, sig): md5-60bit hashed distinct
-    * shingle set (`hv`, for the exact-Jaccard verify) and k-perm MinHash
-    * signature (`sig`, for banding). Documents with no shingles (shorter
-    * than the shingle width) have no signature and can never near-dup —
-    * they are excluded, matching batch LSH.
+  /** `df` plus two columns, the signature pass in ONE place: `hv`, the
+    * md5-60bit hashed distinct shingle set of `textCol` (for the
+    * exact-Jaccard verify), and `sig`, the k-perm md5 MinHash signature
+    * (for banding) DERIVED from `hv` — one digest per shingle, bit-identical
+    * to `minhash_sig_md5` over the shingle strings. A row with no shingle
+    * (text shorter than the shingle width) gets an empty `hv` and a
+    * meaningless `sig`; every consumer drops it first ([[signatures]],
+    * [[signedComponents]]), since it can never near-dup. `df` must not
+    * already carry `hv`/`sig` columns.
+    */
+  private[graft] def withSignatures(df: DataFrame, textCol: String,
+      k: Int = 8): DataFrame = {
+    import graft.functions.TextHashes.{md5Hash60Array, minHashSigMd5Hashed, shingleStrings}
+    df.withColumn("hv", md5Hash60Array(shingleStrings(col(textCol))))
+      .withColumn("sig", minHashSigMd5Hashed(col("hv"), k))
+  }
+
+  /** Per-document signature rows (doc, hv, sig) of [[withSignatures]].
+    * Shingle-less documents are filtered out BEFORE hashing: a filter on
+    * `hv` itself would be pushed below the projection that computes it and
+    * digest every shingle twice.
     */
   def signatures(docs: DataFrame, textCol: String, idCol: String,
       k: Int = 8): DataFrame = {
-    import graft.functions.TextHashes.{md5Hash60Array, minHashSigMd5, shingleStrings}
-    docs.select(col(idCol).as("doc"), shingleStrings(col(textCol)).as("shs"))
-      .filter(size(col("shs")) > 0)
-      .select(col("doc"), md5Hash60Array(col("shs")).as("hv"),
-        minHashSigMd5(col("shs"), k).as("sig"))
+    import graft.functions.TextHashes.shingleStrings
+    withSignatures(docs.select(col(idCol).as("doc"), col(textCol).as("text"))
+        .filter(size(shingleStrings(col("text"))) > 0), "text", k)
+      .select("doc", "hv", "sig")
   }
 
   /** The band-key format, in ONE place: `bands` ','-joined slices of a
@@ -84,6 +99,19 @@ object DedupIndex {
   def components(docs: DataFrame, textCol: String, idCol: String,
       k: Int = 8, bands: Int = 4): Components = {
     val s = graft.Ckpt(signatures(docs, textCol, idCol, k))
+    Components(s, banded(s, k, bands))
+  }
+
+  /** Components over rows that already carry [[withSignatures]]' columns —
+    * for a caller that materializes its documents WITH their signatures
+    * once and reads that one frame for both the index and its own rows
+    * ([[Curation.stageNear]]). `signed` should be materialized: the
+    * components reference it up to four times.
+    */
+  private[graft] def signedComponents(signed: DataFrame, idCol: String,
+      k: Int = 8, bands: Int = 4): Components = {
+    val s = signed.filter(size(col("hv")) > 0)
+      .select(col(idCol).as("doc"), col("hv"), col("sig"))
     Components(s, banded(s, k, bands))
   }
 

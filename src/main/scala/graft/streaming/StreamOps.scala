@@ -169,16 +169,14 @@ object StreamOps {
       textCol: String = "text", idCol: String = "doc_id",
       tsCol: String = "ts", k: Int = 8,
       bands: Int = 4, threshold: Double = 0.5): DataFrame = {
-    import graft.functions.TextHashes.{jaccardLong, md5Hash60Array, minHashSigMd5, shingleStrings}
-    docs
-      .withWatermark(tsCol, "10 minutes")
-      .withColumn("__shs", shingleStrings(col(textCol)))
-      .filter(size(col("__shs")) > 0)
-      .select(col(idCol).as("doc_new"), col(tsCol),
-        md5Hash60Array(col("__shs")).as("hv_b"),
-        minHashSigMd5(col("__shs"), k).as("__sig"))
-      .select(col("doc_new"), col(tsCol), col("hv_b"),
-        posexplode(graft.pipeline.DedupIndex.bandKeys(col("__sig"), k, bands))
+    import graft.functions.TextHashes.{jaccardLong, shingleStrings}
+    import graft.pipeline.DedupIndex
+    // shingle-less docs are dropped before hashing (see DedupIndex.signatures)
+    DedupIndex.withSignatures(docs
+        .withWatermark(tsCol, "10 minutes")
+        .filter(size(shingleStrings(col(textCol))) > 0), textCol, k)
+      .select(col(idCol).as("doc_new"), col(tsCol), col("hv").as("hv_b"),
+        posexplode(DedupIndex.bandKeys(col("sig"), k, bands))
           .as(Seq("band", "bsig")))
       .join(corpus.buckets
         .select(col("band"), col("bsig"), col("doc").as("doc_corpus")),
@@ -555,7 +553,7 @@ object StreamOps {
       minTokens: Int = 5, minUniqRatio: Double = 0.3,
       k: Int = 8, bands: Int = 4, threshold: Double = 0.5,
       tsCol: String = "ts", windowLen: String = "10 minutes"): DataFrame = {
-    import graft.functions.TextHashes.{jaccardLong, md5Hash60Array, minHashSigMd5, shingleStrings}
+    import graft.functions.TextHashes.jaccardLong
     import graft.pipeline.{Bpe, Dedup, DedupIndex, TextAnalysis}
     val toks = split(Dedup.normText(col("text")), " ")
     val gated = docs.withWatermark(tsCol, "10 minutes")
@@ -599,12 +597,10 @@ object StreamOps {
       .select(col("window"), col("doc_id"), col("text"),
         col("t.lang").as("lang_pred"), col("t.s_u").as("score_u"),
         col("t.ntok").as("n_tokens_bpe"), col("t.tmd5").as("tokens_md5"))
-    val shingled = classified
-      .withColumn("__shs", shingleStrings(col("text")))
-      .withColumn("hv_b",
-        when(size(col("__shs")) > 0, md5Hash60Array(col("__shs"))))
-      .withColumn("__sig",
-        when(size(col("__shs")) > 0, minHashSigMd5(col("__shs"), k)))
+    // a shingle-less doc keeps its row, with null hv_b/__sig (no bands)
+    val shingled = DedupIndex.withSignatures(classified, "text", k)
+      .withColumn("hv_b", when(size(col("hv")) > 0, col("hv")))
+      .withColumn("__sig", when(size(col("hv")) > 0, col("sig")))
       .select(col("window"), col("doc_id"), col("lang_pred"), col("score_u"),
         col("n_tokens_bpe"), col("tokens_md5"), col("hv_b"),
         posexplode_outer(when(col("__sig").isNotNull,

@@ -170,6 +170,47 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
         operators.Layout.zValueScalar((1L << 31) - 1, (1L << 31) - 1) })
   }
 
+  test("md5 MinHash: sig derived from the shingle hashes ≡ minhash_sig_md5 over the strings, both ≡ the md5 reference") {
+    import spark.implicits._
+    import functions.TextHashes.{md5Hash60Array, minHashSigMd5, minHashSigMd5Hashed}
+    // the cross-engine definition, spelled independently of the library:
+    // hash60(s) = first 15 hex chars of md5(s); c_p = hash60("perm|p");
+    // sig(p) = min over the set of hash60(shingle) XOR c_p
+    def hash60(s: String): Long = java.lang.Long.parseLong(
+      java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString.take(15), 16)
+    def reference(shs: Seq[String], k: Int): Seq[Long] =
+      (1 to k).map { p =>
+        val c = hash60(s"perm|$p")
+        shs.map(hash60(_) ^ c).foldLeft(Long.MaxValue)(math.min)
+      }
+    val rnd = new scala.util.Random(11L)
+    val words = IndexedSeq("the", "fox", "über", "naïve", "日本", "a", "", "z9")
+    val sets: Seq[Seq[String]] = Seq(Seq.empty, Seq("only one shingle")) ++
+      Seq.fill(60)(Seq.fill(rnd.nextInt(40))(
+        Seq.fill(3)(words(rnd.nextInt(words.size))).mkString(" ")).distinct)
+    for (k <- Seq(1, 8, 16)) {
+      val got = sets.toDF("shs")
+        .select(col("shs"), minHashSigMd5(col("shs"), k).as("a"),
+          minHashSigMd5Hashed(md5Hash60Array(col("shs")), k).as("b"))
+        .collect()
+      assert(got.length === sets.size)
+      got.foreach { r =>
+        val want = reference(r.getSeq[String](0), k)
+        assert(r.getSeq[Long](1) === want, s"k=$k ${r.getSeq[String](0)}")
+        assert(r.getSeq[Long](2) === want, s"k=$k ${r.getSeq[String](0)}")
+      }
+    }
+    // the SQL surface returns the same values
+    val sql = spark.sql(
+      """SELECT minhash_sig_md5(array('the quick fox', 'quick fox jumps')) AS d,
+        |  minhash_sig_md5(array('only one shingle'), 3) AS one,
+        |  minhash_sig_md5(array()) AS empty""".stripMargin).head()
+    assert(sql.getSeq[Long](0) === reference(Seq("the quick fox", "quick fox jumps"), 8))
+    assert(sql.getSeq[Long](1) === reference(Seq("only one shingle"), 3))
+    assert(sql.getSeq[Long](2) === Seq.fill(8)(Long.MaxValue))
+  }
+
   test("GraftExtensions: native expressions callable from SQL") {
     Tables.documents(spark, sf).createOrReplaceTempView("docs_ext")
     val r = spark.sql(

@@ -1237,6 +1237,86 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(kept === expected, s"kept $kept, expected $expected")
   }
 
+  /** A seeded crawl-like corpus of `n` docs (doc_id, lang, source, text):
+    * ~8% German, ~5% repetitive, ~8% exact duplicates (case and spacing
+    * changed) and ~12% one-word-edit near duplicates of earlier docs; the
+    * rest is fresh English-like text over a 400-word vocabulary.
+    */
+  private def plantedCorpus(n: Int, seed: Long): Seq[(Long, String, String, String)] = {
+    val rnd = new scala.util.Random(seed)
+    val vocab = IndexedSeq.tabulate(400)(i => s"w$i")
+    val stop = IndexedSeq("the", "a", "of", "and", "to", "in", "is", "it", "on", "for")
+    val de = IndexedSeq("der", "die", "das", "und", "ist", "nicht", "ein", "mit", "zu", "auf")
+    def pick(ws: IndexedSeq[String]) = ws(rnd.nextInt(ws.size))
+    val texts = scala.collection.mutable.ArrayBuffer.empty[String]
+    (0 until n).map { i =>
+      val r = rnd.nextInt(100)
+      val text =
+        if (r < 8) Seq.fill(20)(pick(de)).mkString(" ")
+        else if (r < 13) "the " + Seq.fill(12)("spam").mkString(" ") + " " + pick(vocab)
+        else if (r < 21 && texts.nonEmpty)
+          texts(rnd.nextInt(texts.size)).toUpperCase + "   "
+        else if (r < 33 && texts.nonEmpty) {
+          val ws = texts(rnd.nextInt(texts.size)).split(" ")
+          ws(rnd.nextInt(ws.length)) = pick(vocab)
+          ws.mkString(" ")
+        } else Seq.fill(25 + rnd.nextInt(15))(
+          if (rnd.nextInt(3) == 0) pick(stop) else pick(vocab)).mkString(" ")
+      texts += text
+      (i.toLong, "en", s"src${i % 4}", text)
+    }
+  }
+
+  /** The planted corpus as a parquet file source (several part files). */
+  private lazy val plantedDocs = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-curate").toString
+    plantedCorpus(2000, 7L).toDF("doc_id", "lang", "source", "text")
+      .repartition(4).write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("curation: in-query near-dup stage ≡ curation over the md5 pair oracle of the stage-3 survivors") {
+    val docs = plantedDocs
+    val survivors = Curation.stageExact(
+      Curation.stageQuality(Curation.stageLang(docs)))
+    val pairs = Dedup.nearDuplicatePairsMd5(survivors, "text", "doc_id")
+    assert(pairs.count() > 100, "the corpus must plant verified near-dup pairs")
+    def hashCount(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+      val r = df.agg(bit_xor(xxhash64(col("doc_id"), col("lang"), col("source"))),
+        count(lit(1))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    val inQuery = Curation.curate(docs)
+    val oracle = Curation.curate(docs, Some(pairs))
+    assert(hashCount(inQuery) === hashCount(oracle))
+    assert(inQuery.collect().toSet === oracle.collect().toSet)
+    // the stage really drops docs, and keeps stageNear's column contract
+    val near = Curation.stageNear(survivors)
+    assert(near.columns.toSeq === survivors.columns.toSeq)
+    assert(near.count() < survivors.count())
+  }
+
+  test("curation reads its input once: file-scan records read = corpus rows") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    val docs = plantedDocs
+    val rows = docs.count()
+    // Spark also counts a task's reads of cached/checkpointed blocks as
+    // input records, so only the stages that scan the files are summed
+    val scanned = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          scanned.addAndGet(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Curation.curate(docs).collect()
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(scanned.get === rows)
+  }
+
   test("bpe: greedy merges learn the planted pair; segmentation partitions every word") {
     import spark.implicits._
     // corpus dominated by 'abab': the most frequent pair is (a, b) -> "ab",
