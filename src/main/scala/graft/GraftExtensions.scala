@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{ContentChunks, CosineLshBucket, CosineSim, DotProduct, JaccardLong, Md5Hash60Array, MinHashSig, MinHashSigMd5, ShingleHashes, ShingleStrings, SimHash64, SimHashMd5, SpanMd5Hashes, Sq8AsymSim, WordChunksMd5}
+import graft.functions.{ContentChunks, CosineLshBucket, CosineSim, DotProduct, JaccardLong, Md5Hash60Array, MinHashSigMd5, ShingleStrings, SimHashMd5, SpanMd5Hashes, Sq8AsymSim, WordChunksMd5}
 
 /** SparkSessionExtensions registration (SURVEY.md §4.2 / the custom-operator
   * ladder): exposes the native dedup expressions to SQL, so
-  * `spark.sql("SELECT simhash64(text) FROM docs")` works next to the Column
+  * `spark.sql("SELECT simhash_md5(text) FROM docs")` works next to the Column
   * API.
   *
   * Usage:
@@ -32,20 +32,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // `experimental.extraOptimizations` ("User Provided Optimizers",
     // post-pushdown) in GraftCatalog.initialize — which every session
     // that can see a catalog table necessarily runs.
-    ext.injectFunction((FunctionIdentifier("shingle_hashes"),
-      info("shingle_hashes", "_FUNC_(text[, n]) - distinct hashed n-word shingles"),
-      (args: Seq[Expression]) => args match {
-        case Seq(c) => ShingleHashes(c, 3)
-        case Seq(c, n) => ShingleHashes(c, n.eval().asInstanceOf[Int])
-        case _ => throw new IllegalArgumentException("shingle_hashes(text[, n])")
-      }))
-    ext.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("minhash_sig", "_FUNC_(hashes[, k]) - k-permutation MinHash signature"),
-      (args: Seq[Expression]) => args match {
-        case Seq(c) => MinHashSig(c, 16)
-        case Seq(c, k) => MinHashSig(c, k.eval().asInstanceOf[Int])
-        case _ => throw new IllegalArgumentException("minhash_sig(hashes[, k])")
-      }))
     ext.injectFunction((FunctionIdentifier("shingle_strings"),
       info("shingle_strings", "_FUNC_(text[, n]) - distinct n-word shingle strings"),
       (args: Seq[Expression]) => args match {
@@ -74,9 +60,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((FunctionIdentifier("simhash_md5"),
       info("simhash_md5", "_FUNC_(text) - 60-bit md5-based SimHash fingerprint"),
       unary("simhash_md5(text)", SimHashMd5)))
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "_FUNC_(text) - 64-bit SimHash fingerprint"),
-      unary("simhash64(text)", SimHash64)))
     ext.injectFunction((FunctionIdentifier("jaccard_long"),
       info("jaccard_long", "_FUNC_(a, b) - Jaccard similarity of long arrays"),
       binary("jaccard_long(a, b)", JaccardLong)))

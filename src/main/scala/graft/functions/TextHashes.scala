@@ -2,7 +2,7 @@ package graft.functions
 
 import java.util.Locale
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -14,29 +14,27 @@ import scala.collection.mutable
   * "optional Expression for performance — k-perm hashing in one pass" row).
   *
   * The higher-order-function formulation (`transform(sequence(1,k), p ->
-  * array_min(transform(sh, h -> xxhash64(h, p))))`) evaluates one interpreted
+  * array_min(transform(sh, h -> hash(h, p))))`) evaluates one interpreted
   * lambda per (element × permutation) — measured ~21 ms/row at 52 shingles ×
   * 16 perms. These expressions do the same work in a single compiled JVM loop
   * per row (~µs): ~1000× less per-row overhead, which at 100 TB is the
   * difference between one pass and an unrunnable job.
   *
-  * Hashing uses Spark's own XXH64, so values are stable across runs, JVMs,
-  * and cluster sizes. Used by [[graft.pipeline.Dedup]].
+  * Every near-dup hash (shingle sets, MinHash, SimHash, fingerprints) is
+  * the 60-bit md5 bridge ([[Md5Hash60]]): stable across runs, JVMs and
+  * cluster sizes, and reproducible bit-for-bit by the DuckDB oracle. The one
+  * Spark-private hash left is [[ContentChunks]]' byte-level chunk key (an
+  * xxhash64 digest), which has no exact md5 twin. Used by
+  * [[graft.pipeline.Dedup]].
   */
 object TextHashes {
   // Spark 4 Column↔Expression bridge (the Column ctor no longer takes exprs).
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
-  /** Distinct hashed n-word shingles of whitespace-normalized, lowercased
-    * text — the one-pass fusion of normText → split → slice/concat → distinct
-    * → xxhash64.
-    */
-  def shingleHashes(c: Column, n: Int = 3): Column =
-    column(ShingleHashes(expression(c), n))
-
-  /** Distinct n-word shingle STRINGS (same normalization as
-    * [[shingleHashes]]), for cross-engine twins that must digest the shingle
-    * text itself (md5 MinHash oracle).
+  /** Distinct n-word shingle strings of whitespace-normalized, lowercased
+    * text — the one-pass fusion of normText → split → slice/concat →
+    * distinct. [[md5Hash60Array]] of it is the hashed shingle set every
+    * near-dup path verifies Jaccard on.
     */
   def shingleStrings(c: Column, n: Int = 3): Column =
     column(ShingleStrings(expression(c), n))
@@ -51,28 +49,16 @@ object TextHashes {
   def spanMd5Hashes(c: Column, n: Int = 8): Column =
     column(SpanMd5Hashes(expression(c), n))
 
-  /** k-permutation MinHash signature of a hashed-shingle array: sig(p) =
-    * min over h of xxhash64(h, seed = p).
-    */
-  def minHashSig(c: Column, k: Int = 16): Column =
-    column(MinHashSig(expression(c), k))
-
-  /** 64-bit SimHash over the words of normalized text: bit i is set iff the
-    * majority of word hashes have bit i set.
-    */
-  def simHash64(c: Column): Column = column(SimHash64(expression(c)))
-
-  /** 60-bit SimHash over md5 word hashes — functionally the cross-engine
-    * twin of [[simHash64]]: md5 exists in every engine (the DuckDB oracle
-    * reproduces it bit-for-bit), where xxhash64 is Spark-private. 60 bits
-    * because 15 hex chars parse into a positive signed long everywhere.
+  /** 60-bit SimHash over md5 word hashes of normalized text: bit i is set
+    * iff the majority of word hashes have bit i set. md5 exists in every
+    * engine, so the DuckDB oracle reproduces it bit-for-bit; 60 bits because
+    * 15 hex chars parse into a positive signed long everywhere.
     */
   def simHashMd5(c: Column): Column = column(SimHashMd5(expression(c)))
 
   /** k-perm MinHash signature over the 60-bit md5 hashes of the shingles,
-    * permuted by XOR with md5-derived constants ([[Md5Hash60]]) — the
-    * cross-engine twin of [[minHashSig]] (same min-over-permuted-hashes
-    * semantics, md5 instead of Spark-private xxhash64). Input is the STRING
+    * permuted by XOR with md5-derived constants ([[Md5Hash60]]):
+    * sig(p) = min over the set of the permuted hash. Input is the STRING
     * shingle array; 60-bit hashes as in [[simHashMd5]].
     */
   def minHashSigMd5(c: Column, k: Int = 8): Column =
@@ -123,7 +109,7 @@ object TextHashes {
     * boundary depends only on its local window, so an edit re-keys only
     * the chunk containing it), but every ingredient — whitespace split,
     * md5, mod — is reproducible in DuckDB, which makes this variant
-    * oracle hash-checkable where XXH64 chunk keys are not.
+    * oracle hash-checkable where the byte-level chunk keys are not.
     */
   def wordChunksMd5(c: Column, avgBits: Int = 3): Column =
     column(WordChunksMd5(expression(c), avgBits))
@@ -220,70 +206,6 @@ case class SpanMd5Hashes(child: Expression, n: Int)
     copy(child = c)
 }
 
-case class ShingleHashes(child: Expression, n: Int)
-    extends UnaryExpression with CodegenFallback {
-  require(n >= 1, s"shingle width must be >= 1, got $n")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "shingle_hashes"
-
-  override def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toString
-      .toLowerCase(Locale.ROOT).trim
-    if (text.isEmpty) return new GenericArrayData(Array.empty[Long])
-    val words = text.split("\\s+")
-    if (words.length < n) return new GenericArrayData(Array.empty[Long])
-    val seen = new java.util.LinkedHashSet[java.lang.Long]
-    val sb = new java.lang.StringBuilder
-    var i = 0
-    while (i <= words.length - n) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(words(i + j)); j += 1
-      }
-      val u = UTF8String.fromString(sb.toString)
-      seen.add(XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset,
-        u.numBytes, 42L))
-      i += 1
-    }
-    val out = new Array[Long](seen.size)
-    val it = seen.iterator(); var x = 0
-    while (it.hasNext) { out(x) = it.next(); x += 1 }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(c: Expression): ShingleHashes =
-    copy(child = c)
-}
-
-case class MinHashSig(child: Expression, k: Int)
-    extends UnaryExpression with CodegenFallback {
-  require(k >= 1, s"signature size must be >= 1, got $k")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-
-  override def nullSafeEval(input: Any): Any = {
-    val hashes = input.asInstanceOf[ArrayData].toLongArray()
-    val sig = new Array[Long](k)
-    var p = 0
-    while (p < k) {
-      var m = Long.MaxValue
-      var i = 0
-      while (i < hashes.length) {
-        val h = XXH64.hashLong(hashes(i), p + 1)
-        if (h < m) m = h
-        i += 1
-      }
-      sig(p) = m; p += 1
-    }
-    new GenericArrayData(sig)
-  }
-
-  override protected def withNewChildInternal(c: Expression): MinHashSig =
-    copy(child = c)
-}
-
 case class JaccardLong(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
     with CodegenFallback {
@@ -349,16 +271,20 @@ case class SimHashMd5(child: Expression)
   * needs one digest per shingle, not k.
   */
 private[graft] object Md5Hash60 {
-  def apply(md: java.security.MessageDigest, s: String): Long = {
+  def apply(md: java.security.MessageDigest, s: String): Long =
+    ofBytes(md, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  private def ofBytes(md: java.security.MessageDigest, b: Array[Byte]): Long = {
     md.reset()
-    val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val d = md.digest(b)
     var h = 0L
     var j = 0
     while (j < 8) { h = (h << 8) | (d(j) & 0xffL); j += 1 }
     h >>> 4 // first 15 hex chars, always positive
   }
 
-  /** Element-wise hash of a string array. SQL-exposed callers may pass a
+  /** Element-wise hash of a string array, digesting each element's UTF-8
+    * bytes as stored (no String round trip). SQL-exposed callers may pass a
     * null ELEMENT, which must not NPE the task: it hashes as the empty
     * string (internal callers never produce null elements).
     */
@@ -369,7 +295,7 @@ private[graft] object Md5Hash60 {
     var i = 0
     while (i < n) {
       val s = arr.getUTF8String(i)
-      out(i) = apply(md, if (s == null) "" else s.toString)
+      out(i) = ofBytes(md, if (s == null) Array.emptyByteArray else s.getBytes)
       i += 1
     }
     out
@@ -486,6 +412,7 @@ case class ContentChunks(child: Expression, avgBits: Int)
   require(avgBits >= 1 && avgBits <= 20, s"avgBits must be in [1,20], got $avgBits")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "content_chunks"
+  import org.apache.spark.sql.catalyst.expressions.XXH64
 
   private val Window = 16
   private val mask = (1L << avgBits) - 1
@@ -589,39 +516,5 @@ case class WordChunksMd5(child: Expression, avgBits: Int)
   }
 
   override protected def withNewChildInternal(c: Expression): WordChunksMd5 =
-    copy(child = c)
-}
-
-case class SimHash64(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-
-  override def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toString
-      .toLowerCase(Locale.ROOT).trim
-    val votes = new Array[Int](64)
-    if (text.nonEmpty) {
-      val words = text.split("\\s+")
-      var i = 0
-      while (i < words.length) {
-        val u = UTF8String.fromString(words(i))
-        val h = XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset,
-          u.numBytes, 42L)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-          b += 1
-        }
-        i += 1
-      }
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) { if (votes(b) > 0) out |= (1L << b); b += 1 }
-    java.lang.Long.valueOf(out)
-  }
-
-  override protected def withNewChildInternal(c: Expression): SimHash64 =
     copy(child = c)
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *                           (the Gopher-style repetition screen)
   *   3. exact dedup        — keep the smallest doc_id per md5(normalized text)
   *   4. near-dup removal   — MinHash-LSH verified pairs over the survivors
-  *                           (Dedup.nearDuplicatePairsMd5); greedily drop the
+  *                           (Dedup.nearDuplicatePairs); greedily drop the
   *                           LARGER id of every pair, i.e. first-seen wins
   *   5. reproducible sample — md5 hash-bucket of doc_id < 50%
   *
@@ -89,7 +89,7 @@ object Curation {
     * rides this exchange.
     *
     * Without `precomputedPairs` the pairs are derived in-query, with
-    * [[Dedup.nearDuplicatePairsMd5]]'s signature, banding and verify code
+    * [[Dedup.nearDuplicatePairs]]'s signature, banding and verify code
     * ([[DedupIndex.withSignatures]] → [[DedupIndex.signedComponents]] →
     * [[DedupIndex.selfPairs]]): `docs` is checkpointed ONCE together with
     * its `hv`/`sig` columns, and that one materialization serves the

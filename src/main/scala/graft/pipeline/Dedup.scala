@@ -17,10 +17,10 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
   *  - MinHash-LSH never builds the n² pair matrix: docs shard into
   *    (band, band_signature) buckets — one shuffle on a small key — and only
   *    within-bucket pairs are candidate-joined, then Jaccard-verified.
-  *  - signatures/shingles are Catalyst higher-order functions
-  *    (transform/aggregate over `xxhash64`) — whole-stage-codegen'd, no UDF
-  *    serialization; fixed seeds ⇒ deterministic across runs and cluster
-  *    sizes.
+  *  - shingles and signatures are one-pass native expressions over the
+  *    60-bit md5 bridge ([[graft.functions.TextHashes]]) — no UDF
+  *    serialization, deterministic across runs and cluster sizes, and
+  *    reproduced bit-for-bit by the DuckDB oracle.
   */
 object Dedup {
 
@@ -39,35 +39,12 @@ object Dedup {
   def shingles(c: Column, n: Int = 3): Column =
     graft.functions.TextHashes.shingleStrings(c, n)
 
-  /** k-permutation MinHash signature of a shingle array. The higher-order-
-    * function formulation (kept as documentation of the pure-DataFrame shape)
-    * is `transform(sequence(1,k), p -> array_min(transform(sh, s ->
-    * xxhash64(s, p))))`; the shipped implementation is the one-pass native
-    * expression [[graft.functions.MinHashSig]] — ~1000x less per-row overhead
-    * (interpreted HOF lambdas evaluate per element x permutation).
-    */
-  def minhash(sh: Column, k: Int = 16): Column =
-    graft.functions.TextHashes.minHashSig(sh, k)
-
-  /** 64-bit SimHash over word hashes: bit i of the fingerprint is set iff
-    * the majority of words have bit i set in xxhash64(word).
-    */
-  def simhash(c: Column): Column = graft.functions.TextHashes.simHash64(c)
-
   /** Exact Jaccard similarity of two distinct-element string arrays. */
   def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("double")
     val uni = size(array_union(a, b)).cast("double")
     when(uni === 0, 0.0).otherwise(inter / uni)
   }
-
-  /** Hashed shingle set: xxhash64 of each distinct shingle. Jaccard over the
-    * hashed sets equals Jaccard over the string sets up to 64-bit collisions
-    * (~n²/2⁶⁵ — negligible), and long-array intersections are far cheaper to
-    * shuffle and compare than string arrays at 100 TB.
-    */
-  def hashedShingles(c: Column, n: Int = 3): Column =
-    graft.functions.TextHashes.shingleHashes(c, n)
 
   /** Content-defined chunk hashes (Rabin-Karp rolling-hash boundaries):
     * shift-robust chunk fingerprints — inserting a prefix invalidates only
@@ -77,54 +54,19 @@ object Dedup {
   def contentChunks(c: Column, avgBits: Int = 6): Column =
     graft.functions.TextHashes.contentChunks(c, avgBits)
 
-  /** MinHash-LSH near-duplicate pairs: k-perm signatures, `bands` bands of
-    * k/bands rows, candidate pairs from band-bucket collisions, verified by
-    * exact shingle Jaccard ≥ threshold. Returns (doc_a, doc_b, jaccard).
+  /** MinHash-LSH near-duplicate pairs: k-perm md5 signatures, `bands`
+    * bands of k/bands rows, candidate pairs from band-bucket collisions,
+    * verified by exact Jaccard ≥ threshold over the md5 hashed shingle sets.
+    * Returns (doc_a, doc_b, jaccard).
     *
-    * Plan shape (scale-critical): the band shuffle carries only
-    * (band, bsig, doc) — 24 bytes/row, never the shingle arrays; candidate
-    * pairs are deduped as bare id pairs, and the shingle sets are joined back
-    * afterwards for the verify step only.
+    * This is [[DedupIndex.selfPairs]] over in-query [[DedupIndex.components]]
+    * — the same algebra the persisted index runs, so DuckDB re-derives every
+    * candidate pair and Jaccard value ([[lshPairsMd5Sql]]). Plan shape
+    * (scale-critical): the band shuffle carries only (band, bsig, doc),
+    * never the shingle arrays; candidate pairs are deduped as bare id pairs,
+    * and the shingle sets are joined back for the verify step only.
     */
   def nearDuplicatePairs(docs: DataFrame, textCol: String, idCol: String,
-      k: Int = 16, bands: Int = 4, threshold: Double = 0.6): DataFrame = {
-    val r = k / bands
-    // one materialization feeds all four consumers (banding + both verify
-    // sides): left lazy, the shingle+signature pass re-executed per
-    // consumer (the freqOrderedSets lesson)
-    val withSig = graft.Ckpt(docs
-      .select(col(idCol).as("doc"), hashedShingles(col(textCol)).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("sig", graft.functions.TextHashes.minHashSig(col("sh"), k)))
-    val sh = withSig.select(col("doc"), col("sh"))
-    // One row per (doc, band): band signature = hash of the band's slice.
-    val bandSigs = transform(sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(concat_ws(",", slice(col("sig"), b * r + 1, lit(r))), b))
-    val banded = withSig.select(col("doc"),
-      posexplode(bandSigs).as(Seq("band", "bsig")))
-    val candidates = banded.select(col("band"), col("bsig"), col("doc").as("doc_a"))
-      .join(banded.select(col("band"), col("bsig"), col("doc").as("doc_b")),
-        Seq("band", "bsig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").dropDuplicates("doc_a", "doc_b")
-    candidates
-      .join(sh.select(col("doc").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(sh.select(col("doc").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .withColumn("jaccard",
-        round(graft.functions.TextHashes.jaccardLong(col("sh_a"), col("sh_b")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
-  }
-
-  /** Cross-engine md5 twin of [[nearDuplicatePairs]]: the SAME banded-LSH +
-    * Jaccard-verify pipeline, built entirely from md5 60-bit hashes so
-    * DuckDB reproduces every candidate pair and every Jaccard value
-    * bit-for-bit — the oracle for the WHOLE near-dup pair generator, not
-    * just the signatures. Band keys are the raw signature slices (a
-    * ','-joined string; no extra hash needed for a join key). xxhash64
-    * [[nearDuplicatePairs]] stays the fast path.
-    */
-  def nearDuplicatePairsMd5(docs: DataFrame, textCol: String, idCol: String,
       k: Int = 8, bands: Int = 4, threshold: Double = 0.5): DataFrame =
     DedupIndex.selfPairs(
       DedupIndex.components(docs, textCol, idCol, k, bands), threshold)
@@ -715,21 +657,21 @@ object Dedup {
         .select("keep_id", "n_dups")
     }),
 
-    // L2 (DECLARED DEMO, `SparkEntry.demoQueries` — no oracle, xxhash64
-    // has no DuckDB twin; verified by planted-duplicate units): the
-    // non-persisted xxhash64 fast-path API on a fresh corpus. Production
-    // reads the persisted pair table (`q_dedup_index_pairs`); this
-    // spelling re-shingles raw text in-query by design.
+    // L2 (DECLARED DEMO, `SparkEntry.demoQueries`; oracle hash-checked):
+    // the non-persisted pair API on a fresh corpus at k=16 / 4 bands /
+    // t=0.6. Production reads the persisted pair table
+    // (`q_dedup_index_pairs`); this spelling re-shingles raw text in-query
+    // by design.
     "q_dedup_near" -> ((s, dir) =>
-      nearDuplicatePairs(T.documents(s, dir), "text", "doc_id")),
+      nearDuplicatePairs(T.documents(s, dir), "text", "doc_id",
+        k = 16, threshold = 0.6)),
 
-    // L2e (DECLARED DEMO, `SparkEntry.demoQueries` — chained from the
-    // in-query xxhash LSH pairs; clustering correctness is oracle-proved
-    // on `q_dedup_clusters_md5`/`_logstar` over the persisted pair table):
-    // cluster-size distribution via the non-persisted fast path.
+    // L2e (DECLARED DEMO, `SparkEntry.demoQueries`; oracle hash-checked):
+    // cluster-size distribution over in-query LSH pairs (k=16, t=0.5) —
+    // the non-persisted twin of `q_dedup_clusters_md5`.
     "q_dedup_clusters" -> ((s, dir) => {
       val pairs = nearDuplicatePairs(T.documents(s, dir), "text", "doc_id",
-        threshold = 0.5)
+        k = 16, threshold = 0.5)
       duplicateClusters(pairs)
         .groupBy("label").agg(count(lit(1)).as("cluster_size"))
         .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
@@ -739,7 +681,7 @@ object Dedup {
     // pipeline — signatures, banding, candidate join, Jaccard verify — on
     // the md5 bridge, so the DuckDB oracle re-derives every pair.
     "q_dedup_near_md5" -> ((s, dir) =>
-      nearDuplicatePairsMd5(T.documents(s, dir), "text", "doc_id")),
+      nearDuplicatePairs(T.documents(s, dir), "text", "doc_id")),
 
     // L2g (oracle hash-checked): the persisted dedup-index lifecycle
     // (DedupIndex, the dedup analogue of the E65 vector index). Build:
@@ -856,18 +798,21 @@ object Dedup {
     "q_dedup_canonical" -> ((s, dir) =>
       canonicalByRank(DedupIndex.pairs(s, dir))),
 
-    // L2b (DECLARED DEMO, `SparkEntry.demoQueries` — no oracle; the md5
-    // twin `q_dedup_simhash_md5` is the hash-checked row): xxhash SimHash
-    // fingerprints, the fast-path spelling.
+    // L2b (DECLARED DEMO, `SparkEntry.demoQueries`; oracle hash-checked):
+    // SimHash fingerprints. With one near-dup hash family this is the same
+    // expression as `q_dedup_simhash_md5`, kept under its own name so the
+    // declared-query set does not shrink.
     "q_dedup_simhash" -> ((s, dir) =>
-      T.documents(s, dir).select(col("doc_id"), simhash(col("text")).as("sim64"))),
+      T.documents(s, dir).select(col("doc_id"),
+        graft.functions.TextHashes.simHashMd5(col("text")).as("sim60"))),
 
     // L2a' — the cross-engine MinHash twin: ONE md5 digest per shingle
     // (60-bit positive long), then k=8 XOR-bijection permutations with
     // md5-derived constants, emitted as '|'-joined strings. Oracle
-    // reproduces every signature bit-for-bit; the xxhash64 MinHashSig stays
-    // the fast path inside the LSH pipeline. Docs with no 3-gram are
-    // filtered on both sides (empty-set minima are undefined).
+    // reproduces every signature bit-for-bit; the LSH pipeline derives the
+    // same signature from the hashed set (`DedupIndex.withSignatures`).
+    // Docs with no 3-gram are filtered on both sides (empty-set minima are
+    // undefined).
     "q_dedup_minhash_md5" -> ((s, dir) => {
       T.documents(s, dir)
         .select(col("doc_id"), shingles(col("text")).as("sh"))
@@ -879,8 +824,8 @@ object Dedup {
 
     // L2b' — the cross-engine SimHash twin over md5 word hashes (60 bits so
     // the hash parses as a positive signed long in every engine). Same
-    // majority-vote semantics as q_dedup_simhash, but DuckDB can reproduce
-    // md5 → this one is oracle hash-checked bit-for-bit.
+    // majority-vote semantics as any SimHash; DuckDB reproduces md5, so
+    // this one is oracle hash-checked bit-for-bit.
     "q_dedup_simhash_md5" -> ((s, dir) =>
       T.documents(s, dir).select(col("doc_id"),
         graft.functions.TextHashes.simHashMd5(col("text")).as("sim60"))),
@@ -910,8 +855,9 @@ object Dedup {
     }),
 
     // L2c: exact n-gram Jaccard on a bounded candidate set (same-source
-    // pairs), SQL-portable → oracle-checked. Pairwise compare runs on hashed
-    // shingle sets (same jaccard values, ~5× cheaper than string arrays).
+    // pairs), SQL-portable → oracle-checked. Pairwise compare runs on the
+    // 60-bit md5 hashed shingle sets (the string-set Jaccard up to 60-bit
+    // collisions, ~5× cheaper than string arrays).
     // DELIBERATELY NOT THE SCALE PATH: the same-source self-join is n² in
     // the hottest source key — it exists because DuckDB can reproduce it
     // exactly (the oracle for the Jaccard arithmetic). Production near-dup
@@ -922,7 +868,8 @@ object Dedup {
       // so the shingle pass runs once (the quadratic JOIN stays — that is
       // this declared demo's point)
       val d = graft.Ckpt(T.documents(s, dir)
-        .select(col("doc_id"), col("source"), hashedShingles(col("text")).as("sh")))
+        .select(col("doc_id"), col("source"),
+          graft.functions.TextHashes.md5Hash60Array(shingles(col("text"))).as("sh")))
       val x = d.select(col("source"), col("doc_id").as("doc_a"),
         col("sh").as("sh_a"), size(col("sh")).cast("long").as("sz_a"))
       val y = d.select(col("source"), col("doc_id").as("doc_b"),
@@ -950,19 +897,17 @@ object Dedup {
     })
   )
 
-  /** Shared oracle CTE chain mirroring [[nearDuplicatePairsMd5]] exactly:
-    * normalized 3-gram shingles → 60-bit md5 hashes → k=8 XOR-permutation
-    * MinHash signature → 4 bands of 2 rows (','-joined slice as band key)
-    * → distinct candidate pairs → Jaccard ≥ 0.5 verify on the hash sets.
-    *
+  /** The signature + banding CTEs (`t`, `shx`, `hs`, `sig`, `banded`):
+    * normalized 3-gram shingles → 60-bit md5 hashes → k-perm XOR MinHash
+    * signature → `bands` bands of k/bands rows (','-joined slice as band
+    * key) — the oracle twin of [[DedupIndex.signatures]]+[[DedupIndex.banded]];
+    * `q_dedup_index_build` re-derives the persisted bucket table from this.
     * `src` is the relation the pipeline reads (any CTE/table with doc_id +
     * text) — [[Curation]] points it at its filtered survivor set.
     */
-  /** Just the signature + banding CTEs (`t`, `shx`, `hs`, `sig`, `banded`)
-    * — the oracle twin of [[DedupIndex.signatures]]+[[DedupIndex.banded]];
-    * `q_dedup_index_build` re-derives the persisted bucket table from this.
-    */
-  private[pipeline] def lshBandedCtesSql(src: String): String =
+  private[pipeline] def lshBandedCtesSql(src: String, k: Int = 8,
+      bands: Int = 4): String = {
+    val r = k / bands
     s"""t AS (
       |  SELECT doc_id,
       |    string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
@@ -979,17 +924,23 @@ object Dedup {
       |  FROM shx WHERE len(sh) > 0),
       |sig AS (
       |  SELECT doc_id,
-      |    list_transform(generate_series(1, 8),
+      |    list_transform(generate_series(1, $k),
       |      p -> list_min(list_transform(hv,
       |        h -> xor(h, CAST(('0x' || substr(md5('perm|' || CAST(p AS VARCHAR)), 1, 15)) AS BIGINT))))) AS sg
       |  FROM hs),
       |banded AS (
       |  SELECT doc_id, b.band,
-      |    array_to_string(list_slice(sg, b.band * 2 + 1, b.band * 2 + 2), ',') AS bsig
-      |  FROM sig CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) b)""".stripMargin
+      |    array_to_string(list_slice(sg, b.band * $r + 1, b.band * $r + $r), ',') AS bsig
+      |  FROM sig CROSS JOIN (SELECT unnest(generate_series(0, ${bands - 1})) AS band) b)""".stripMargin
+  }
 
-  private[pipeline] def lshPairsMd5Sql(src: String = "documents"): String =
-    s"""${lshBandedCtesSql(src)},
+  /** [[lshBandedCtesSql]] plus `cand` and `pairs`: distinct candidate pairs
+    * → Jaccard ≥ `threshold` verify on the hash sets — the oracle twin of
+    * [[nearDuplicatePairs]] with the same (k, bands, threshold).
+    */
+  private[pipeline] def lshPairsMd5Sql(src: String = "documents", k: Int = 8,
+      bands: Int = 4, threshold: Double = 0.5): String =
+    s"""${lshBandedCtesSql(src, k, bands)},
       |cand AS (
       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       |  FROM banded a JOIN banded b
@@ -1002,15 +953,16 @@ object Dedup {
       |    JOIN hs x ON x.doc_id = c.doc_a
       |    JOIN hs y ON y.doc_id = c.doc_b
       |  WHERE round(CAST(len(list_intersect(x.hv, y.hv)) AS DOUBLE) /
-      |        CAST(len(list_distinct(x.hv || y.hv)) AS DOUBLE), 6) >= 0.5)""".stripMargin
+      |        CAST(len(list_distinct(x.hv || y.hv)) AS DOUBLE), 6) >= $threshold)""".stripMargin
 
   /** The full from-scratch near-dup pair derivation — shared VERBATIM by
     * `q_dedup_near_md5` (batch pipeline), `q_dedup_index_pairs` (persisted
     * index), and `q_dedup_append_pairs` (corpus index + appended batch):
-    * all three paths must hash to the same pair set.
+    * all three paths must hash to the same pair set. `q_dedup_near` is the
+    * same derivation at its own (k, threshold).
     */
-  private lazy val nearMd5Sql: String =
-    s"""WITH ${lshPairsMd5Sql()}
+  private def nearMd5Sql(k: Int = 8, threshold: Double = 0.5): String =
+    s"""WITH ${lshPairsMd5Sql(k = k, threshold = threshold)}
        |SELECT doc_a, doc_b, jaccard FROM pairs
        |ORDER BY ALL NULLS FIRST""".stripMargin
 
@@ -1031,10 +983,11 @@ object Dedup {
   /** Connected components over the md5 LSH pairs, resolved exactly by a
     * recursive CTE — shared verbatim by `q_dedup_clusters_md5` (min-label)
     * and `q_dedup_clusters_logstar` (large/small-star): both paths must
-    * hash to the same components.
+    * hash to the same components. `q_dedup_clusters` is the same derivation
+    * over k=16 signatures.
     */
-  private lazy val clustersMd5Sql: String =
-    s"""WITH RECURSIVE ${lshPairsMd5Sql()},
+  private def clustersMd5Sql(k: Int = 8): String =
+    s"""WITH RECURSIVE ${lshPairsMd5Sql(k = k)},
        |$clusterLabelCtesSql,
        |csize AS (
        |  SELECT label, CAST(count(*) AS BIGINT) AS cluster_size
@@ -1087,6 +1040,20 @@ object Dedup {
        |SELECT label, id AS canonical_id, CAST(rank AS BIGINT) AS canonical_rank,
        |  CAST(cluster_size AS BIGINT) AS cluster_size
        |FROM ranked WHERE rn = 1 ORDER BY ALL NULLS FIRST""".stripMargin
+
+  /** [[graft.functions.TextHashes.simHashMd5]] per document — shared by
+    * `q_dedup_simhash` and `q_dedup_simhash_md5`.
+    */
+  private val simhashMd5Sql: String =
+    """SELECT doc_id,
+      |  CAST(list_sum(list_transform(generate_series(0, 59),
+      |    b -> CASE WHEN 2 * len(list_filter(hs, h -> ((h >> b) & 1) = 1)) > len(hs)
+      |         THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS sim60
+      |FROM (SELECT doc_id,
+      |        list_transform(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '),
+      |          w -> CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT)) AS hs
+      |      FROM documents)
+      |ORDER BY ALL NULLS FIRST""".stripMargin
 
   val oracles: Map[String, String] = Map(
     // asymmetric completeness certificate: naive ordered-pairs spelling
@@ -1281,15 +1248,16 @@ object Dedup {
         |      h -> xor(h, CAST(('0x' || substr(md5('perm|' || CAST(p AS VARCHAR)), 1, 15)) AS BIGINT))))),
         |    '|') AS sig
         |FROM hs ORDER BY ALL NULLS FIRST""".stripMargin,
-    "q_dedup_near_md5" -> nearMd5Sql,
+    "q_dedup_near" -> nearMd5Sql(k = 16, threshold = 0.6),
+    "q_dedup_near_md5" -> nearMd5Sql(),
     "q_dedup_index_build" ->
       s"""WITH ${lshBandedCtesSql("documents")}
          |SELECT doc_id, CAST(band AS BIGINT) AS band, bsig FROM banded
          |ORDER BY ALL NULLS FIRST""".stripMargin,
     // persisted-index pairs and append-merged pairs must both equal the
     // from-scratch pipeline — byte-identical oracle, three ways proved
-    "q_dedup_index_pairs" -> nearMd5Sql,
-    "q_dedup_append_pairs" -> nearMd5Sql,
+    "q_dedup_index_pairs" -> nearMd5Sql(),
+    "q_dedup_append_pairs" -> nearMd5Sql(),
     // removal: anti-joined persisted pairs ≡ from-scratch build over the
     // reduced corpus (the oracle re-derives everything from the survivors)
     "q_dedup_remove_pairs" ->
@@ -1328,9 +1296,10 @@ object Dedup {
          |WHERE round(CAST(len(list_intersect(x.hv, y.hv)) AS DOUBLE) /
          |      CAST(len(list_distinct(x.hv || y.hv)) AS DOUBLE), 6) >= 0.5
          |ORDER BY ALL NULLS FIRST""".stripMargin,
-    "q_dedup_clusters_md5" -> clustersMd5Sql,
+    "q_dedup_clusters" -> clustersMd5Sql(k = 16),
+    "q_dedup_clusters_md5" -> clustersMd5Sql(),
     // the log-star twin must land on the SAME exact components
-    "q_dedup_clusters_logstar" -> clustersMd5Sql,
+    "q_dedup_clusters_logstar" -> clustersMd5Sql(),
     "q_dedup_chunks_md5" ->
       """WITH t AS (
         |  SELECT doc_id,
@@ -1356,16 +1325,8 @@ object Dedup {
         |d AS (SELECT chunk, count(DISTINCT doc_id) AS n_docs FROM c GROUP BY 1)
         |SELECT n_docs, CAST(count(*) AS BIGINT) AS n_chunks
         |FROM d GROUP BY 1 ORDER BY ALL NULLS FIRST""".stripMargin,
-    "q_dedup_simhash_md5" ->
-      """SELECT doc_id,
-        |  CAST(list_sum(list_transform(generate_series(0, 59),
-        |    b -> CASE WHEN 2 * len(list_filter(hs, h -> ((h >> b) & 1) = 1)) > len(hs)
-        |         THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS sim60
-        |FROM (SELECT doc_id,
-        |        list_transform(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '),
-        |          w -> CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT)) AS hs
-        |      FROM documents)
-        |ORDER BY ALL NULLS FIRST""".stripMargin,
+    "q_dedup_simhash" -> simhashMd5Sql,
+    "q_dedup_simhash_md5" -> simhashMd5Sql,
     "q_dedup_exact" ->
       """SELECT doc_id, lang, source FROM (
         |  SELECT doc_id, lang, source,

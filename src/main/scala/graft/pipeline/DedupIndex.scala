@@ -26,9 +26,9 @@ import org.apache.spark.sql.functions._
   * an oracle byte-identical to `q_dedup_near_md5`'s.
   *
   * Everything here is the md5 cross-engine algebra (DuckDB re-derives every
-  * signature, bucket, candidate, and Jaccard value); the xxhash64 fast path
-  * for pure-Spark deployments is [[Dedup.nearDuplicatePairs]] — one column
-  * expression swap, same shapes. Freshness + concurrency: the versioned-dir
+  * signature, bucket, candidate, and Jaccard value), and it is the only
+  * near-dup algebra: [[Dedup.nearDuplicatePairs]], curation and the
+  * streaming near-dup paths all run it. Freshness + concurrency: the versioned-dir
   * + atomic-marker-swap contract of [[IndexStore]] (shared with
   * [[VectorIndex]]), keyed on the source fingerprint of `documents.parquet`.
   */
@@ -57,7 +57,10 @@ object DedupIndex {
   /** Per-document signature rows (doc, hv, sig) of [[withSignatures]].
     * Shingle-less documents are filtered out BEFORE hashing: a filter on
     * `hv` itself would be pushed below the projection that computes it and
-    * digest every shingle twice.
+    * digest every shingle twice. The price is that `shingle_strings` runs
+    * twice per document (once for the filter, once for `hv`); a caller
+    * that materializes the signed rows anyway drops shingle-less rows after
+    * the checkpoint instead ([[components]]).
     */
   def signatures(docs: DataFrame, textCol: String, idCol: String,
       k: Int = 8): DataFrame = {
@@ -69,7 +72,7 @@ object DedupIndex {
 
   /** The band-key format, in ONE place: `bands` ','-joined slices of a
     * k-row signature. Every producer of (band, bsig) keys — [[banded]],
-    * the persisted buckets, and the streaming lookup — must build them
+    * the persisted buckets, and both streaming near-dup paths — must build them
     * with this expression, or the equi-join spans disjoint key spaces and
     * silently matches nothing.
     */
@@ -89,18 +92,20 @@ object DedupIndex {
     sigs.select(col("doc"),
       posexplode(bandKeys(col("sig"), k, bands)).as(Seq("band", "bsig")))
 
-  /** Both components from a corpus DataFrame. The signature table is
-    * checkpointed: downstream consumers reference it up to four times
-    * (banding feeds both sides of the bucket self-join, the verify stage
-    * joins both endpoints' shingle sets), and left lazy the corpus
-    * shingle+signature pass re-executed per reference. The persisted-index
-    * path is unaffected (it reads the parquet components directly).
+  /** Both components from a corpus DataFrame. The signed rows are
+    * checkpointed once: downstream consumers reference them up to four
+    * times (banding feeds both sides of the bucket self-join, the verify
+    * stage joins both endpoints' shingle sets), and left lazy the corpus
+    * shingle+signature pass re-executed per reference. Shingle-less rows
+    * are dropped AFTER the checkpoint ([[signedComponents]]), so each
+    * document is shingled once. The persisted-index path is unaffected (it
+    * reads the parquet components directly).
     */
   def components(docs: DataFrame, textCol: String, idCol: String,
-      k: Int = 8, bands: Int = 4): Components = {
-    val s = graft.Ckpt(signatures(docs, textCol, idCol, k))
-    Components(s, banded(s, k, bands))
-  }
+      k: Int = 8, bands: Int = 4): Components =
+    signedComponents(graft.Ckpt(withSignatures(
+        docs.select(col(idCol).as("doc"), col(textCol).as("text")), "text", k)
+      .select("doc", "hv", "sig")), "doc", k, bands)
 
   /** Components over rows that already carry [[withSignatures]]' columns —
     * for a caller that materializes its documents WITH their signatures
@@ -117,7 +122,7 @@ object DedupIndex {
 
   /** Verified near-dup pairs WITHIN an index: bucket-collision candidates
     * (doc_a < doc_b, deduped as bare id pairs), then exact Jaccard over the
-    * stored hashed shingle sets. This is [[Dedup.nearDuplicatePairsMd5]]
+    * stored hashed shingle sets. This is [[Dedup.nearDuplicatePairs]]
     * factored over reusable components — the batch entry point delegates
     * here, so the oracle that hash-checks it checks this path too.
     */

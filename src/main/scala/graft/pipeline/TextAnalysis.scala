@@ -40,12 +40,15 @@ object TextAnalysis {
     array_max(scored).getField("code")
   }
 
-  /** Bottom-k document fingerprint: the k smallest shingle hashes (a
-    * deterministic min-wise sketch; two docs share shingles iff their
-    * sketches overlap).
+  /** Bottom-k document fingerprint: the k smallest 60-bit md5 shingle
+    * hashes (a deterministic min-wise sketch; two docs share shingles iff
+    * their sketches overlap). Native one-pass hash array — HOF md5 lambdas
+    * are interpreted per element.
     */
-  def fingerprint(c: Column, k: Int = 8): Column =
-    slice(array_sort(graft.functions.TextHashes.shingleHashes(c)), 1, k)
+  def fingerprint(c: Column, k: Int = 8): Column = {
+    import graft.functions.TextHashes.{md5Hash60Array, shingleStrings}
+    slice(array_sort(md5Hash60Array(shingleStrings(c))), 1, k)
+  }
 
   /** Corpus-trained bigram language-model quality score (the CCNet/
     * fastText-era shape: score text by how expected its token sequences are
@@ -195,26 +198,23 @@ object TextAnalysis {
         .groupBy("lang", "predicted").agg(count(lit(1)).as("n"))
     }),
 
-    // Bottom-k fingerprints (no oracle — xxhash64; verified in spec). The
-    // sketch is emitted as a '|'-joined string, not a raw array, so the
-    // driver's pandas-based rows check can sort the column.
+    // Bottom-k fingerprints (oracle hash-checked, shared with
+    // `q_text_fingerprint_md5`: one near-dup hash family, so the two names
+    // run the same sketch). The sketch is emitted as a '|'-joined string,
+    // not a raw array, so the driver's pandas-based rows check can sort the
+    // column.
     "q_text_fingerprint" -> ((s, dir) => {
       T.documents(s, dir)
         .select(col("doc_id"),
           array_join(fingerprint(col("text")).cast("array<string>"), "|").as("fp"))
     }),
 
-    // Bottom-k fingerprint, md5 twin (oracle hash-checked): same min-wise
-    // sketch semantics over the same distinct 3-gram shingles, hashed with
-    // the 60-bit md5 bridge instead of xxhash64 so DuckDB reproduces every
-    // sketch bit-for-bit. Native one-pass hash array (HOF md5 lambdas are
-    // interpreted per element).
+    // Bottom-k fingerprint over the 60-bit md5 bridge (oracle
+    // hash-checked): DuckDB reproduces every sketch bit-for-bit.
     "q_text_fingerprint_md5" -> ((s, dir) => {
-      val hv = graft.functions.TextHashes.md5Hash60Array(
-        graft.functions.TextHashes.shingleStrings(col("text")))
       T.documents(s, dir)
         .select(col("doc_id"),
-          array_join(slice(array_sort(hv), 1, 8).cast("array<string>"), "|").as("fp"))
+          array_join(fingerprint(col("text")).cast("array<string>"), "|").as("fp"))
     }),
 
     // Repetition / diversity filter (Gopher-style quality gate): distinct
@@ -389,22 +389,28 @@ object TextAnalysis {
     })
   )
 
+  /** [[fingerprint]] per document — shared by `q_text_fingerprint` and
+    * `q_text_fingerprint_md5`.
+    */
+  private val fingerprintSql: String =
+    """WITH t AS (
+      |  SELECT doc_id,
+      |    string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks
+      |  FROM documents),
+      |sh AS (
+      |  SELECT doc_id,
+      |    CASE WHEN len(toks) < 3 THEN []
+      |         ELSE list_distinct(list_transform(generate_series(1, len(toks) - 2),
+      |           i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2])) END AS sh
+      |  FROM t)
+      |SELECT doc_id,
+      |  array_to_string(list_slice(list_sort(list_transform(sh,
+      |    s -> CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT))), 1, 8), '|') AS fp
+      |FROM sh ORDER BY ALL NULLS FIRST""".stripMargin
+
   val oracles: Map[String, String] = Map(
-    "q_text_fingerprint_md5" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) < 3 THEN []
-        |         ELSE list_distinct(list_transform(generate_series(1, len(toks) - 2),
-        |           i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2])) END AS sh
-        |  FROM t)
-        |SELECT doc_id,
-        |  array_to_string(list_slice(list_sort(list_transform(sh,
-        |    s -> CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT))), 1, 8), '|') AS fp
-        |FROM sh ORDER BY ALL NULLS FIRST""".stripMargin,
+    "q_text_fingerprint" -> fingerprintSql,
+    "q_text_fingerprint_md5" -> fingerprintSql,
     "q_text_lm" ->
       """WITH t AS (
         |  SELECT doc_id,

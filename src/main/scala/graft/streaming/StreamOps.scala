@@ -61,13 +61,12 @@ object StreamOps {
     */
   def signatureDedupWithinWatermark(docs: DataFrame, textCol: String,
       tsCol: String, k: Int = 8): DataFrame = {
-    val sh = graft.functions.TextHashes.shingleHashes(col(textCol))
-    val key = when(size(sh) > 0,
-        concat_ws(",", graft.functions.TextHashes.minHashSig(sh, k)))
+    val key = when(size(col("hv")) > 0, concat_ws(",", col("sig")))
       .otherwise(concat(lit("short:"),
         md5(trim(regexp_replace(lower(col(textCol)), "\\s+", " ")))))
-    docs
+    graft.pipeline.DedupIndex.withSignatures(docs, textCol, k)
       .withColumn("__sig", key)
+      .drop("hv", "sig")
       .withWatermark(tsCol, "10 minutes")
       .dropDuplicatesWithinWatermark("__sig")
       .drop("__sig")
@@ -80,8 +79,9 @@ object StreamOps {
 
   /** Streaming NEAR-dup dedup, candidate half: the banded-LSH candidate
     * generator of [[graft.pipeline.Dedup.nearDuplicatePairs]] as an
-    * incremental stream. Each doc's k-minima signature splits into `bands`
-    * band keys; per (band, bandSig) bucket the state store keeps ONE long —
+    * incremental stream. Each doc's k-minima md5 signature splits into
+    * `bands` band keys ([[graft.pipeline.DedupIndex.bandKeys]], the batch
+    * format); per (band, bandSig) bucket the state store keeps ONE long —
     * the first doc_id ever seen there — and every later arrival emits a
     * (anchor, newcomer, band) candidate. The expensive exchange of batch
     * LSH becomes a keyed state lookup; the exact Jaccard verify stays a
@@ -101,16 +101,15 @@ object StreamOps {
       horizonMinutes: Int = 10): Dataset[BandHit] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val r = k / bands
-    val bandSigs = transform(sequence(lit(0), lit(bands - 1)),
-      b => concat_ws(",", slice(col("__sig"), b * r + 1, lit(r))))
-    docs
-      .withWatermark(tsCol, "10 minutes")
-      .withColumn("__sh", graft.functions.TextHashes.shingleHashes(col(textCol)))
-      .filter(size(col("__sh")) > 0)
-      .withColumn("__sig", graft.functions.TextHashes.minHashSig(col("__sh"), k))
+    import graft.pipeline.DedupIndex
+    // shingle-less docs are dropped before hashing (see DedupIndex.signatures)
+    DedupIndex.withSignatures(docs
+        .withWatermark(tsCol, "10 minutes")
+        .filter(size(graft.functions.TextHashes.shingleStrings(col(textCol))) > 0),
+        textCol, k)
       .select(col("doc_id").cast("long"), col(tsCol),
-        posexplode(bandSigs).as(Seq("__band", "__bsig")))
+        posexplode(DedupIndex.bandKeys(col("sig"), k, bands))
+          .as(Seq("__band", "__bsig")))
       .as[(Long, java.sql.Timestamp, Int, String)]
       .groupByKey(x => (x._3, x._4))
       .flatMapGroupsWithState(OutputMode.Append,

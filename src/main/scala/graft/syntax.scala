@@ -19,8 +19,8 @@ object syntax {
   implicit class GraftDataFrameOps(private val df: DataFrame) extends AnyVal {
 
     /** MinHash-LSH near-duplicate pairs; see [[pipeline.Dedup.nearDuplicatePairs]]. */
-    def nearDupPairs(textCol: String, idCol: String, k: Int = 16,
-        bands: Int = 4, threshold: Double = 0.6): DataFrame =
+    def nearDupPairs(textCol: String, idCol: String, k: Int = 8,
+        bands: Int = 4, threshold: Double = 0.5): DataFrame =
       pipeline.Dedup.nearDuplicatePairs(df, textCol, idCol, k, bands, threshold)
 
     /** Connected components over a (doc_a, doc_b) pair list; see
@@ -54,13 +54,6 @@ object syntax {
     /** Sign-pattern LSH bucket; see [[functions.VectorOps.cosineLshBucket]]. */
     def lshBucket(planes: Int = 8, table: Int = 0): Column =
       functions.VectorOps.cosineLshBucket(c, planes, table)
-
-    /** 64-bit SimHash; see [[functions.TextHashes.simHash64]]. */
-    def simhash64: Column = functions.TextHashes.simHash64(c)
-
-    /** Hashed distinct n-word shingles; see [[functions.TextHashes.shingleHashes]]. */
-    def shingleHashes(n: Int = 3): Column =
-      functions.TextHashes.shingleHashes(c, n)
 
     /** Content-defined chunk hashes; see [[functions.TextHashes.contentChunks]]. */
     def contentChunks(avgBits: Int = 6): Column =

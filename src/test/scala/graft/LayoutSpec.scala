@@ -209,14 +209,20 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sql.getSeq[Long](0) === reference(Seq("the quick fox", "quick fox jumps"), 8))
     assert(sql.getSeq[Long](1) === reference(Seq("only one shingle"), 3))
     assert(sql.getSeq[Long](2) === Seq.fill(8)(Long.MaxValue))
+    // element hashes digest each element's stored UTF-8 bytes; null and
+    // empty elements both hash as ""
+    val elems = spark.sql(
+      "SELECT md5_hash60_array(array('', NULL, 'über', '日本 fox')) AS h").head()
+    assert(elems.getSeq[Long](0) === Seq("", "", "über", "日本 fox").map(hash60))
   }
 
   test("GraftExtensions: native expressions callable from SQL") {
     Tables.documents(spark, sf).createOrReplaceTempView("docs_ext")
     val r = spark.sql(
-      """SELECT doc_id, simhash64(text) AS sh,
-        |  size(minhash_sig(shingle_hashes(text), 8)) AS k,
-        |  jaccard_long(shingle_hashes(text), shingle_hashes(text)) AS self_jac
+      """SELECT doc_id, simhash_md5(text) AS sh,
+        |  size(minhash_sig_md5(shingle_strings(text), 8)) AS k,
+        |  jaccard_long(md5_hash60_array(shingle_strings(text)),
+        |    md5_hash60_array(shingle_strings(text))) AS self_jac
         |FROM docs_ext LIMIT 5""".stripMargin).collect()
     assert(r.length === 5)
     assert(r.forall(_.getInt(2) === 8))

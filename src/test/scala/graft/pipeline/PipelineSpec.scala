@@ -48,7 +48,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b = a.replace("river", "creek")
     val c = "completely unrelated legal boilerplate concerning maritime law"
     val df = Seq((1L, a), (2L, b), (3L, c)).toDF("doc_id", "text")
-      .select(col("doc_id"), Dedup.simhash(col("text")).as("h"))
+      .select(col("doc_id"), graft.functions.TextHashes.simHashMd5(col("text")).as("h"))
     val m = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def hamming(x: Long, y: Long) = java.lang.Long.bitCount(x ^ y)
     assert(hamming(m(1L), m(2L)) < hamming(m(1L), m(3L)))
@@ -1092,7 +1092,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "all members of a duplicate cluster must land in the same split")
     // and on real data: zero verified near-dup pairs straddle the split
     val d = T.documents(spark, sf)
-    val realPairs = graft.Ckpt(Dedup.nearDuplicatePairsMd5(d, "text", "doc_id"))
+    val realPairs = graft.Ckpt(Dedup.nearDuplicatePairs(d, "text", "doc_id"))
     val assign = Sampling.leakSafeSplit(d, realPairs).select("doc_id", "split")
     val straddling = realPairs
       .join(assign.toDF("doc_id", "sa"), col("doc_a") === col("doc_id")).drop("doc_id")
@@ -1280,7 +1280,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = plantedDocs
     val survivors = Curation.stageExact(
       Curation.stageQuality(Curation.stageLang(docs)))
-    val pairs = Dedup.nearDuplicatePairsMd5(survivors, "text", "doc_id")
+    val pairs = Dedup.nearDuplicatePairs(survivors, "text", "doc_id")
     assert(pairs.count() > 100, "the corpus must plant verified near-dup pairs")
     def hashCount(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
       val r = df.agg(bit_xor(xxhash64(col("doc_id"), col("lang"), col("source"))),
