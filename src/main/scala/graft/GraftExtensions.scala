@@ -110,7 +110,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
     ext.injectFunction((FunctionIdentifier("cosine_lsh_bucket"),
       info("cosine_lsh_bucket",
-        "_FUNC_(vec[, planes[, table]]) - sign-pattern LSH bucket id"),
+        "_FUNC_(vec[, planes[, table]]) - sign-pattern LSH bucket id over md5-derived hyperplanes"),
       (args: Seq[Expression]) => args match {
         case Seq(c) => CosineLshBucket(c, 8, 0)
         case Seq(c, p) => CosineLshBucket(c, p.eval().asInstanceOf[Int], 0)

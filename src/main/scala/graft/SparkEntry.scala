@@ -85,14 +85,16 @@ object SparkEntry {
     *    declared quadratic oracle anchors (n² self-join / BNLJ theta /
     *    crossJoin exact top-k); their scale-safe twins are the LSH
     *    pipeline, `rangeJoinBinned`, and the ANN/IVF/ADC family.
-    *  - `q_dedup_near` / `q_dedup_clusters` / `q_dedup_chunks` /
-    *    `q_dedup_simhash`: the non-persisted spellings, which re-derive
-    *    signatures from raw corpus text in-query (all but `q_dedup_chunks`,
-    *    the byte-level rolling hash, run the md5 algebra and are
-    *    oracle-checked). Production reads the persisted index
-    *    (`q_dedup_index_*`, `q_dedup_clusters_md5`, `q_dedup_chunks_md5`,
-    *    `q_dedup_simhash_md5` are those rows); these demo the
-    *    non-persisted API on a fresh corpus.
+    *  - `q_dedup_near` / `q_dedup_clusters` / `q_dedup_chunks`: the
+    *    non-persisted spellings, which re-derive signatures from raw corpus
+    *    text in-query (all but `q_dedup_chunks`, the byte-level rolling
+    *    hash, run the md5 algebra and are oracle-checked). Production reads
+    *    the persisted index (`q_dedup_index_*`, `q_dedup_clusters_md5`,
+    *    `q_dedup_chunks_md5` are those rows); these demo the non-persisted
+    *    API on a fresh corpus.
+    *  - `q_dedup_simhash`: the band populations of a banded SimHash index
+    *    built in-query from raw text (oracle-checked); `q_dedup_simhash_md5`
+    *    is the per-document fingerprint row.
     *
     * `Bench` expands the literal `@demos` in `SPARK_GRAFT_BENCH_SKIP` to
     * this set, so the sf1 scaling probe excludes every declared demo

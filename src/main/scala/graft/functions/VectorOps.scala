@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -17,10 +17,12 @@ import org.apache.spark.sql.types._
   * already eliminated (see [[TextHashes]]). These expressions run the identical
   * arithmetic in one compiled loop per row.
   *
-  * Determinism: hyperplane components are derived from Spark's own XXH64
-  * (seed 42, the `xxhash64` chain order), so buckets are stable across runs,
-  * JVMs, and cluster sizes, and [[CosineSim]] accumulates in index order —
-  * bit-identical to the sequential `list_sum` the DuckDB oracle evaluates.
+  * Determinism: hyperplane components form one md5 lattice,
+  * `md5("plane|" + globalPlane + "|" + dim)` folded to uniform[-0.5, 0.5),
+  * so buckets are stable across runs, JVMs, and cluster sizes, and any
+  * engine with md5 (the DuckDB oracle) reproduces every bucket.
+  * [[CosineSim]] accumulates in index order — bit-identical to the
+  * sequential `list_sum` the DuckDB oracle evaluates.
   */
 object VectorOps {
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
@@ -38,19 +40,13 @@ object VectorOps {
     column(DotProduct(expression(a), expression(b)))
 
   /** Sign-pattern LSH bucket of a vector: bit p of the result is the sign of
-    * the projection onto pseudo-random hyperplane `table * planes + p`.
+    * the projection onto md5-derived hyperplane `table * planes + p`.
     * Distinct `table` values give independent hash tables (multi-table LSH).
+    * DuckDB reproduces every plane weight (and so every bucket) from
+    * `md5('plane|' || gp || '|' || d)`.
     */
   def cosineLshBucket(vec: Column, planes: Int = 8, table: Int = 0): Column =
     column(CosineLshBucket(expression(vec), planes, table))
-
-  /** [[cosineLshBucket]] with md5-derived hyperplane components — the
-    * cross-engine twin: DuckDB reproduces every plane weight (and so every
-    * bucket) from `md5('plane|' || gp || '|' || d)`, where xxhash64 is
-    * Spark-private. The xxhash64 variant stays the fast path.
-    */
-  def cosineLshBucketMd5(vec: Column, planes: Int = 8, table: Int = 0): Column =
-    column(CosineLshBucketMd5(expression(vec), planes, table))
 
   /** Asymmetric SQ8 cosine: exact double query vector vs a uint8-quantized
     * corpus vector decoded on the fly as `mns[i] + codes[i]/255 * spans[i]`
@@ -245,43 +241,10 @@ case class CosineLshBucket(child: Expression, planes: Int, table: Int)
   override def dataType: DataType = LongType
   override def prettyName: String = "cosine_lsh_bucket"
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = VectorOps.toDoubles(input.asInstanceOf[ArrayData],
-      VectorOps.elemType(child))
-    var bucket = 0L
-    var p = 0
-    while (p < planes) {
-      // Global plane index: distinct tables draw disjoint hyperplane sets.
-      val seed = XXH64.hashInt(table * planes + p, 42L)
-      var proj = 0.0
-      var d = 0
-      while (d < v.length) {
-        // Component ~ uniform[-0.5, 0.5): pmod(xxhash64(plane, dim), 1e5)/1e5 - 0.5
-        val h = XXH64.hashInt(d, seed)
-        proj += v(d) * ((((h % 100000L) + 100000L) % 100000L).toDouble / 100000.0 - 0.5)
-        d += 1
-      }
-      if (proj >= 0) bucket |= (1L << p)
-      p += 1
-    }
-    java.lang.Long.valueOf(bucket)
-  }
-
-  override protected def withNewChildInternal(c: Expression): CosineLshBucket =
-    copy(child = c)
-}
-
-case class CosineLshBucketMd5(child: Expression, planes: Int, table: Int)
-    extends UnaryExpression with CodegenFallback {
-  require(planes >= 1 && planes <= 62, s"planes must be in [1, 62], got $planes")
-  require(table >= 0, s"table must be >= 0, got $table")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "cosine_lsh_bucket_md5"
-
   // Plane components, derived once per (expression instance, dims) — NOT per
   // row: w(p, d) = hash60(md5("plane|" + (table*planes + p) + "|" + d))
-  // % 100000 / 1e5 - 0.5, the same uniform[-0.5, 0.5) lattice as the
-  // xxhash64 variant but reproducible by any engine with md5.
+  // % 100000 / 1e5 - 0.5, a uniform[-0.5, 0.5) lattice any engine with
+  // md5 reproduces.
   @transient private lazy val cache =
     new java.util.concurrent.atomic.AtomicReference[(Int, Array[Array[Double]])]
 
@@ -290,14 +253,8 @@ case class CosineLshBucketMd5(child: Expression, planes: Int, table: Int)
     if (cached != null && cached._1 == dims) return cached._2
     val md = java.security.MessageDigest.getInstance("MD5")
     val w = Array.tabulate(planes, dims) { (p, d) =>
-      val gp = table * planes + p
-      val digest = md.digest(s"plane|$gp|$d"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      md.reset()
-      var h = 0L
-      var j = 0
-      while (j < 8) { h = (h << 8) | (digest(j) & 0xffL); j += 1 }
-      ((h >>> 4) % 100000L).toDouble / 100000.0 - 0.5
+      (Md5Hash60(md, s"plane|${table * planes + p}|$d") % 100000L)
+        .toDouble / 100000.0 - 0.5
     }
     cache.set((dims, w))
     w
@@ -320,6 +277,6 @@ case class CosineLshBucketMd5(child: Expression, planes: Int, table: Int)
     java.lang.Long.valueOf(bucket)
   }
 
-  override protected def withNewChildInternal(c: Expression): CosineLshBucketMd5 =
+  override protected def withNewChildInternal(c: Expression): CosineLshBucket =
     copy(child = c)
 }

@@ -799,12 +799,17 @@ object Dedup {
       canonicalByRank(DedupIndex.pairs(s, dir))),
 
     // L2b (DECLARED DEMO, `SparkEntry.demoQueries`; oracle hash-checked):
-    // SimHash fingerprints. With one near-dup hash family this is the same
-    // expression as `q_dedup_simhash_md5`, kept under its own name so the
-    // declared-query set does not shrink.
+    // SimHash band populations — `sim60` cut into 4 × 15-bit bands, and the
+    // number of documents per (band, key): the bucket sizes a banded
+    // SimHash near-dup index would probe. One aggregate over the
+    // `q_dedup_simhash_md5` fingerprints.
     "q_dedup_simhash" -> ((s, dir) =>
-      T.documents(s, dir).select(col("doc_id"),
-        graft.functions.TextHashes.simHashMd5(col("text")).as("sim60"))),
+      T.documents(s, dir)
+        .select(graft.functions.TextHashes.simHashMd5(col("text")).as("sim60"))
+        .select(posexplode(array((0 until 4).map(b =>
+          shiftright(col("sim60"), 15 * b).bitwiseAND(0x7fffL)): _*))
+          .as(Seq("band", "key")))
+        .groupBy("band", "key").agg(count(lit(1)).as("n"))),
 
     // L2a' — the cross-engine MinHash twin: ONE md5 digest per shingle
     // (60-bit positive long), then k=8 XOR-bijection permutations with
@@ -1041,9 +1046,7 @@ object Dedup {
        |  CAST(cluster_size AS BIGINT) AS cluster_size
        |FROM ranked WHERE rn = 1 ORDER BY ALL NULLS FIRST""".stripMargin
 
-  /** [[graft.functions.TextHashes.simHashMd5]] per document — shared by
-    * `q_dedup_simhash` and `q_dedup_simhash_md5`.
-    */
+  /** [[graft.functions.TextHashes.simHashMd5]] per document. */
   private val simhashMd5Sql: String =
     """SELECT doc_id,
       |  CAST(list_sum(list_transform(generate_series(0, 59),
@@ -1325,7 +1328,12 @@ object Dedup {
         |d AS (SELECT chunk, count(DISTINCT doc_id) AS n_docs FROM c GROUP BY 1)
         |SELECT n_docs, CAST(count(*) AS BIGINT) AS n_chunks
         |FROM d GROUP BY 1 ORDER BY ALL NULLS FIRST""".stripMargin,
-    "q_dedup_simhash" -> simhashMd5Sql,
+    "q_dedup_simhash" ->
+      s"""WITH s AS ($simhashMd5Sql),
+         |b AS (SELECT unnest(generate_series(0, 3)) AS band)
+         |SELECT CAST(b.band AS INTEGER) AS band,
+         |  (s.sim60 >> (15 * b.band)) & 32767 AS key, count(*) AS n
+         |FROM s CROSS JOIN b GROUP BY ALL ORDER BY ALL NULLS FIRST""".stripMargin,
     "q_dedup_simhash_md5" -> simhashMd5Sql,
     "q_dedup_exact" ->
       """SELECT doc_id, lang, source FROM (

@@ -13,12 +13,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: brute force is O(|Q|·|N|) — fine for a handful of probe
   * queries, hopeless at 100 TB. The LSH path buckets vectors by the sign
-  * pattern of pseudo-random hyperplane projections (fixed xxhash64-derived
-  * components ⇒ deterministic, no stored model): `tables` independent hash
-  * tables of `planes` sign bits each, plus 1-bit-flip multi-probe on the
-  * query side, so recall doesn't cliff off a single unlucky bucket. One
-  * narrow equi-join on (table, bucket), candidate sets ~tables·(planes+1)·
-  * n/2^planes, exact rerank on candidates only. All vector math is native
+  * pattern of pseudo-random hyperplane projections (fixed md5-derived
+  * components ⇒ deterministic, no stored model, reproducible by the DuckDB
+  * oracle): `tables` independent hash tables of `planes` sign bits each,
+  * plus 1-bit-flip multi-probe on the query side, so recall doesn't cliff
+  * off a single unlucky bucket. One narrow equi-join on (table, bucket),
+  * candidate sets ~tables·(planes+1)·n/2^planes, exact rerank on
+  * candidates only. All vector math is native
   * Catalyst expressions ([[graft.functions.CosineSim]] /
   * [[graft.functions.CosineLshBucket]]) — one compiled loop per row, no
   * interpreted per-element lambdas, no UDFs.
@@ -28,12 +29,6 @@ object Similarity {
 
   /** Exact cosine similarity of two float-array columns (double math). */
   def cosine(a: Column, b: Column): Column = cosineSim(a, b)
-
-  /** LSH bucket id of a vector: sign bits of `planes` hyperplane projections
-    * (table 0 of the multi-table scheme).
-    */
-  def lshBucket(vec: Column, planes: Int = 8): Column =
-    cosineLshBucket(vec, planes)
 
   /** Two-phase deterministic per-query top-k over a scored candidate set:
     * local top-k within (qid, salt) buckets first — so the WIDE exchange
@@ -150,32 +145,19 @@ object Similarity {
     * multi-table ANN index); only the small query side fans out by the
     * probe count. Candidate pairs found by several tables are collapsed by
     * `dropDuplicates(qid, vec_id)` before the rerank pays for cosine.
+    *
+    * The hyperplanes are md5-derived, so the DuckDB oracle recomputes every
+    * plane weight, bucket, probe key, candidate pair, and rounded rerank
+    * cosine: the WHOLE ANN pipeline is hash-checked, not just recall-tested.
     */
   def annTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-      planes: Int = 8, tables: Int = 4, multiProbe: Boolean = true): DataFrame =
-    annTopKImpl(queries, corpus, k, planes, tables, multiProbe,
-      graft.functions.VectorOps.cosineLshBucket(_, _, _))
-
-  /** [[annTopK]] on the md5-derived hyperplanes — the cross-engine twin:
-    * the DuckDB oracle recomputes every plane weight, bucket, probe key,
-    * candidate pair, and rounded rerank cosine, so the WHOLE ANN pipeline
-    * is hash-checked, not just recall-tested. xxhash64 [[annTopK]] stays
-    * the fast path.
-    */
-  def annTopKMd5(queries: DataFrame, corpus: DataFrame, k: Int,
-      planes: Int = 8, tables: Int = 4, multiProbe: Boolean = true): DataFrame =
-    annTopKImpl(queries, corpus, k, planes, tables, multiProbe,
-      graft.functions.VectorOps.cosineLshBucketMd5(_, _, _))
-
-  private def annTopKImpl(queries: DataFrame, corpus: DataFrame, k: Int,
-      planes: Int, tables: Int, multiProbe: Boolean,
-      bucketOf: (Column, Int, Int) => Column): DataFrame = {
+      planes: Int = 8, tables: Int = 4, multiProbe: Boolean = true): DataFrame = {
     // (table, bucket) packed into one long join key: bucket < 2^planes.
     def key(t: Int, b: Column): Column = lit(t.toLong * (1L << planes)) + b
     val cb = corpus.withColumn("tb", explode(array(
-      (0 until tables).map(t => key(t, bucketOf(col("vec"), planes, t))): _*)))
+      (0 until tables).map(t => key(t, cosineLshBucket(col("vec"), planes, t))): _*)))
     val probeKeys = (0 until tables).flatMap { t =>
-      val b0 = bucketOf(col("qvec"), planes, t)
+      val b0 = cosineLshBucket(col("qvec"), planes, t)
       val base = key(t, b0)
       if (multiProbe)
         base +: (0 until planes).map(bit => key(t, b0.bitwiseXOR(lit(1L << bit))))
@@ -280,37 +262,24 @@ object Similarity {
   }
 
   /** Deterministic k-means coarse quantizer for IVF: cells initialized by
-    * vec_id hash (no RNG — same result at any parallelism), then `iters`
-    * Lloyd rounds of cosine-argmax assignment + exact-integer-mean update.
-    * Fully lazy — the rounds compose into one plan, each round costing one
-    * posexplode agg (narrow (cell, dim) keys) and one broadcast argmax; no
-    * driver-side loop state. Replaces the label column as the quantizer
-    * when no natural partitioning exists.
-    */
-  def kmeansQuantizer(corpus: DataFrame, k: Int, iters: Int = 2): DataFrame =
-    kmeansQuantizerImpl(corpus, k, iters,
-      pmod(xxhash64(col("vec_id")), lit(k.toLong)).cast("int"))
-
-  /** [[kmeansQuantizer]] on md5-derived seed cells — the cross-engine twin
-    * (xxhash64 is Spark-private; md5 both engines share): DuckDB re-derives
-    * the seed assignment, every Lloyd round's rounded-cosine argmax, and
-    * every exact-integer centroid coordinate, so the UNLABELED-corpus IVF
+    * an md5 hash of vec_id (no RNG — same result at any parallelism), then
+    * `iters` Lloyd rounds of cosine-argmax assignment + exact-integer-mean
+    * update. Fully lazy — the rounds compose into one plan, each round
+    * costing one posexplode agg (narrow (cell, dim) keys) and one broadcast
+    * argmax; no driver-side loop state. Replaces the label column as the
+    * quantizer when no natural partitioning exists. DuckDB re-derives the
+    * seed assignment, every Lloyd round's rounded-cosine argmax, and every
+    * exact-integer centroid coordinate, so the UNLABELED-corpus IVF
     * quantizer build is hash-checked end to end, not just unit-tested.
-    * The xxhash64 variant stays the fast path.
     */
-  def kmeansQuantizerMd5(corpus: DataFrame, k: Int, iters: Int = 2): DataFrame =
-    kmeansQuantizerImpl(corpus, k, iters,
-      (conv(substring(md5(col("vec_id").cast("string")), 1, 15), 16, 10)
-        .cast("long") % k).cast("int"))
-
-  private def kmeansQuantizerImpl(corpus: DataFrame, k: Int, iters: Int,
-      seedCell: Column): DataFrame = {
+  def kmeansQuantizer(corpus: DataFrame, k: Int, iters: Int = 2): DataFrame = {
     def centroidsOf(assigned: DataFrame): DataFrame =
       centroidVectors(assigned.select(col("cell").as("label"),
         col("vec").as("embedding")))
         .select(col("clabel").as("cell"), col("cvec"))
     var assigned = corpus.select(col("vec_id"), col("vec"),
-      seedCell.as("cell"))
+      (conv(substring(md5(col("vec_id").cast("string")), 1, 15), 16, 10)
+        .cast("long") % k).cast("int").as("cell"))
     var centroids = centroidsOf(assigned)
     var i = 0
     while (i < iters) {
@@ -862,7 +831,7 @@ object Similarity {
     "q_sim_kmeans" -> ((s, dir) => {
       val corpus = T.embeddings(s, dir)
         .select(col("vec_id"), col("embedding").as("vec"))
-      kmeansQuantizerMd5(corpus, 8, 2)
+      kmeansQuantizer(corpus, 8, 2)
         .select(col("cell"), posexplode(col("cvec")).as(Seq("dim", "c")))
     }),
 
@@ -911,25 +880,25 @@ object Similarity {
       bruteForceTopK(probes, corpus, 5)
     }),
 
-    // L3b (no oracle — verified against brute force in SimilaritySpec):
-    // LSH-bucketed ANN with exact rerank.
+    // L3b (oracle hash-checked): single-probe LSH-bucketed ANN with exact
+    // rerank — each query reads only its own bucket in each table.
     "q_sim_ann" -> ((s, dir) => {
       val e = T.embeddings(s, dir)
       val probes = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       val corpus = e.select(col("vec_id"), col("embedding").as("vec"))
-      annTopK(probes, corpus, 5)
+      annTopK(probes, corpus, 5, multiProbe = false)
     }),
 
-    // L3b md5 twin (oracle hash-checked): the SAME multi-table multi-probe
-    // LSH ANN pipeline on md5-derived hyperplanes — buckets, probe keys,
-    // candidates, and the rounded rerank all re-derived by DuckDB.
+    // L3b multi-probe (oracle hash-checked): the same LSH ANN pipeline plus
+    // every 1-bit-flip neighbour bucket of each query — buckets, probe
+    // keys, candidates, and the rounded rerank all re-derived by DuckDB.
     "q_sim_ann_md5" -> ((s, dir) => {
       val e = T.embeddings(s, dir)
       val probes = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       val corpus = e.select(col("vec_id"), col("embedding").as("vec"))
-      annTopKMd5(probes, corpus, 5)
+      annTopK(probes, corpus, 5)
     }),
 
     // Embedding-cosine near-duplicate pairs among same-label vectors
@@ -1444,44 +1413,8 @@ object Similarity {
          |  FROM scoredq)
          |SELECT qid, rank, vec_id, approx FROM ranked WHERE rank <= 10
          |ORDER BY ALL NULLS FIRST""".stripMargin,
-    "q_sim_ann_md5" ->
-      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-         |tb AS (SELECT unnest(generate_series(0, 3)) AS t),
-         |buck AS (
-         |  SELECT e.vec_id, t.t,
-         |    CAST(list_sum(list_transform(generate_series(0, 7), p ->
-         |      CASE WHEN list_sum(list_transform(generate_series(1, 64), d ->
-         |          CAST(e.embedding[d] AS DOUBLE) *
-         |          (CAST(('0x' || substr(md5('plane|' || CAST(t.t * 8 + p AS VARCHAR) || '|' || CAST(d - 1 AS VARCHAR)), 1, 15)) AS BIGINT)
-         |            % 100000 / 100000.0 - 0.5))) >= 0
-         |        THEN (CAST(1 AS BIGINT) << p) ELSE 0 END)) AS BIGINT) AS bucket
-         |  FROM e CROSS JOIN tb t),
-         |qkeys AS (
-         |  SELECT vec_id AS qid, t * 256 + bucket AS tbk FROM buck WHERE vec_id < 5
-         |  UNION ALL
-         |  SELECT vec_id AS qid, t * 256 + xor(bucket, CAST(1 AS BIGINT) << f.b) AS tbk
-         |  FROM buck CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS b) f
-         |  WHERE vec_id < 5),
-         |ckeys AS (SELECT vec_id, t * 256 + bucket AS tbk FROM buck),
-         |cand AS (
-         |  SELECT DISTINCT q.qid, c.vec_id
-         |  FROM qkeys q JOIN ckeys c ON q.tbk = c.tbk
-         |  WHERE q.qid != c.vec_id),
-         |sims AS (
-         |  SELECT cand.qid, cand.vec_id,
-         |    round(list_sum(list_transform(generate_series(1, 64),
-         |        i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))) /
-         |      (sqrt(list_sum(list_transform(generate_series(1, 64),
-         |        i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)))) *
-         |       sqrt(list_sum(list_transform(generate_series(1, 64),
-         |        i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))))), 6) AS sim
-         |  FROM cand JOIN e a ON a.vec_id = cand.qid JOIN e b ON b.vec_id = cand.vec_id),
-         |ranked AS (
-         |  SELECT qid, vec_id, sim,
-         |    CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS INTEGER) AS rank
-         |  FROM sims)
-         |SELECT qid, rank, vec_id, sim FROM ranked WHERE rank <= 5
-         |ORDER BY ALL NULLS FIRST""".stripMargin,
+    "q_sim_ann" -> annSql(multiProbe = false),
+    "q_sim_ann_md5" -> annSql(multiProbe = true),
     "q_pq_codebooks" ->
       s"""WITH $pqBaseSql
          |SELECT CAST(sub AS INTEGER) AS sub, CAST(cell AS INTEGER) AS cell,
@@ -1569,20 +1502,20 @@ object Similarity {
         |  CAST(CASE WHEN score >= 0.5 THEN 1 ELSE 0 END AS INTEGER) AS keep
         |FROM scored ORDER BY ALL NULLS FIRST""".stripMargin,
     "q_sim_kmeans" ->
-      s"""WITH ${kmeansMd5Sql(8, 2)}
+      s"""WITH ${kmeansSql(8, 2)}
          |SELECT cell, CAST(dim - 1 AS INTEGER) AS dim, c
          |FROM m2 ORDER BY ALL NULLS FIRST""".stripMargin,
     // the persisted quantizer must hash-equal the from-scratch build —
     // byte-identical oracle to q_sim_kmeans, the q_dedup_index_pairs pattern
     "q_kmeans_build" ->
-      s"""WITH ${kmeansMd5Sql(8, 2)}
+      s"""WITH ${kmeansSql(8, 2)}
          |SELECT cell, CAST(dim - 1 AS INTEGER) AS dim, c
          |FROM m2 ORDER BY ALL NULLS FIRST""".stripMargin,
     // Unlabeled IVF search fully re-derived: the k-means chain above, the
     // corpus cell assignment against its final centroids, per-query
     // nprobe=3 probe set, and the exact cosine rerank within probed cells.
     "q_sim_ivf" ->
-      s"""WITH ${kmeansMd5Sql(8, 2)},
+      s"""WITH ${kmeansSql(8, 2)},
          |acell AS (
          |  SELECT vec_id, cell FROM (
          |    SELECT e.vec_id, c.cell,
@@ -1697,13 +1630,60 @@ object Similarity {
         |GROUP BY 1 ORDER BY ALL NULLS FIRST""".stripMargin
   )
 
-  /** Deterministic-k-means CTE chain mirroring [[kmeansQuantizerMd5]]:
+  /** [[annTopK]] at planes = 8, tables = 4, k = 5 for the first 5 vectors:
+    * md5 plane weights, buckets, probe keys (the query's own bucket in each
+    * table, plus every 1-bit flip of it when `multiProbe`), candidates, and
+    * the rounded rerank.
+    */
+  private def annSql(multiProbe: Boolean): String = {
+    val flips = if (!multiProbe) "" else
+      """
+        |  UNION ALL
+        |  SELECT vec_id AS qid, t * 256 + xor(bucket, CAST(1 AS BIGINT) << f.b) AS tbk
+        |  FROM buck CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS b) f
+        |  WHERE vec_id < 5"""
+    s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
+       |tb AS (SELECT unnest(generate_series(0, 3)) AS t),
+       |buck AS (
+       |  SELECT e.vec_id, t.t,
+       |    CAST(list_sum(list_transform(generate_series(0, 7), p ->
+       |      CASE WHEN list_sum(list_transform(generate_series(1, 64), d ->
+       |          CAST(e.embedding[d] AS DOUBLE) *
+       |          (CAST(('0x' || substr(md5('plane|' || CAST(t.t * 8 + p AS VARCHAR) || '|' || CAST(d - 1 AS VARCHAR)), 1, 15)) AS BIGINT)
+       |            % 100000 / 100000.0 - 0.5))) >= 0
+       |        THEN (CAST(1 AS BIGINT) << p) ELSE 0 END)) AS BIGINT) AS bucket
+       |  FROM e CROSS JOIN tb t),
+       |qkeys AS (
+       |  SELECT vec_id AS qid, t * 256 + bucket AS tbk FROM buck WHERE vec_id < 5$flips),
+       |ckeys AS (SELECT vec_id, t * 256 + bucket AS tbk FROM buck),
+       |cand AS (
+       |  SELECT DISTINCT q.qid, c.vec_id
+       |  FROM qkeys q JOIN ckeys c ON q.tbk = c.tbk
+       |  WHERE q.qid != c.vec_id),
+       |sims AS (
+       |  SELECT cand.qid, cand.vec_id,
+       |    round(list_sum(list_transform(generate_series(1, 64),
+       |        i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))) /
+       |      (sqrt(list_sum(list_transform(generate_series(1, 64),
+       |        i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)))) *
+       |       sqrt(list_sum(list_transform(generate_series(1, 64),
+       |        i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))))), 6) AS sim
+       |  FROM cand JOIN e a ON a.vec_id = cand.qid JOIN e b ON b.vec_id = cand.vec_id),
+       |ranked AS (
+       |  SELECT qid, vec_id, sim,
+       |    CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS INTEGER) AS rank
+       |  FROM sims)
+       |SELECT qid, rank, vec_id, sim FROM ranked WHERE rank <= 5
+       |ORDER BY ALL NULLS FIRST""".stripMargin
+  }
+
+  /** Deterministic-k-means CTE chain mirroring [[kmeansQuantizer]]:
     * seed cells from md5(vec_id) % k, then per round an argmax assignment
     * (rounded 64-dim cosine, cell tie-break) and an exact-integer-mean
     * update — the q_sim_centroids arithmetic iterated with the pqRefineSql
     * generation pattern. Ends at moment table m`iters` (cell, dim, c).
     */
-  private def kmeansMd5Sql(k: Int, iters: Int): String = {
+  private def kmeansSql(k: Int, iters: Int): String = {
     def moments(src: String, idx: Int): String =
       s"""ex$idx AS (
          |  SELECT cell, unnest(embedding) AS v, unnest(generate_series(1, 64)) AS dim

@@ -101,7 +101,7 @@ object VectorIndex {
         // codebooks — r6 left them fused into `q_sim_ivf`'s search query
         // (re-paying the 2-round Lloyd build per search); persisted, the
         // search touches only these two side tables.
-        Similarity.kmeansQuantizerMd5(corpus, 8, 2)
+        Similarity.kmeansQuantizer(corpus, 8, 2)
           .write.mode("overwrite").parquet(s"$vd/kmeans_cells")
         Similarity.assignCells(corpus, spark.read.parquet(s"$vd/kmeans_cells"))
           .select("vec_id", "cell")

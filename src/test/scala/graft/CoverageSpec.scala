@@ -1855,6 +1855,6 @@ class CoverageSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(qs.size >= 249, s"expected >= 249 declared queries, got ${qs.size}")
     assert(qs.diff(SparkEntry.oracleSql.keySet) === Set(
       "q_agg_percentile_approx", "q_dedup_chunks", "q_multimodal_features",
-      "q_multimodal_frames", "q_sim_ann"))
+      "q_multimodal_frames"))
   }
 }

@@ -257,6 +257,36 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.forall(x => math.abs(x.getDouble(1) - 1.0) < 1e-12))
     assert(r.forall(x => x.getLong(2) >= 0 && x.getLong(2) < 256))
     assert(r.forall(x => x.getLong(3) >= 0 && x.getLong(3) < 16))
+    // every bucket ≡ an independent md5 reference: plane weight
+    // w(gp, d) = (first 8 bytes of md5("plane|gp|d") >>> 4) % 100000 / 1e5
+    // - 0.5 with gp = table * planes + p; bit p is set iff the projection
+    // Σ_d v(d)·w(gp, d), summed in index order, is >= 0
+    def weight(gp: Int, d: Int): Double = {
+      val h = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"plane|$gp|$d".getBytes("UTF-8"))
+        .take(8).foldLeft(0L)((a, b) => (a << 8) | (b & 0xffL))
+      ((h >>> 4) % 100000L).toDouble / 100000.0 - 0.5
+    }
+    def reference(v: Seq[Float], planes: Int, table: Int): Long =
+      (0 until planes).foldLeft(0L) { (bucket, p) =>
+        val proj = v.indices.foldLeft(0.0)((acc, d) =>
+          acc + v(d).toDouble * weight(table * planes + p, d))
+        if (proj >= 0) bucket | (1L << p) else bucket
+      }
+    import spark.implicits._
+    import graft.syntax._
+    val buckets = spark.sql(
+      """SELECT embedding AS v, cosine_lsh_bucket(embedding) AS b8,
+        |  cosine_lsh_bucket(embedding, 4, 1) AS b4t1
+        |FROM emb_ext WHERE vec_id < 50""".stripMargin)
+      .withColumn("sugar", $"v".lshBucket(4, 1)).collect()
+    assert(buckets.length === 50)
+    buckets.foreach { x =>
+      val v = x.getSeq[Float](0)
+      assert(x.getLong(1) === reference(v, 8, 0))
+      assert(x.getLong(2) === reference(v, 4, 1))
+      assert(x.getLong(3) === x.getLong(2))
+    }
     // sq8_asym_sim: a self-comparison through an exact (span-0) "decode" —
     // codes all 0, mns = the vector itself — must give cosine 1
     val r2 = spark.sql(

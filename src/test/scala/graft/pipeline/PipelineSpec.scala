@@ -618,7 +618,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val e = T.embeddings(spark, sf)
     val corpus = e.select(col("vec_id"), col("embedding").as("vec"))
     // the parquet round trip is lossless: persisted centroids == fresh Lloyd
-    val fresh = Similarity.kmeansQuantizerMd5(corpus, 8, 2)
+    val fresh = Similarity.kmeansQuantizer(corpus, 8, 2)
     assert(rows(VectorIndex.kmeansCells(spark, sf)) === rows(fresh))
     // the persisted-path search (what q_sim_ivf now runs) returns exactly
     // what the r6 fused-path search did — the reroute changed the plan, not
