@@ -86,6 +86,7 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    JdkOpens.requireOrExit("graft.Bench")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()

@@ -16,6 +16,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
+    JdkOpens.requireOrExit("graft.PlanDump")
     require(args.length >= 2, "usage: PlanDump <outDir> <query>[,query...]")
     val outDir = args(0)
     val names = args.drop(1).flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)

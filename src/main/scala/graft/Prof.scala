@@ -47,6 +47,7 @@ object Prof {
   }
 
   def main(args: Array[String]): Unit = {
+    JdkOpens.requireOrExit("graft.Prof")
     require(args.length >= 2, "usage: Prof <outDir> <query>[,query...]")
     val outDir = args(0)
     val names = args.drop(1).flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)

@@ -44,6 +44,7 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
+    JdkOpens.requireOrExit("graft.ScaleProbe")
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/graft-sfprobe/sf1")
     val factor = args.lift(2).flatMap(_.toIntOption).getOrElse(10)

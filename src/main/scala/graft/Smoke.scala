@@ -7,6 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
+    JdkOpens.requireOrExit("graft.Smoke")
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    JdkOpens.requireOrExit("graft.Verify")
     val (sfDir, outDir) = (args(0), args(1))
     // Optional trailing query names restrict the run (local iteration only;
     // the driver always runs the full set).

@@ -3,12 +3,12 @@ package graft.xml
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.{FileFormat, OutputWriter, OutputWriterFactory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, LogicalRelation, OutputWriter, OutputWriterFactory, PartitionedFile}
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.util.{LongAccumulator, SerializableConfiguration}
 
 /** XML DataSource (SURVEY.md §2.1 S2–S5): `spark.read.format("graft.xml")`.
   *
@@ -37,17 +37,26 @@ import org.apache.spark.util.SerializableConfiguration
   *    and opens the whole file (`AvroFromXmlInputFormat.scala:49,52-58`), i.e.
   *    XML is treated as a non-splittable format; parallelism comes from many
   *    files (like spark-xml's multiline mode). `xml.splittable=true` lifts
-  *    this: byte-offset splits with separator-tag boundary scanning
-  *    ([[XmlSplitScanner]]), so one huge dump parallelizes too.
+  *    this: byte-offset splits, where a separator-tag boundary matcher in
+  *    front of the tokenizer picks each split's records (ownership rule in
+  *    [[XmlSplitScanner]]), so one huge dump parallelizes too.
   *  - schema derived ONCE on the driver by `inferSchema` and shipped to tasks
   *    inside the closure — fixes the reference's per-task XSD re-parse
   *    (`AvroTransormer.scala:26-43`, SURVEY.md §4.1).
   *  - `requiredSchema` (Catalyst's pruned projection) is handed straight to
-  *    the StAX parser, so unprojected XML subtrees are skipped, not built.
+  *    the record reader, so unprojected XML subtrees are skipped, not built.
+  *  - one byte-level UTF-8 tokenizer ([[XmlTokenizer]]) reads both paths:
+  *    the whole file, or a split's owned records in place in the file
+  *    buffer — no per-record copy and no parser per record.
+  *  - scan counters belong to the scan's own format instance (one per
+  *    `load()`); [[XmlFileFormat.counters]] finds them from the DataFrame.
   */
 class XmlFileFormat extends FileFormat with DataSourceRegister with Serializable {
 
   import XmlFileFormat._
+
+  /** This relation's scan counters, set when a scan of it is planned. */
+  @transient @volatile private var scanCounters: Option[XmlScanCounters] = None
 
   override def shortName(): String = "graft.xml"
 
@@ -87,10 +96,10 @@ class XmlFileFormat extends FileFormat with DataSourceRegister with Serializable
   }
 
   /** Non-splittable by default (reference parity — parallelism from many
-    * files). `xml.splittable=true` opts into byte-offset splits via
-    * [[XmlSplitScanner]]: each split parses only records whose start tag
-    * begins inside it, so one 50 GB dump fans out across executors instead
-    * of being one task at 100 TB.
+    * files). `xml.splittable=true` opts into byte-offset splits: each split
+    * parses only records whose start tag begins inside it (the ownership
+    * rule of [[XmlSplitScanner]]), so one 50 GB dump fans out across
+    * executors instead of being one task at 100 TB.
     */
   override def isSplitable(sparkSession: SparkSession,
       options: Map[String, String], path: Path): Boolean =
@@ -120,63 +129,40 @@ class XmlFileFormat extends FileFormat with DataSourceRegister with Serializable
       "graft.xml: malformed records dropped")
     val parsed = sparkSession.sparkContext.longAccumulator(
       "graft.xml: records parsed")
-    XmlFileFormat.lastDroppedCounter = Some(dropped)
-    XmlFileFormat.lastParsedCounter = Some(parsed)
+    scanCounters = Some(XmlScanCounters(dropped, parsed))
     val confBroadcast = sparkSession.sparkContext.broadcast(
       new SerializableConfiguration(hadoopConf))
     val splittable = boolOpt(options, "xml.splittable")
     (file: PartitionedFile) => {
       val path = file.toPath
-      val fs = path.getFileSystem(confBroadcast.value.value)
-      if (splittable) {
-        // Byte-offset split: seek to the split start, extract each record
-        // subtree as bytes, and parse the whole split with ONE streaming
-        // parser over the concatenated records under a synthetic root.
-        // (A parser per record — the obvious spelling — costs a StAX
-        // reader setup per record and measured SLOWER than the unsplit
-        // read at 4 splits; one parser per split restores the normal
-        // path's per-record cost, and the throughput spec now pins the
-        // >=1.5x multi-split speedup.)
-        val raw = fs.open(path)
-        if (file.start > 0) raw.seek(file.start)
-        val in = new java.io.BufferedInputStream(raw, 256 * 1024)
-        var wrapper = "graft-split-root"
-        while (wrapper == separatorTag) wrapper += "-x" // local-name collision guard
-        val scanner = new XmlSplitScanner(in, file.length, separatorTag)
-        val streams: Iterator[java.io.InputStream] =
-          Iterator(new java.io.ByteArrayInputStream(s"<$wrapper>".getBytes)) ++
-            scanner.map(rec => new java.io.ByteArrayInputStream(rec)) ++
-            Iterator(new java.io.ByteArrayInputStream(s"</$wrapper>".getBytes))
-        val joined = new java.io.SequenceInputStream(
-          scala.jdk.CollectionConverters.IteratorHasAsJava(streams).asJavaEnumeration)
-        new XmlRecordIterator(joined, requiredSchema, separatorTag,
-          dropMalformed, nsUri, () => dropped.add(1), () => parsed.add(1),
-          permissive, corruptCol)
-      } else {
-        // 256 KiB buffer: StAX pulls small chunks; unbuffered
-        // FSDataInputStream reads would hit the filesystem per chunk.
-        val in = new java.io.BufferedInputStream(fs.open(path), 256 * 1024)
-        new XmlRecordIterator(in, requiredSchema, separatorTag, dropMalformed,
-          nsUri, () => dropped.add(1), () => parsed.add(1), permissive,
-          corruptCol)
-      }
+      val in = path.getFileSystem(confBroadcast.value.value).open(path)
+      // The tokenizer reads 64 KiB chunks straight into its own buffer, so
+      // the stream needs no buffering layer. A split read seeks to its
+      // first byte; the boundary matcher in front of the tokenizer picks
+      // the records the split owns, parsed in place with no record copy.
+      val splitLength = if (splittable) file.length else -1L
+      if (splittable && file.start > 0) in.seek(file.start)
+      new XmlRecordIterator(in, requiredSchema, separatorTag, dropMalformed,
+        nsUri, () => dropped.add(1), () => parsed.add(1), permissive,
+        corruptCol, splitLength)
     }
   }
 }
 
 object XmlFileFormat {
 
-  /** Handle to the most recent scan's dropped-record accumulator — the
-    * programmatic twin of the Spark-UI named accumulator (FileFormat V1 has
+  /** The counters of the most recent scan of `df`'s XML relation — the
+    * programmatic twin of the Spark-UI named accumulators (FileFormat V1 has
     * no SQLMetric surface). Driver-side only; used by tests and ingest jobs
-    * that want the corruption count after an action.
+    * that want the corruption count after an action. Each `load()` makes
+    * its own format instance, so concurrent scans of different DataFrames
+    * keep their own counts. None before the first action.
     */
-  @volatile var lastDroppedCounter:
-      Option[org.apache.spark.util.LongAccumulator] = None
-
-  /** Same handle for the records-parsed progress counter. */
-  @volatile var lastParsedCounter:
-      Option[org.apache.spark.util.LongAccumulator] = None
+  def counters(df: DataFrame): Option[XmlScanCounters] =
+    df.queryExecution.analyzed.collect { case r: LogicalRelation => r.relation }
+      .collect { case h: HadoopFsRelation => h.fileFormat }
+      .collectFirst { case f: XmlFileFormat => f }
+      .flatMap(_.scanCounters)
 
   private def boolOpt(options: Map[String, String], key: String): Boolean =
     options.get(key).exists(_.equalsIgnoreCase("true"))
@@ -203,6 +189,11 @@ object XmlFileFormat {
       req("xml.separator.tag.type"))
   }
 }
+
+/** One scan's named accumulators: records dropped by DROPMALFORMED, and
+  * records parsed.
+  */
+final case class XmlScanCounters(dropped: LongAccumulator, parsed: LongAccumulator)
 
 /** Class-name hook so `spark.read.format("graft.xml")` resolves via the
   * `graft.xml.DefaultSource` convention (alongside the service-registry

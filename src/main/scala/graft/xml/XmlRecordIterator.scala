@@ -1,7 +1,7 @@
 package graft.xml
 
 import java.io.InputStream
-import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -13,15 +13,15 @@ import scala.collection.mutable
   *
   * Same record-assembly semantics as the reference's pull-parse loop
   * (`/root/reference/src/main/scala/com/github/xmlavrobridge/AvroTransormer.scala:77-170`),
-  * re-expressed over JDK StAX with a schema-directed (rather than
-  * path-map-directed) walk:
+  * re-expressed over the byte-level [[XmlTokenizer]] with a schema-directed
+  * (rather than path-map-directed) walk:
   *
   *  - a record = one subtree rooted at `separatorTag`; one record
   *    materialized per `next()` — O(record) memory (`:77-170`)
   *  - start/end tags matched by LOCAL name only; namespaces on the data side
   *    are ignored (`:106,143`)
-  *  - leaf text accumulated across character events and trimmed before
-  *    coercion (`:159-163,:98`)
+  *  - leaf text accumulated across text, CDATA and references and trimmed
+  *    before coercion (`:159-163,:98`)
   *  - coercion via `java.lang.*.valueOf` semantics, fail-fast on malformed
   *    numbers by default, matching the reference's no-NULL-on-corrupt
   *    behavior (`convert`, `:194-208`); `dropMalformed` opts into skipping
@@ -32,13 +32,19 @@ import scala.collection.mutable
   *    (`:155,164`)
   *  - `_Value` synthetic field receives the text of simpleContent elements
   *
+  * Leaves go from the tokenizer's byte slices straight to `UTF8String` or a
+  * number, with no `String` in between on the common path. Each struct of
+  * the schema gets one [[StructPlan]], built with the iterator: a byte-keyed
+  * field table, the per-field value kind and coercion, and the plans of its
+  * nested structs, so nothing is looked up by name or type per record.
+  *
   * Improvement over the reference (documented, not parity-locked): elements
   * absent from the supplied schema are skipped subtree-wise, which is what
   * makes Catalyst column pruning reach INSIDE the parser — `requiredSchema`
   * from the FileFormat drives this walk, so unprojected subtrees are never
   * materialized (SURVEY.md §4.1 "column pruning inside the XML parser").
-  */
-/** @param namespaceUri when set (reader option `xml.namespace.aware=true`),
+  *
+  * @param namespaceUri when set (reader option `xml.namespace.aware=true`),
   *   only elements whose namespace URI equals this value ("" = no namespace)
   *   match schema fields or the separator tag; same-local-name elements from
   *   other namespaces are skipped subtree-wise. Default `None` keeps the
@@ -58,108 +64,38 @@ import scala.collection.mutable
   *   that fail structurally still follow the dropMalformed/fail-fast rule.
   * @param corruptCol name of the corrupt-record column PERMISSIVE reports
   *   into (appended to the schema by the FileFormat).
+  * @param splitLength split read (`xml.splittable=true`): `input` starts at
+  *   a split's first byte, and only records whose start tag begins within
+  *   `splitLength` bytes of it are read (see [[XmlSplitScanner]] for the
+  *   ownership rule). Negative (the default) reads a whole document.
   */
-object XmlRecordIterator {
-  /** One StAX factory per thread: `XMLInputFactory.newInstance()` does a
-    * service-provider lookup, and the splittable scan creates one reader per
-    * RECORD — per-instance factories would dominate small-record parses.
-    * (XMLInputFactory is not specified thread-safe, hence ThreadLocal.)
-    */
-  private[xml] val factory: ThreadLocal[XMLInputFactory] =
-    ThreadLocal.withInitial { () =>
-      val f = XMLInputFactory.newInstance()
-      f.setProperty(XMLInputFactory.IS_COALESCING, java.lang.Boolean.TRUE)
-      f.setProperty(XMLInputFactory.SUPPORT_DTD, java.lang.Boolean.FALSE)
-      f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES,
-        java.lang.Boolean.FALSE)
-      f
-    }
-}
-
 final class XmlRecordIterator(input: InputStream, schema: StructType,
     separatorTag: String, dropMalformed: Boolean = false,
     namespaceUri: Option[String] = None,
     onDropped: () => Unit = () => (),
     onRecord: () => Unit = () => (),
     permissive: Boolean = false,
-    corruptCol: String = "_corrupt_record")
+    corruptCol: String = "_corrupt_record",
+    splitLength: Long = -1L)
     extends Iterator[InternalRow] {
+
+  import XmlTokenizer.{End, Eof, Start}
+  import StructPlan._
+
+  private val tok = new XmlTokenizer(input, fragment = splitLength >= 0)
+  private val plan = new StructPlan(schema)
+  private val sep = separatorTag.getBytes(UTF_8)
+  private val ns = namespaceUri.orNull
+  private val corruptIdx = {
+    val b = corruptCol.getBytes(UTF_8)
+    plan.lookup(b, 0, b.length)
+  }
 
   // per-record coercion-failure log (PERMISSIVE mode only)
   private var corruptMessages: java.lang.StringBuilder = _
 
-  private val reader: XMLStreamReader =
-    XmlRecordIterator.factory.get().createXMLStreamReader(input)
   private var nextRecord: InternalRow = _
   private var finished = false
-
-  // element depth, maintained on EVERY event pull so a malformed record can
-  // be skipped by unwinding to its parent depth (DROPMALFORMED mode).
-  private var depth = 0
-  private def nextEvent(): Int = {
-    val e = reader.next()
-    e match {
-      case XMLStreamConstants.START_ELEMENT => depth += 1
-      case XMLStreamConstants.END_ELEMENT => depth -= 1
-      case _ =>
-    }
-    e
-  }
-
-  // name→index maps per struct node, built once per distinct schema node
-  // (StructType.getFieldIndex is private[sql]).
-  private val indexCache =
-    new java.util.IdentityHashMap[StructType, java.util.HashMap[String, Integer]]
-  private def fieldIndex(st: StructType, name: String): Integer = {
-    var m = indexCache.get(st)
-    if (m == null) {
-      m = new java.util.HashMap[String, Integer]
-      var i = 0
-      while (i < st.length) { m.put(st(i).name, i); i += 1 }
-      indexCache.put(st, m)
-    }
-    m.get(name)
-  }
-
-  // Per-struct default-value tables (XSD default=/fixed=), precomputed so the
-  // per-record path never touches Metadata: attribute defaults fill ABSENT
-  // attributes; element defaults fill PRESENT-but-EMPTY leaf elements.
-  private val defaultsCache =
-    new java.util.IdentityHashMap[StructType, (Array[String], Array[String])]
-  private def defaults(st: StructType): (Array[String], Array[String]) = {
-    var d = defaultsCache.get(st)
-    if (d == null) {
-      val attr = new Array[String](st.length)
-      val elem = new Array[String](st.length)
-      var i = 0
-      while (i < st.length) {
-        val m = st(i).metadata
-        if (m.contains("xml.default.attr")) attr(i) = m.getString("xml.default.attr")
-        if (m.contains("xml.default.elem")) elem(i) = m.getString("xml.default.elem")
-        i += 1
-      }
-      d = (attr, elem)
-      defaultsCache.put(st, d)
-    }
-    d
-  }
-
-  /** True when the START_ELEMENT the reader is on carries xsi:nil="true"
-    * (namespace-checked — a no-namespace nil attribute is ordinary data).
-    */
-  private def isNil(): Boolean = {
-    var i = 0
-    while (i < reader.getAttributeCount) {
-      if (reader.getAttributeLocalName(i) == "nil" &&
-          reader.getAttributeNamespace(i) ==
-            "http://www.w3.org/2001/XMLSchema-instance") {
-        val v = reader.getAttributeValue(i)
-        return v == "true" || v == "1"
-      }
-      i += 1
-    }
-    false
-  }
 
   override def hasNext: Boolean = {
     if (nextRecord == null && !finished) advance()
@@ -171,200 +107,365 @@ final class XmlRecordIterator(input: InputStream, schema: StructType,
     val r = nextRecord; nextRecord = null; r
   }
 
-  /** True when the current START_ELEMENT's namespace passes the (optional)
+  /** True when the current START's namespace passes the (optional)
     * strict-namespace check.
     */
-  private def nsMatches(): Boolean = namespaceUri match {
-    case None => true
-    case Some(ns) => Option(reader.getNamespaceURI).getOrElse("") == ns
-  }
+  private def nsMatches(): Boolean = ns == null || tok.elementNamespace == ns
 
   private def advance(): Unit = {
-    while (reader.hasNext) {
-      if (nextEvent() == XMLStreamConstants.START_ELEMENT &&
-          reader.getLocalName == separatorTag && nsMatches()) {
-        val recordDepth = depth // depth of the separator element itself
+    while (true) {
+      if (splitLength >= 0 && tok.depth == 0) { // between the split's records
+        val at = tok.findRecordStart(sep)
+        if (at < 0 || at >= splitLength) { finish(); return }
+      }
+      val ev = tok.next(collect = false)
+      if (ev == Eof) { finish(); return }
+      if (ev == Start && tok.localIs(sep) && nsMatches()) {
+        val recordDepth = tok.depth // depth of the separator element itself
         try {
           corruptMessages = null
-          val row = parseStruct(schema)
-          if (permissive && corruptMessages != null) {
-            val idx = fieldIndex(schema, corruptCol)
-            if (idx != null) {
-              row.update(idx.intValue(),
-                UTF8String.fromString(corruptMessages.toString))
-            }
+          val row = parseStruct(plan)
+          if (permissive && corruptMessages != null && corruptIdx >= 0) {
+            row.update(corruptIdx, UTF8String.fromString(corruptMessages.toString))
           }
           nextRecord = row
           onRecord()
           return
         } catch {
-          case e: javax.xml.stream.XMLStreamException => throw e // stream dead
+          case e: XmlParseException => throw e // the stream itself is broken
           case e: Exception if dropMalformed =>
             onDropped()
             // unwind whatever is left of this record, then keep scanning
-            while (depth >= recordDepth && reader.hasNext) nextEvent()
+            while (tok.depth >= recordDepth) tok.next(collect = false)
         }
       }
     }
-    finished = true
-    reader.close()
-    input.close()
   }
 
-  /** Parse the struct whose START_ELEMENT the reader is positioned on. */
-  private def parseStruct(st: StructType): InternalRow = {
-    val values = new Array[Any](st.length)
-    var arrays: mutable.LongMap[mutable.ArrayBuffer[Any]] = null
-    val valueIdxBoxed = fieldIndex(st, "_Value")
-    val valueIdx = if (valueIdxBoxed == null) -1 else valueIdxBoxed.intValue()
-    var textBuf: java.lang.StringBuilder = null
+  private def finish(): Unit = {
+    finished = true
+    tok.close()
+  }
 
-    val (attrDefaults, elemDefaults) = defaults(st)
-
+  /** Parse the struct whose START the tokenizer is on, through its END. */
+  private def parseStruct(p: StructPlan): InternalRow = {
+    val values = new Array[Any](p.size)
     // Attributes present in the schema are set; unknown ones dropped (:180-188).
     var i = 0
-    while (i < reader.getAttributeCount) {
-      val idx = fieldIndex(st, reader.getAttributeLocalName(i))
-      if (idx != null) {
-        values(idx) = coerce(reader.getAttributeValue(i), st(idx).dataType,
-          st(idx).name)
+    while (i < tok.attrCount) {
+      val idx = p.lookup(tok.buf, tok.attrLocalStart(i), tok.attrLocalLength(i))
+      if (idx >= 0) {
+        tok.attrValue(i)
+        values(idx) = coerce(p, idx, p.fieldKind(idx), p.fieldType(idx),
+          tok.valueArr, tok.valueOff, tok.valueLen)
       }
       i += 1
     }
     // XSD attribute default/fixed: absent attributes take the declared value.
-    i = 0
-    while (i < st.length) {
-      if (attrDefaults(i) != null && values(i) == null) {
-        values(i) = coerce(attrDefaults(i), st(i).dataType, st(i).name)
+    if (p.attrDefaults != null) {
+      i = 0
+      while (i < p.size) {
+        val d = p.attrDefaults(i)
+        if (d != null && values(i) == null) {
+          values(i) = coerce(p, i, p.fieldKind(i), p.fieldType(i), d, 0, d.length)
+        }
+        i += 1
       }
-      i += 1
     }
 
-    var done = false
-    while (!done && reader.hasNext) {
-      nextEvent() match {
-        case XMLStreamConstants.START_ELEMENT =>
-          val idxBoxed =
-            if (nsMatches()) fieldIndex(st, reader.getLocalName) else null
-          if (idxBoxed == null) skipSubtree() // pruned, undeclared, or wrong ns
-          else if (isNil()) skipSubtree() // xsi:nil="true": explicit null
-          else {
-            val idx = idxBoxed.intValue()
-            st(idx).dataType match {
-              // xs:list leaf (maxOccurs=1): the element's TEXT is the whole
-              // array — whitespace-split in convert(). A repeated xs:list
-              // element (ArrayType of ArrayType) falls through to the
-              // repeated-element branch below, whose per-occurrence
-              // parseValue on the inner ArrayType splits the same way.
-              case at @ ArrayType(et, _)
-                  if st(idx).metadata.contains("xml.list") &&
-                    !et.isInstanceOf[ArrayType] =>
-                values(idx) = parseValue(at, st(idx).name, elemDefaults(idx))
-              case ArrayType(et, _) =>
-                if (arrays == null) arrays = mutable.LongMap()
-                val v = parseValue(et, st(idx).name, elemDefaults(idx))
-                // a PERMISSIVE-rescued element is logged but not appended
-                // (the array types are containsNull = false)
-                if (v != null) {
-                  arrays.getOrElseUpdate(idx.toLong, mutable.ArrayBuffer())
-                    .append(v)
-                }
-              case dt =>
-                values(idx) = parseValue(dt, st(idx).name, elemDefaults(idx))
-            }
-          }
-        case XMLStreamConstants.CHARACTERS | XMLStreamConstants.CDATA
-            if valueIdx >= 0 =>
-          if (textBuf == null) textBuf = new java.lang.StringBuilder
-          textBuf.append(reader.getText)
-        case XMLStreamConstants.END_ELEMENT => done = true
-        case _ => // other events ignored (parity with the reference's case _)
+    val valueIdx = p.valueIdx
+    val collect = valueIdx >= 0
+    var valueText: ByteBuilder = null // the element's own text, for _Value
+    var arrays: Array[mutable.ArrayBuffer[Any]] = null
+    if (collect) tok.text.clear()
+    var ev = tok.next(collect)
+    while (ev != End) {
+      if (collect && tok.text.length > 0) {
+        if (valueText == null) valueText = new ByteBuilder(tok.text.length)
+        valueText.append(tok.text.arr, 0, tok.text.length)
+      }
+      val idx = if (nsMatches()) p.lookup(tok.buf, tok.localStart, tok.localLength) else -1
+      if (idx < 0) tok.skipElement() // pruned, undeclared, or wrong ns
+      else if (tok.isNil) tok.skipElement() // xsi:nil="true": explicit null
+      else if (p.repeated(idx)) {
+        val v = parseValue(p, idx)
+        // a PERMISSIVE-rescued element is logged but not appended
+        // (the array types are containsNull = false)
+        if (v != null) {
+          if (arrays == null) arrays = new Array[mutable.ArrayBuffer[Any]](p.size)
+          if (arrays(idx) == null) arrays(idx) = mutable.ArrayBuffer[Any]()
+          arrays(idx) += v
+        }
+      } else values(idx) = parseValue(p, idx)
+      if (collect) tok.text.clear()
+      ev = tok.next(collect)
+    }
+    if (collect && tok.text.length > 0) {
+      if (valueText == null) valueText = new ByteBuilder(tok.text.length)
+      valueText.append(tok.text.arr, 0, tok.text.length)
+    }
+    if (arrays != null) {
+      i = 0
+      while (i < p.size) {
+        if (arrays(i) != null) values(i) = new GenericArrayData(arrays(i).toArray)
+        i += 1
       }
     }
-    if (arrays != null) arrays.foreach { case (idx, buf) =>
-      values(idx.toInt) = new GenericArrayData(buf.toArray)
-    }
-    if (valueIdx >= 0 && textBuf != null) {
-      values(valueIdx) = coerce(textBuf.toString, st(valueIdx).dataType, "_Value")
+    if (valueText != null) {
+      values(valueIdx) = coerce(p, valueIdx, p.fieldKind(valueIdx),
+        p.fieldType(valueIdx), valueText.arr, 0, valueText.length)
     }
     new GenericInternalRow(values)
   }
 
-  /** Parse one non-array value whose START_ELEMENT the reader is on.
-    * `default` (XSD default=/fixed= lexical form) replaces EMPTY leaf text.
+  /** Parse one element value of field `idx` (START already read): a nested
+    * struct, or leaf text, where the XSD default=/fixed= lexical form
+    * replaces EMPTY text.
     */
-  private def parseValue(dt: DataType, fieldName: String,
-      default: String = null): Any = dt match {
-    case st: StructType => parseStruct(st)
-    case primitive =>
-      val sb = new java.lang.StringBuilder
-      var done = false
-      while (!done && reader.hasNext) {
-        nextEvent() match {
-          case XMLStreamConstants.CHARACTERS | XMLStreamConstants.CDATA =>
-            sb.append(reader.getText)
-          case XMLStreamConstants.START_ELEMENT =>
-            skipSubtree() // mixed content: child elements inside a leaf dropped
-          case XMLStreamConstants.END_ELEMENT => done = true
-          case _ =>
-        }
-      }
-      val text = sb.toString
-      if (default != null && text.trim.isEmpty) coerce(default, primitive, fieldName)
-      else coerce(text, primitive, fieldName)
+  private def parseValue(p: StructPlan, idx: Int): Any = {
+    val child = p.child(idx)
+    if (child != null) parseStruct(child)
+    else {
+      tok.readLeaf()
+      val t = tok.text
+      val d = p.elemDefaults(idx)
+      if (d != null && isBlank(t.arr, 0, t.length)) {
+        coerce(p, idx, p.elemKind(idx), p.elemType(idx), d, 0, d.length)
+      } else coerce(p, idx, p.elemKind(idx), p.elemType(idx), t.arr, 0, t.length)
+    }
   }
 
   /** convert(), rescued to null + a corrupt-record note in PERMISSIVE mode.
     * Only leaf coercions are rescued — structural failures still follow the
     * fail-fast / DROPMALFORMED record rule.
     */
-  private def coerce(raw: String, dt: DataType, fieldName: String): Any =
-    if (!permissive) convert(raw, dt)
-    else try convert(raw, dt) catch {
+  private def coerce(p: StructPlan, idx: Int, kind: Int, dt: DataType,
+      b: Array[Byte], off: Int, len: Int): Any =
+    if (!permissive) convert(kind, dt, b, off, len)
+    else try convert(kind, dt, b, off, len) catch {
       case e: Exception =>
         if (corruptMessages == null) {
           corruptMessages = new java.lang.StringBuilder
         } else corruptMessages.append("; ")
-        corruptMessages.append(fieldName).append(": ").append(e.getMessage)
+        corruptMessages.append(p.names(idx)).append(": ").append(e.getMessage)
         null
     }
+}
 
-  private def skipSubtree(): Unit = {
-    var d = 1
-    while (d > 0 && reader.hasNext) {
-      nextEvent() match {
-        case XMLStreamConstants.START_ELEMENT => d += 1
-        case XMLStreamConstants.END_ELEMENT => d -= 1
-        case _ =>
-      }
+/** The read plan of one struct of the schema: everything the per-record
+  * walk needs, resolved once.
+  */
+private[xml] final class StructPlan(st: StructType) {
+  import StructPlan._
+
+  val size: Int = st.length
+  val names: Array[String] = st.fieldNames
+  private val nameBytes = names.map(_.getBytes(UTF_8))
+
+  // Open-addressing table: local-name bytes → field index. A repeated name
+  // resolves to its LAST field, as a name → index map built in order would.
+  private val mask = Integer.highestOneBit(math.max(size, 1) * 4) * 2 - 1
+  private val slots = Array.fill(mask + 1)(-1)
+  for (i <- 0 until size) {
+    val b = nameBytes(i)
+    var s = hash(b, 0, b.length) & mask
+    while (slots(s) >= 0 && !java.util.Arrays.equals(nameBytes(slots(s)), b)) s = (s + 1) & mask
+    slots(s) = i
+  }
+
+  /** Index of the field named `b[off, off+len)`, or -1. */
+  def lookup(b: Array[Byte], off: Int, len: Int): Int = {
+    var s = hash(b, off, len) & mask
+    while (true) {
+      val f = slots(s)
+      if (f < 0) return -1
+      val n = nameBytes(f)
+      if (XmlTokenizer.sameBytes(n, 0, n.length, b, off, len)) return f
+      s = (s + 1) & mask
+    }
+    -1
+  }
+
+  /** The field's whole type and kind: how an attribute or `_Value` reads. */
+  val fieldType: Array[DataType] = st.fields.map(_.dataType)
+  val fieldKind: Array[Int] = fieldType.map(kindOf)
+
+  /** One element occurrence: xs:list leaves (ArrayType with `xml.list`,
+    * maxOccurs=1) read their whole text as the array; any other ArrayType
+    * is a repeated element of its element type.
+    */
+  val repeated: Array[Boolean] = st.fields.map {
+    case f @ StructField(_, ArrayType(et, _), _, _) =>
+      !(f.metadata.contains("xml.list") && !et.isInstanceOf[ArrayType])
+    case _ => false
+  }
+  val elemType: Array[DataType] = st.fields.indices.map { i =>
+    (fieldType(i), repeated(i)) match {
+      case (ArrayType(et, _), true) => et
+      case (dt, _) => dt
+    }
+  }.toArray
+  val elemKind: Array[Int] = elemType.map(kindOf)
+  val child: Array[StructPlan] = elemType.map {
+    case s: StructType => new StructPlan(s)
+    case _ => null
+  }
+
+  // XSD default=/fixed=: attribute defaults fill ABSENT attributes; element
+  // defaults fill PRESENT-but-EMPTY leaf elements.
+  private def defaultsOf(key: String): Array[Array[Byte]] = {
+    val d = st.fields.map(f =>
+      if (f.metadata.contains(key)) f.metadata.getString(key).getBytes(UTF_8) else null)
+    if (d.exists(_ != null)) d else null
+  }
+  val attrDefaults: Array[Array[Byte]] = defaultsOf("xml.default.attr")
+  val elemDefaults: Array[Array[Byte]] =
+    Option(defaultsOf("xml.default.elem")).getOrElse(new Array[Array[Byte]](size))
+
+  val valueIdx: Int = lookup(ValueBytes, 0, ValueBytes.length)
+}
+
+private[xml] object StructPlan {
+  private val ValueBytes = "_Value".getBytes(UTF_8)
+
+  final val KString = 0
+  final val KInt = 1
+  final val KLong = 2
+  final val KFloat = 3
+  final val KDouble = 4
+  final val KBoolean = 5
+  final val KDecimal = 6
+  final val KBinary = 7
+  final val KList = 8
+  final val KOther = 9
+
+  def kindOf(dt: DataType): Int = dt match {
+    case StringType => KString
+    case IntegerType => KInt
+    case LongType => KLong
+    case FloatType => KFloat
+    case DoubleType => KDouble
+    case BooleanType => KBoolean
+    case _: DecimalType => KDecimal
+    case BinaryType => KBinary
+    case _: ArrayType => KList
+    case _ => KOther
+  }
+
+  private def hash(b: Array[Byte], off: Int, len: Int): Int = {
+    var h = len
+    var i = off
+    while (i < off + len) { h = h * 31 + b(i); i += 1 }
+    h ^ (h >>> 15)
+  }
+
+  private def isSpace(c: Byte): Boolean = c >= 0 && c <= 0x20
+
+  /** Only whitespace (String.trim's notion: chars <= U+0020). */
+  def isBlank(b: Array[Byte], off: Int, len: Int): Boolean = {
+    var i = off
+    while (i < off + len) { if (!isSpace(b(i))) return false; i += 1 }
+    true
+  }
+
+  private def str(b: Array[Byte], s: Int, e: Int): String = new String(b, s, e - s, UTF_8)
+
+  /** Trim-then-valueOf coercion, fail-fast (AvroTransormer.scala:194-208),
+    * of the UTF-8 text `b[off, off+len)`. Trimming drops bytes <= 0x20,
+    * which in UTF-8 are exactly the chars String.trim drops.
+    */
+  def convert(kind: Int, dt: DataType, b: Array[Byte], off: Int, len: Int): Any = {
+    var s = off
+    var e = off + len
+    while (s < e && isSpace(b(s))) s += 1
+    while (e > s && isSpace(b(e - 1))) e -= 1
+    (kind: @annotation.switch) match {
+      case KString => UTF8String.fromBytes(java.util.Arrays.copyOfRange(b, s, e))
+      case KInt =>
+        val v = digits(b, s, e, 9)
+        if (v != Long.MinValue) v.toInt else java.lang.Integer.parseInt(str(b, s, e))
+      case KLong =>
+        val v = digits(b, s, e, 18)
+        if (v != Long.MinValue) v else java.lang.Long.parseLong(str(b, s, e))
+      case KFloat => java.lang.Float.parseFloat(str(b, s, e))
+      case KDouble =>
+        val v = decimal(b, s, e)
+        if (!java.lang.Double.isNaN(v)) v else java.lang.Double.parseDouble(str(b, s, e))
+      case KBoolean =>
+        // XSD's boolean lexical space is {true, false, 1, 0}; plain
+        // parseBoolean (reference behavior) silently reads "1" as false.
+        if (e - s == 1 && b(s) == '1') java.lang.Boolean.TRUE
+        else if (e - s == 1 && b(s) == '0') java.lang.Boolean.FALSE
+        else java.lang.Boolean.parseBoolean(str(b, s, e))
+      case KDecimal => // xml.decimal.as.decimal / xs:unsignedLong
+        val d = dt.asInstanceOf[DecimalType]
+        Decimal(new java.math.BigDecimal(str(b, s, e)), d.precision, d.scale)
+      case KBinary => // xs:base64Binary (MIME decoder tolerates line wraps)
+        java.util.Base64.getMimeDecoder.decode(java.util.Arrays.copyOfRange(b, s, e))
+      case KList => // xs:list: whitespace-separated item lexical forms
+        val et = dt.asInstanceOf[ArrayType].elementType
+        val ek = kindOf(et)
+        val items = mutable.ArrayBuffer[Any]()
+        var i = s
+        while (i < e) {
+          val t = i
+          while (i < e && !isSpace(b(i))) i += 1
+          items += convert(ek, et, b, t, i - t)
+          while (i < e && isSpace(b(i))) i += 1
+        }
+        new GenericArrayData(items.toArray)
+      case _ => throw new IllegalArgumentException(
+        s"unsupported leaf type in XML schema: $dt")
     }
   }
 
-  /** Trim-then-valueOf coercion, fail-fast (AvroTransormer.scala:194-208). */
-  private def convert(raw: String, dt: DataType): Any = {
-    val s = raw.trim
-    dt match {
-      case StringType => UTF8String.fromString(s)
-      case IntegerType => java.lang.Integer.parseInt(s)
-      case LongType => java.lang.Long.parseLong(s)
-      case FloatType => java.lang.Float.parseFloat(s)
-      case DoubleType => java.lang.Double.parseDouble(s)
-      case BooleanType =>
-        // XSD's boolean lexical space is {true, false, 1, 0}; plain
-        // parseBoolean (reference behavior) silently reads "1" as false.
-        if (s == "1") java.lang.Boolean.TRUE
-        else if (s == "0") java.lang.Boolean.FALSE
-        else java.lang.Boolean.parseBoolean(s)
-      case dt: DecimalType => // xml.decimal.as.decimal / xs:unsignedLong
-        Decimal(new java.math.BigDecimal(s), dt.precision, dt.scale)
-      case BinaryType => // xs:base64Binary (MIME decoder tolerates line wraps)
-        java.util.Base64.getMimeDecoder.decode(s)
-      case ArrayType(et, _) => // xs:list: space-separated item lexical forms
-        if (s.isEmpty) new GenericArrayData(Array.empty[Any])
-        else new GenericArrayData(
-          s.split("\\s+").map(tok => convert(tok, et)).toArray[Any])
-      case other => throw new IllegalArgumentException(
-        s"unsupported leaf type in XML schema: $other")
+  private val Pow10 = Array.tabulate(16)(i => math.pow(10, i))
+
+  /** `[+-]?[0-9]+(.[0-9]+)?` with at most 15 digits, as a Double; NaN for
+    * anything else (the caller falls back to the JDK parser). Exact: the
+    * digits and the power of ten are both exact doubles, and one IEEE
+    * division rounds correctly (the fast path of every correct parser).
+    */
+  private def decimal(b: Array[Byte], s: Int, e: Int): Double = {
+    var i = s
+    val neg = i < e && b(i) == '-'
+    if (i < e && (b(i) == '-' || b(i) == '+')) i += 1
+    var m = 0L
+    var nd = 0 // digits
+    var frac = -1 // digits after the point, once seen
+    while (i < e) {
+      val c = b(i)
+      if (c == '.' && frac < 0 && nd > 0) frac = 0
+      else {
+        val d = c - '0'
+        if (d < 0 || d > 9) return Double.NaN
+        m = m * 10 + d
+        nd += 1
+        if (frac >= 0) frac += 1
+      }
+      i += 1
     }
+    if (nd == 0 || nd > 15 || frac == 0) return Double.NaN
+    val v = if (frac > 0) m / Pow10(frac) else m.toDouble
+    if (neg) -v else v
+  }
+
+  /** `[+-]?[0-9]{1,maxDigits}` as a Long; Long.MinValue when the text is
+    * anything else, so the caller falls back to the JDK parser (and its
+    * exact error message).
+    */
+  private def digits(b: Array[Byte], s: Int, e: Int, maxDigits: Int): Long = {
+    var i = s
+    val neg = i < e && b(i) == '-'
+    if (i < e && (b(i) == '-' || b(i) == '+')) i += 1
+    if (i == e || e - i > maxDigits) return Long.MinValue
+    var v = 0L
+    while (i < e) {
+      val d = b(i) - '0'
+      if (d < 0 || d > 9) return Long.MinValue
+      v = v * 10 + d
+      i += 1
+    }
+    if (neg) -v else v
   }
 }

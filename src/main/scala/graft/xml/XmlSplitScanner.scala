@@ -1,41 +1,49 @@
 package graft.xml
 
 import java.io.InputStream
+import java.nio.charset.StandardCharsets.UTF_8
 
-/** Byte-level record-boundary scanner for the splittable XML read path
-  * (reader option `xml.splittable=true`, SURVEY.md §7 "splittable scan").
+/** Record boundaries of one byte-offset split (reader option
+  * `xml.splittable=true`, SURVEY.md §7 "splittable scan"), as raw bytes.
   *
   * The reference treats XML as non-splittable — its InputFormat ignores the
   * split offsets and opens the whole file
   * (`/root/reference/src/main/scala/com/github/xmlavrobridge/AvroFromXmlInputFormat.scala:49,52-58`),
-  * so one 50 GB dump is one task. This scanner implements the known fix
-  * (the Hadoop `XmlInputFormat` / spark-xml approach): each split scans
-  * forward from its start offset for the first separator start tag, then
-  * yields one complete separator-element subtree (as raw bytes) per
-  * `next()`, stopping at the first record whose START tag lies at or beyond
-  * the split end. A record that straddles the split end is finished by
-  * reading past the boundary; the next split skips it because its start tag
-  * precedes that split's range — every record is owned by exactly one split.
+  * so one 50 GB dump is one task. The known fix (Hadoop's `XmlInputFormat`,
+  * Spark's `XmlRecordReader`): each split scans forward from its start
+  * offset for the first separator start tag and owns every record whose
+  * START tag begins inside it. A record that straddles the split end is
+  * finished by reading past the boundary; the next split skips it because
+  * its start tag precedes that split's range — every record is owned by
+  * exactly one split.
   *
-  * Robustness handled at the byte level (each a real-world XML hazard):
-  *  - `>` inside quoted attribute values (legal XML) — quote-aware tag scan
+  * The boundary matcher is [[XmlTokenizer.findRecordStart]], which the split
+  * read of [[XmlRecordIterator]] runs in front of the same tokenizer that
+  * parses the records, straight from the file buffer. This iterator is the
+  * thin byte-copying layer over that matcher, for callers that want each
+  * owned record's bytes.
+  *
+  * Byte-level hazards handled:
+  *  - `>` inside quoted attribute values (legal XML): a start tag is read
+  *    quote-aware only when it is the separator's, to see if it self-closes;
+  *    `<` cannot occur in an attribute value, so no other tag needs it
   *  - nested elements with the separator's own name — depth counting
   *  - comments / CDATA / processing instructions containing `<sep>` lookalike
-  *    text — skipped (outside records) or copied verbatim (inside)
+  *    text — skipped whole (outside records) or copied verbatim (inside)
   *  - namespace-prefixed separator tags — matched on local name, like the
   *    record parser (`AvroTransormer.scala:106,143` parity)
   *
   * Constraints (documented, standard for byte-offset XML splitting):
-  *  - UTF-8 (or ASCII-compatible) encoding — tag scanning is byte-oriented,
-  *    safe in UTF-8 because multi-byte sequences never contain ASCII bytes
-  *  - the separator tag name must be ASCII
-  *  - records must be namespace-self-contained if `xml.namespace.aware` is
-  *    on (a record subtree is parsed standalone, so prefixes declared only
-  *    on ancestors of the separator element are not visible)
+  *  - UTF-8 (or ASCII) input — no encoding is sniffed mid-file; byte
+  *    matching is safe in UTF-8 because multi-byte sequences never contain
+  *    ASCII bytes
+  *  - records must be namespace-self-contained: a split read parses each
+  *    record without its ancestors, so a prefix declared only on an
+  *    ancestor of the separator element is unbound there (an error)
   *  - a split that BEGINS inside a comment or CDATA section whose text
   *    contains separator-tag lookalikes can mis-detect a record start —
   *    the inherent blind spot of byte-offset XML splitting (shared by
-  *    Hadoop's XmlInputFormat and spark-xml): the scanner cannot know it
+  *    Hadoop's XmlInputFormat and spark-xml): the matcher cannot know it
   *    woke up inside such a section without reading from the file start.
   *    Splits that begin OUTSIDE them skip/copy these sections atomically
   *    (tested). Keep `xml.splittable` off for files whose comments/CDATA
@@ -54,21 +62,17 @@ import java.io.InputStream
 final class XmlSplitScanner(in: InputStream, splitLength: Long,
     separatorTag: String) extends Iterator[Array[Byte]] {
 
-  private var pos = 0L // bytes consumed since the split start
+  private val tok = new XmlTokenizer(in, fragment = true)
+  private val sep = separatorTag.getBytes(UTF_8)
   private var nextRec: Array[Byte] = _
   private var finished = false
 
-  // Unsynchronized read buffer: the scanner touches every byte once, and
-  // per-byte InputStream.read() calls (synchronized in BufferedInputStream)
-  // measured the split path at ~13 MB/s/task vs the StAX path's ~50 MB/s —
-  // slower in aggregate than not splitting at all. Chunked refills + local
-  // index restore byte-scan speed.
-  private val rbuf = new Array[Byte](64 * 1024)
-  private var rlen = 0
-  private var rpos = 0
-
   override def hasNext: Boolean = {
-    if (nextRec == null && !finished) advance()
+    if (nextRec == null && !finished) {
+      val at = tok.findRecordStart(sep)
+      if (at < 0 || at >= splitLength) { finished = true; tok.close() }
+      else nextRec = tok.copyRecord(sep)
+    }
     nextRec != null
   }
 
@@ -76,226 +80,4 @@ final class XmlSplitScanner(in: InputStream, splitLength: Long,
     if (!hasNext) throw new NoSuchElementException("end of split")
     val r = nextRec; nextRec = null; r
   }
-
-  private def readByte(): Int = {
-    if (rpos == rlen) {
-      rlen = in.read(rbuf)
-      rpos = 0
-      if (rlen <= 0) { rlen = 0; return -1 }
-    }
-    pos += 1
-    val b = rbuf(rpos) & 0xff
-    rpos += 1
-    b
-  }
-
-  private def finish(): Unit = { finished = true; in.close() }
-
-  /** Consume bytes up to (and including) the next '<', bulk-copying the
-    * run into `out` when non-null ('<' itself is NOT copied). Returns '<',
-    * or -1 at EOF. Text content is most of a record's bytes — copying it
-    * per-byte through the generic readByte/write pair was the remaining 2×
-    * against the StAX path.
-    */
-  private def copyUntilLt(out: ByteBuilder): Int = {
-    val LT: Byte = '<'
-    while (true) {
-      if (rpos == rlen) {
-        rlen = in.read(rbuf)
-        rpos = 0
-        if (rlen <= 0) { rlen = 0; return -1 }
-      }
-      var i = rpos
-      while (i < rlen && rbuf(i) != LT) i += 1
-      if (out != null && i > rpos) out.write(rbuf, rpos, i - rpos)
-      pos += i - rpos
-      rpos = i
-      if (i < rlen) { rpos += 1; pos += 1; return '<' }
-    }
-    -1
-  }
-
-  /** Scan for the next record start tag; on success fill `nextRec`. */
-  private def advance(): Unit = {
-    while (!finished) {
-      // scan to the next '<'
-      var b = copyUntilLt(null)
-      if (b < 0) { finish(); return }
-      val tagStart = pos - 1 // offset of '<'
-      b = readByte()
-      if (b < 0) { finish(); return }
-      b match {
-        case '!' => skipBang(null)
-        case '?' => skipUntil("?>".getBytes, null)
-        case '/' => skipClosing(null) // ancestor close outside any record
-        case _ =>
-          val probe = new ByteBuilder(64)
-          probe.write('<')
-          val (local, selfClosing) = readElementTag(b, probe)
-          if (local == separatorTag) {
-            if (tagStart >= splitLength) { finish(); return } // next split's
-            val rec = probe // tag bytes already captured
-            if (!selfClosing) captureRecordBody(rec)
-            nextRec = rec.toByteArray
-            return
-          }
-        // non-separator element outside a record: discarded, keep scanning
-      }
-    }
-  }
-
-  /** Copy everything through the separator element's matching close tag into
-    * `out` (start tag bytes already written). Depth counts same-local-name
-    * elements only — the only tags that can close the record.
-    */
-  private def captureRecordBody(out: ByteBuilder): Unit = {
-    var depth = 1
-    while (depth > 0) {
-      var b = copyUntilLt(out)
-      if (b < 0) throw new IllegalStateException(
-        s"unexpected EOF inside <$separatorTag> record (malformed XML)")
-      out.write('<')
-      b = readByte()
-      if (b < 0) throw new IllegalStateException("unexpected EOF after '<'")
-      b match {
-        case '!' => skipBang(out)
-        case '?' => out.write(b); skipUntil("?>".getBytes, out)
-        case '/' =>
-          out.write(b)
-          if (skipClosing(out) == separatorTag) depth -= 1
-        case _ =>
-          val (local, selfClosing) = readElementTag(b, out)
-          if (local == separatorTag && !selfClosing) depth += 1
-      }
-    }
-  }
-
-  /** After `<` and the first name byte `b0`: consume through the tag's `>`
-    * (quote-aware — attribute values may contain `>`), appending every byte
-    * including `b0` and the final `>` to `out`. Returns (local name,
-    * self-closing?).
-    */
-  private def readElementTag(b0: Int,
-      out: ByteBuilder): (String, Boolean) = {
-    val name = new java.lang.StringBuilder
-    var b = b0
-    while (b >= 0 && b != '>' && b != '/' && !isSpace(b)) {
-      name.append(b.toChar); out.write(b); b = readByte()
-    }
-    var quote = 0
-    var prev = 0
-    while (b >= 0) {
-      out.write(b)
-      if (quote == 0) {
-        if (b == '>') {
-          val n = name.toString
-          return (n.substring(n.lastIndexOf(':') + 1), prev == '/')
-        }
-        if (b == '"' || b == '\'') quote = b
-      } else if (b == quote) quote = 0
-      prev = b
-      b = readByte()
-    }
-    throw new IllegalStateException("unexpected EOF inside a tag")
-  }
-
-  /** After `</`: consume through `>`; returns the closing tag's local name.
-    * Bytes are appended to `out` when non-null.
-    */
-  private def skipClosing(out: ByteBuilder): String = {
-    val name = new java.lang.StringBuilder
-    var b = readByte()
-    while (b >= 0 && b != '>') {
-      if (!isSpace(b)) name.append(b.toChar)
-      if (out != null) out.write(b)
-      b = readByte()
-    }
-    if (b < 0) throw new IllegalStateException("unexpected EOF in closing tag")
-    if (out != null) out.write(b)
-    val n = name.toString
-    n.substring(n.lastIndexOf(':') + 1)
-  }
-
-  /** After `<!`: comment (`<!--` … `-->`), CDATA (`<![CDATA[` … `]]>`), or
-    * a DOCTYPE-ish declaration (through `>`, tracking `[` … `]` nesting).
-    * When `out` is non-null the construct is copied verbatim (it is inside a
-    * record); otherwise discarded. The leading `!` is (re)emitted here.
-    */
-  private def skipBang(out: ByteBuilder): Unit = {
-    if (out != null) out.write('!')
-    val b1 = readByte()
-    if (b1 < 0) throw new IllegalStateException("unexpected EOF after '<!'")
-    if (out != null) out.write(b1)
-    if (b1 == '-') { // <!--
-      val b2 = readByte()
-      if (out != null && b2 >= 0) out.write(b2)
-      skipUntil("-->".getBytes, out)
-    } else if (b1 == '[') { // <![CDATA[
-      skipUntil("]]>".getBytes, out)
-    } else { // <!DOCTYPE ... > possibly with an internal [ ... ] subset
-      var brackets = 0
-      var b = readByte()
-      while (b >= 0 && !(b == '>' && brackets == 0)) {
-        if (b == '[') brackets += 1
-        if (b == ']') brackets -= 1
-        if (out != null) out.write(b)
-        b = readByte()
-      }
-      if (b < 0) throw new IllegalStateException("unexpected EOF in <!...>")
-      if (out != null) out.write(b)
-    }
-  }
-
-  /** Consume through the first occurrence of `seq`, copying to `out` when
-    * non-null (the matched terminator included).
-    */
-  private def skipUntil(seq: Array[Byte], out: ByteBuilder): Unit = {
-    // Rolling window over the last |seq| bytes (a naive reset-on-mismatch
-    // matcher misses overlapping candidates, e.g. "]]>" inside "]]]>").
-    val k = seq.length
-    val tail = new Array[Int](k)
-    var n = 0L
-    while (true) {
-      val b = readByte()
-      if (b < 0) throw new IllegalStateException(
-        s"unexpected EOF scanning for '${new String(seq)}'")
-      if (out != null) out.write(b)
-      tail((n % k).toInt) = b
-      n += 1
-      if (n >= k) {
-        var i = 0
-        var ok = true
-        while (ok && i < k) {
-          if (tail(((n - k + i) % k).toInt) != (seq(i) & 0xff)) ok = false
-          i += 1
-        }
-        if (ok) return
-      }
-    }
-  }
-
-  private def isSpace(b: Int): Boolean =
-    b == ' ' || b == '\t' || b == '\n' || b == '\r'
-}
-
-/** Unsynchronized growable byte buffer — ByteArrayOutputStream's per-byte
-  * `write` is synchronized, which at byte-scan rates (every record byte goes
-  * through it) was half of the split path's 4× per-byte slowdown.
-  */
-private[xml] final class ByteBuilder(initial: Int) {
-  private var arr = new Array[Byte](math.max(initial, 16))
-  private var n = 0
-  def write(b: Int): Unit = {
-    if (n == arr.length) arr = java.util.Arrays.copyOf(arr, arr.length << 1)
-    arr(n) = b.toByte
-    n += 1
-  }
-  def write(src: Array[Byte], off: Int, len: Int): Unit = {
-    var cap = arr.length
-    while (n + len > cap) cap <<= 1
-    if (cap != arr.length) arr = java.util.Arrays.copyOf(arr, cap)
-    System.arraycopy(src, off, arr, n, len)
-    n += len
-  }
-  def toByteArray: Array[Byte] = java.util.Arrays.copyOf(arr, n)
 }

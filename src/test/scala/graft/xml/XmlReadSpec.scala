@@ -207,8 +207,43 @@ class XmlReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(0).getString(1) === "ok" && rows(1).isNullAt(1))
     // both dropped records are counted, not silently discarded, and the
     // progress counter reports the survivors
-    assert(XmlFileFormat.lastDroppedCounter.map(_.value) === Some(2L))
-    assert(XmlFileFormat.lastParsedCounter.map(_.value) === Some(2L))
+    assert(XmlFileFormat.counters(df).map(_.dropped.value) === Some(2L))
+    assert(XmlFileFormat.counters(df).map(_.parsed.value) === Some(2L))
+  }
+
+  test("two concurrent scans each keep their own counters") {
+    def table(name: String, good: Int, bad: Int) = {
+      val dir = java.nio.file.Files.createTempDirectory(s"xmlcount-$name").toFile
+      val schemaDir = new java.io.File(dir, "schema"); schemaDir.mkdirs()
+      val dataDir = new java.io.File(dir, "data"); dataDir.mkdirs()
+      java.nio.file.Files.writeString(new java.io.File(schemaDir, "s.xsd").toPath,
+        """<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
+          |  <xs:complexType name="rType">
+          |    <xs:sequence><xs:element type="xs:int" name="n"/></xs:sequence>
+          |  </xs:complexType>
+          |</xs:schema>""".stripMargin)
+      val recs = (1 to good).map(i => s"<r><n>$i</n></r>") ++
+        (1 to bad).map(i => s"<r><n>bad$i</n></r>")
+      java.nio.file.Files.writeString(new java.io.File(dataDir, "d.xml").toPath,
+        recs.mkString("<root>", "", "</root>"))
+      spark.read.format("graft.xml")
+        .option("xml.schema.location", schemaDir.getAbsolutePath)
+        .option("xml.separator.tag", "r")
+        .option("xml.separator.tag.type", "rType")
+        .option("mode", "DROPMALFORMED")
+        .load(dataDir.getAbsolutePath)
+    }
+    val a = table("a", good = 3, bad = 1)
+    val b = table("b", good = 5, bad = 4)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val runs = Seq(Future(a.collect().length), Future(b.collect().length))
+    assert(runs.map(Await.result(_, 5.minutes)) === Seq(3, 5))
+    def counts(df: org.apache.spark.sql.DataFrame) =
+      XmlFileFormat.counters(df).map(c => (c.dropped.value, c.parsed.value))
+    assert(counts(a) === Some((1L, 3L)))
+    assert(counts(b) === Some((4L, 5L)))
   }
 
   test("CDATA sections and comments inside leaves are handled") {

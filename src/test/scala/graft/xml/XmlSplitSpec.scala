@@ -3,6 +3,7 @@ package graft.xml
 import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -40,6 +41,22 @@ class XmlSplitSpec extends AnyFunSuite with BeforeAndAfterAll {
       |""".stripMargin
   private val bytes = doc.getBytes(UTF_8)
 
+  // The every-boundary document: the hazards a boundary can land inside of
+  // and still be resolved, with CR LF, lone CR and 1- to 4-byte UTF-8 text.
+  private val everyByteDoc =
+    """<?xml version="1.0"?>
+      |<!-- plain header comment -->
+      |<root>
+      |  <rec id="1"><name>alpha</name><v>10</v></rec>
+      |  <skipme><rec-not-really/></skipme>
+      |  <rec id="2" note="a &gt; b and a > b"><name>beta café € 😀{CRLF}line two{CR}three</name><v>20</v></rec>{CR}
+      |  <!-- a comment between records -->
+      |  <rec id="3"><name><![CDATA[gamma raw text]]></name><v>30</v></rec>
+      |  <rec id="5"/>
+      |  <ns:rec id="6" xmlns:ns="urn:x"><name>zeta</name><v>60</v></ns:rec>
+      |</root>
+      |""".stripMargin.replace("{CRLF}", "\r\n").replace("{CR}", "\r").getBytes(UTF_8)
+
   /** Scan the whole byte range as one split. */
   private def scanAll(data: Array[Byte], sep: String): Seq[String] =
     new XmlSplitScanner(new ByteArrayInputStream(data), data.length, sep)
@@ -63,19 +80,7 @@ class XmlSplitSpec extends AnyFunSuite with BeforeAndAfterAll {
     // INSIDE comments/CDATA, and NESTED separator elements — a boundary
     // landing inside either cannot be resolved without global context. All
     // other constructs must partition cleanly at EVERY byte boundary.
-    val d =
-      """<?xml version="1.0"?>
-        |<!-- plain header comment -->
-        |<root>
-        |  <rec id="1"><name>alpha</name><v>10</v></rec>
-        |  <skipme><rec-not-really/></skipme>
-        |  <rec id="2" note="a &gt; b and a > b"><name>beta</name><v>20</v></rec>
-        |  <!-- a comment between records -->
-        |  <rec id="3"><name><![CDATA[gamma raw text]]></name><v>30</v></rec>
-        |  <rec id="5"/>
-        |  <ns:rec id="6" xmlns:ns="urn:x"><name>zeta</name><v>60</v></ns:rec>
-        |</root>
-        |""".stripMargin.getBytes(UTF_8)
+    val d = everyByteDoc
     val whole = scanAll(d, "rec")
     assert(whole.length === 5)
     // For EVERY possible 2-way split point, the two splits together must
@@ -89,6 +94,30 @@ class XmlSplitSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(new String(_, UTF_8)).toSeq
       assert(s1 ++ s2 === whole, s"split at byte $cut lost or duplicated records")
     }
+  }
+
+  test("split read: every split boundary gives the unsplit rows") {
+    // The same partition property through the record reader's split mode,
+    // which runs the boundary matcher in front of the tokenizer in place.
+    val d = everyByteDoc
+    val schema = StructType(Seq(StructField("id", StringType),
+      StructField("name", StringType), StructField("v", IntegerType)))
+    def rows(data: Array[Byte], splitLength: Long): Seq[String] =
+      new XmlRecordIterator(new ByteArrayInputStream(data), schema, "rec",
+        splitLength = splitLength).map(_.toSeq(schema).mkString("|")).toList
+    val whole = new XmlRecordIterator(new ByteArrayInputStream(d), schema, "rec")
+      .map(_.toSeq(schema).mkString("|")).toList
+    assert(whole.length === 5)
+    assert(whole(1) === "2|beta café € 😀\nline two\nthree|20")
+    (1 until d.length).foreach { cut =>
+      val got = rows(d, cut) ++ rows(d.drop(cut), d.length - cut)
+      assert(got === whole, s"split at byte $cut lost or duplicated records")
+    }
+    // and with the input arriving 1-7 bytes per read (records copied
+    // across many buffer refills)
+    val trickled = new XmlSplitScanner(new XmlDifferentialSpec.Trickle(d, 3), d.length, "rec")
+      .map(new String(_, UTF_8)).toSeq
+    assert(trickled === scanAll(d, "rec"))
   }
 
   test("scanner: unexpected EOF inside a record is a clear error") {
