@@ -27,11 +27,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape (100 TB): stages 1–2 and 5 are per-row expressions — no
   * shuffle, applied BEFORE anything wide so the expensive stages see only
-  * survivors. Stage 3 is one hash-shuffle on a 128-bit key with map-side
-  * combine. Stage 4 materializes the stage-3 survivors ONCE, together with
-  * their shingle hashes and signature (one md5 per shingle): that job is
-  * the only one that reads the input and runs the gates and the stage-3
-  * shuffle. The banded-LSH pipeline (one exchange on the small band key,
+  * survivors. Stages 1–2 and stage 3's key are native byte passes over the
+  * text ([[graft.functions.TextScan]]), so the gate filter stays in
+  * whole-stage codegen. Stage 3 is one hash-shuffle on a 128-bit key with
+  * map-side combine. Stage 4 materializes the stage-3 survivors ONCE,
+  * together with their shingle hashes and signature (one md5 per shingle):
+  * that job is the only one that reads the input and runs the gates and
+  * the stage-3 shuffle. The banded-LSH pipeline (one exchange on the small band key,
   * candidates ~n·bands — never n²) and the half-width anti-join on doc_id
   * both read the materialization. Total: three narrow shuffles over
   * ever-shrinking survivor sets, each run once.
@@ -45,23 +47,26 @@ import org.apache.spark.sql.functions._
 object Curation {
 
   /** Stage 1: keep docs whose PREDICTED language (stopword-hits argmax over
-    * the tiny built-in lists) is `keep` — the labeled `lang` column is not
-    * consulted, mirroring a real crawl where labels don't exist.
+    * the tiny built-in lists, [[TextAnalysis.langId]] — one native byte pass
+    * per doc) is `keep` — the labeled `lang` column is not consulted,
+    * mirroring a real crawl where labels don't exist.
     */
   def stageLang(docs: DataFrame, keep: String = "en"): DataFrame =
     docs.filter(TextAnalysis.langId(col("text")) === keep)
 
   /** Stage 2: Gopher-style repetition/length gate on normalized whitespace
-    * tokens. The ratio is rounded to 6 places BEFORE the threshold compare
-    * so the oracle's double arithmetic can't flip a boundary doc.
+    * tokens (`toks = split(normText(text), ' ')`): `size(toks) >= minTokens
+    * && round(size(array_distinct(toks)) / size(toks), 6) >= minUniqRatio`.
+    * The ratio is rounded to 6 places BEFORE the threshold compare so the
+    * oracle's double arithmetic can't flip a boundary doc. One native byte
+    * pass ([[graft.functions.TextScan.qualityGate]]) counts the tokens and
+    * the distinct ones; spelled with `split`/`array_distinct`, the three
+    * uses of `toks` each re-ran the regex normalization.
     */
   def stageQuality(docs: DataFrame, minTokens: Int = 5,
-      minUniqRatio: Double = 0.3): DataFrame = {
-    val toks = split(Dedup.normText(col("text")), " ")
-    docs.filter(size(toks) >= minTokens &&
-      round(size(array_distinct(toks)).cast("double") /
-        size(toks).cast("double"), 6) >= minUniqRatio)
-  }
+      minUniqRatio: Double = 0.3): DataFrame =
+    docs.filter(graft.functions.TextScan.qualityGate(col("text"), minTokens,
+      minUniqRatio))
 
   /** Stage 3: exact dedup keyed on md5(normalized text) — fixed-width
     * shuffle key, min_by keeps the smallest doc_id's whole row (hash agg

@@ -24,9 +24,11 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
   */
 object Dedup {
 
-  /** Normalized text: lowercase, collapse whitespace, trim. */
-  def normText(c: Column): Column =
-    trim(regexp_replace(lower(c), "\\s+", " "))
+  /** Normalized text: lowercase, collapse whitespace, trim —
+    * `trim(regexp_replace(lower(c), '\s+', ' '))`, computed as Spark's
+    * `lower` then one byte pass ([[graft.functions.TextScan.normText]]).
+    */
+  def normText(c: Column): Column = graft.functions.TextScan.normText(c)
 
   /** Distinct word n-gram shingles (default 3-word) of normalized text.
     *
@@ -35,6 +37,9 @@ object Dedup {
     * concat_ws(" ", slice(ws, i+1, n))))` — but HOF lambdas are interpreted
     * per element (~40µs each; 8.6 s over sf0.1 documents), so the shipped
     * implementation is the one-pass native [[graft.functions.ShingleStrings]].
+    * Its words are Java's `toLowerCase(ROOT).trim.split("\\s+")` (not
+    * [[normText]]'s Spark `lower`), cut by the byte scanner that also
+    * digests the hashed set `hv` ([[graft.functions.TextScan.shingleHashes]]).
     */
   def shingles(c: Column, n: Int = 3): Column =
     graft.functions.TextHashes.shingleStrings(c, n)
@@ -874,7 +879,7 @@ object Dedup {
       // this declared demo's point)
       val d = graft.Ckpt(T.documents(s, dir)
         .select(col("doc_id"), col("source"),
-          graft.functions.TextHashes.md5Hash60Array(shingles(col("text"))).as("sh")))
+          graft.functions.TextScan.shingleHashes(col("text")).as("sh")))
       val x = d.select(col("source"), col("doc_id").as("doc_a"),
         col("sh").as("sh_a"), size(col("sh")).cast("long").as("sz_a"))
       val y = d.select(col("source"), col("doc_id").as("doc_b"),

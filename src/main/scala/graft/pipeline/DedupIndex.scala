@@ -49,26 +49,35 @@ object DedupIndex {
     */
   private[graft] def withSignatures(df: DataFrame, textCol: String,
       k: Int = 8): DataFrame = {
-    import graft.functions.TextHashes.{md5Hash60Array, minHashSigMd5Hashed, shingleStrings}
-    df.withColumn("hv", md5Hash60Array(shingleStrings(col(textCol))))
+    import graft.functions.TextHashes.minHashSigMd5Hashed
+    df.withColumn("hv",
+        graft.functions.TextScan.shingleHashes(col(textCol), ShingleWidth))
       .withColumn("sig", minHashSigMd5Hashed(col("hv"), k))
   }
 
-  /** Per-document signature rows (doc, hv, sig) of [[withSignatures]].
-    * Shingle-less documents are filtered out BEFORE hashing: a filter on
+  /** Keeps the rows of `textCol` that have a shingle: at least as many
+    * words as the shingle width, counted by the scanner that builds `hv`
+    * (`shingle_strings` is empty exactly below that count). A filter on
     * `hv` itself would be pushed below the projection that computes it and
-    * digest every shingle twice. The price is that `shingle_strings` runs
-    * twice per document (once for the filter, once for `hv`); a caller
-    * that materializes the signed rows anyway drops shingle-less rows after
-    * the checkpoint instead ([[components]]).
+    * digest every shingle twice; the word count is one byte pass with no
+    * shingle and no digest, so each document is shingled and hashed once.
+    */
+  private[graft] def withShingles(df: DataFrame, textCol: String): DataFrame =
+    df.filter(graft.functions.TextScan.wordCount(col(textCol)) >= ShingleWidth)
+
+  /** The shingle width of every signature ([[withSignatures]]). */
+  private val ShingleWidth = 3
+
+  /** Per-document signature rows (doc, hv, sig) of [[withSignatures]].
+    * Shingle-less documents are filtered out BEFORE hashing
+    * ([[withShingles]]); a caller that materializes the signed rows anyway
+    * may drop them after the checkpoint instead ([[components]]).
     */
   def signatures(docs: DataFrame, textCol: String, idCol: String,
-      k: Int = 8): DataFrame = {
-    import graft.functions.TextHashes.shingleStrings
-    withSignatures(docs.select(col(idCol).as("doc"), col(textCol).as("text"))
-        .filter(size(shingleStrings(col("text"))) > 0), "text", k)
-      .select("doc", "hv", "sig")
-  }
+      k: Int = 8): DataFrame =
+    withSignatures(withShingles(
+        docs.select(col(idCol).as("doc"), col(textCol).as("text")), "text"),
+      "text", k).select("doc", "hv", "sig")
 
   /** The band-key format, in ONE place: `bands` ','-joined slices of a
     * k-row signature. Every producer of (band, bsig) keys — [[banded]],

@@ -7,9 +7,11 @@ import org.apache.spark.sql.functions._
 
 /** Text analysis for training-data pipelines (SURVEY.md §2.10 L4 + north
   * star): token counting, quality scoring, n-gram language ID, document
-  * fingerprinting. Everything is built from codegen'd Catalyst expressions
-  * (split/regexp/higher-order fns) — per-row, embarrassingly parallel, no
-  * shuffle except the final aggregates; safe at 100 TB.
+  * fingerprinting. Everything is per-row Catalyst expressions — Spark's
+  * own split/slice/array fns plus the byte-pass natives of
+  * [[graft.functions.TextScan]] (normalization, language ID, shingle
+  * hashes) — embarrassingly parallel, no shuffle except the final
+  * aggregates; safe at 100 TB.
   */
 object TextAnalysis {
   import Dedup.{normText, shingles}
@@ -25,20 +27,16 @@ object TextAnalysis {
     "de" -> Seq("der", "die", "das", "und", "ist", "nicht", "ein", "mit", "zu", "auf"),
     "fr" -> Seq("le", "la", "les", "et", "est", "un", "une", "dans", "pour", "que"))
 
-  /** Count of tokens that appear in `list` (duplicates counted). */
-  def hitCount(toks: Column, list: Seq[String]): Column =
-    size(filter(toks, t => array_contains(lit(list.toArray), t)))
-
-  /** Predicted language: argmax of stopword hits; ties break to the
-    * lexicographically greatest code (struct max) — deterministic.
+  /** Predicted language: argmax of stopword hits over [[tokens]]
+    * (duplicates counted); ties break to the lexicographically greatest
+    * code, as the struct max `array_max(array(struct(hits, code)...)).code`
+    * does — deterministic. One native byte pass
+    * ([[graft.functions.TextScan.langId]]): the per-list `filter(toks, t ->
+    * array_contains(list, t))` lambdas kept the gate out of whole-stage
+    * codegen.
     */
-  def langId(c: Column): Column = {
-    val toks = tokens(c)
-    val scored = array(stopwords.toSeq.sortBy(_._1).map { case (code, list) =>
-      struct(hitCount(toks, list).as("hits"), lit(code).as("code"))
-    }: _*)
-    array_max(scored).getField("code")
-  }
+  def langId(c: Column): Column =
+    graft.functions.TextScan.langId(c, stopwords.toSeq)
 
   /** Bottom-k document fingerprint: the k smallest 60-bit md5 shingle
     * hashes (a deterministic min-wise sketch; two docs share shingles iff
@@ -46,8 +44,7 @@ object TextAnalysis {
     * are interpreted per element.
     */
   def fingerprint(c: Column, k: Int = 8): Column = {
-    import graft.functions.TextHashes.{md5Hash60Array, shingleStrings}
-    slice(array_sort(md5Hash60Array(shingleStrings(c))), 1, k)
+    slice(array_sort(graft.functions.TextScan.shingleHashes(c)), 1, k)
   }
 
   /** Corpus-trained bigram language-model quality score (the CCNet/

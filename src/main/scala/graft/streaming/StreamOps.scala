@@ -102,11 +102,9 @@ object StreamOps {
     val spark = docs.sparkSession
     import spark.implicits._
     import graft.pipeline.DedupIndex
-    // shingle-less docs are dropped before hashing (see DedupIndex.signatures)
-    DedupIndex.withSignatures(docs
-        .withWatermark(tsCol, "10 minutes")
-        .filter(size(graft.functions.TextHashes.shingleStrings(col(textCol))) > 0),
-        textCol, k)
+    // shingle-less docs are dropped before hashing (see DedupIndex.withShingles)
+    DedupIndex.withSignatures(DedupIndex.withShingles(
+        docs.withWatermark(tsCol, "10 minutes"), textCol), textCol, k)
       .select(col("doc_id").cast("long"), col(tsCol),
         posexplode(DedupIndex.bandKeys(col("sig"), k, bands))
           .as(Seq("__band", "__bsig")))
@@ -168,12 +166,11 @@ object StreamOps {
       textCol: String = "text", idCol: String = "doc_id",
       tsCol: String = "ts", k: Int = 8,
       bands: Int = 4, threshold: Double = 0.5): DataFrame = {
-    import graft.functions.TextHashes.{jaccardLong, shingleStrings}
+    import graft.functions.TextHashes.jaccardLong
     import graft.pipeline.DedupIndex
-    // shingle-less docs are dropped before hashing (see DedupIndex.signatures)
-    DedupIndex.withSignatures(docs
-        .withWatermark(tsCol, "10 minutes")
-        .filter(size(shingleStrings(col(textCol))) > 0), textCol, k)
+    // shingle-less docs are dropped before hashing (see DedupIndex.withShingles)
+    DedupIndex.withSignatures(DedupIndex.withShingles(
+        docs.withWatermark(tsCol, "10 minutes"), textCol), textCol, k)
       .select(col(idCol).as("doc_new"), col(tsCol), col("hv").as("hv_b"),
         posexplode(DedupIndex.bandKeys(col("sig"), k, bands))
           .as(Seq("band", "bsig")))
@@ -554,11 +551,9 @@ object StreamOps {
       tsCol: String = "ts", windowLen: String = "10 minutes"): DataFrame = {
     import graft.functions.TextHashes.jaccardLong
     import graft.pipeline.{Bpe, Dedup, DedupIndex, TextAnalysis}
-    val toks = split(Dedup.normText(col("text")), " ")
     val gated = docs.withWatermark(tsCol, "10 minutes")
-      .filter(size(toks) >= minTokens &&
-        round(size(array_distinct(toks)).cast("double") /
-          size(toks).cast("double"), 6) >= minUniqRatio)
+      .filter(graft.functions.TextScan.qualityGate(col("text"), minTokens,
+        minUniqRatio))
       .withColumn("h", md5(Dedup.normText(col("text"))))
     val hashHits = corpusHashes.select(col("h")).distinct()
       .withColumn("__hit", lit(1))

@@ -297,6 +297,50 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"document text must not be a shuffle key:\n$p")
   }
 
+  test("curate gates: no regexp_replace, no lambda; the gate filter runs in codegen") {
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, RegExpReplace}
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    import graft.pipeline.Curation
+    val gated = Curation.stageExact(
+      Curation.stageQuality(Curation.stageLang(Tables.documents(spark, sf))))
+    val opt = gated.queryExecution.optimizedPlan
+    val conds = opt.collect { case f: Filter => f.condition }
+    assert(conds.nonEmpty, s"expected the gate filter:\n$opt")
+    conds.foreach { c =>
+      assert(!c.toString.contains("regexp_replace") &&
+        !c.toString.toLowerCase.contains("lambdafunction"),
+        s"gate filter spells the regex or a lambda:\n$c")
+    }
+    // the exact stage's md5(normText) key too: no regex anywhere in the chain
+    val slow = opt.collect { case p => p.expressions }.flatten.exists(_.find(e =>
+      e.isInstanceOf[RegExpReplace] || e.isInstanceOf[LambdaFunction]).isDefined)
+    assert(!slow, s"regex or lambda left in the gate+exact plan:\n$opt")
+    gated.collect()
+    val p = gated.queryExecution.executedPlan.toString
+    assert(p.linesIterator.exists(l => l.contains("*(") && l.contains("Filter")),
+      s"the gate filter fell out of whole-stage codegen:\n$p")
+  }
+
+  test("near-dup signatures: one shingle-hash expression, no shingle_strings") {
+    import org.apache.spark.sql.DataFrame
+    import graft.functions.{ShingleHash60, ShingleStrings}
+    import graft.pipeline.DedupIndex
+    def count(df: DataFrame, f: org.apache.spark.sql.catalyst.expressions.Expression => Boolean): Int =
+      df.queryExecution.optimizedPlan.collect { case p =>
+        p.expressions.map(_.collect { case e if f(e) => e }.size).sum
+      }.sum
+    val docs = Tables.documents(spark, sf)
+    for ((name, df) <- Seq(
+        "withSignatures" -> DedupIndex.withSignatures(docs, "text"),
+        "signatures" -> DedupIndex.signatures(docs, "text", "doc_id"))) {
+      val opt = df.queryExecution.optimizedPlan
+      assert(count(df, _.isInstanceOf[ShingleHash60]) == 1,
+        s"$name: expected one shingle-hash expression:\n$opt")
+      assert(count(df, _.isInstanceOf[ShingleStrings]) == 0,
+        s"$name: shingle_strings left in the plan:\n$opt")
+    }
+  }
+
   test("guardrail: every declared demo names a real query") {
     // The demo set gates the scale probe (`@demos` expansion in Bench's
     // SKIP) — a typo'd name would silently re-admit a quadratic demo to

@@ -76,7 +76,7 @@ class XmlThroughputSpec extends AnyFunSuite with BeforeAndAfterAll {
       f"pruned scan should not be slower: $prunedSecs%.2f vs $fullSecs%.2f")
   }
 
-  test("splittable scan: 4 splits on ONE file beat the single-split read >= 1.5x") {
+  test("splittable scan: 4 splits on ONE file beat the single split >= 1.3x") {
     // E25's scale claim as a measured number: a lone multi-GB XML file must
     // not serialize onto one core when xml.splittable=true is on. Ratio of
     // two timings under the same load — more robust than an absolute floor.
