@@ -45,6 +45,9 @@ import org.apache.spark.util.{LongAccumulator, SerializableConfiguration}
   *    (`AvroTransormer.scala:26-43`, SURVEY.md §4.1).
   *  - `requiredSchema` (Catalyst's pruned projection) is handed straight to
   *    the record reader, so unprojected XML subtrees are skipped, not built.
+  *  - the record reader writes each record straight into an `UnsafeRow`;
+  *    with no partition columns those rows are the scan's output, with no
+  *    safe→unsafe projection (and no per-task code generation for one).
   *  - one byte-level UTF-8 tokenizer ([[XmlTokenizer]]) reads both paths:
   *    the whole file, or a split's owned records in place in the file
   *    buffer — no per-record copy and no parser per record.
@@ -104,6 +107,23 @@ class XmlFileFormat extends FileFormat with DataSourceRegister with Serializable
   override def isSplitable(sparkSession: SparkSession,
       options: Map[String, String], path: Path): Boolean =
     boolOpt(options, "xml.splittable")
+
+  /** The reader's rows are already `UnsafeRow`s of `requiredSchema`, so a
+    * table with no partition columns takes them as they are. Spark's default
+    * would copy each one through a generated safe-to-unsafe projection,
+    * generated again in every task. Partition columns still go through
+    * Spark's join and projection.
+    */
+  override def buildReaderWithPartitionValues(sparkSession: SparkSession,
+      dataSchema: StructType, partitionSchema: StructType,
+      requiredSchema: StructType, filters: Seq[Filter],
+      options: Map[String, String],
+      hadoopConf: Configuration): PartitionedFile => Iterator[InternalRow] =
+    if (partitionSchema.isEmpty) {
+      buildReader(sparkSession, dataSchema, partitionSchema, requiredSchema,
+        filters, options, hadoopConf)
+    } else super.buildReaderWithPartitionValues(sparkSession, dataSchema,
+      partitionSchema, requiredSchema, filters, options, hadoopConf)
 
   override protected def buildReader(sparkSession: SparkSession,
       dataSchema: StructType, partitionSchema: StructType,

@@ -3,13 +3,9 @@ package graft.xml
 import java.io.InputStream
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-import scala.collection.mutable
 
-/** Streaming XML → `InternalRow` record reader (SURVEY.md §2.1 S2).
+/** Streaming XML → `UnsafeRow` record reader (SURVEY.md §2.1 S2).
   *
   * Same record-assembly semantics as the reference's pull-parse loop
   * (`/root/reference/src/main/scala/com/github/xmlavrobridge/AvroTransormer.scala:77-170`),
@@ -32,11 +28,16 @@ import scala.collection.mutable
   *    (`:155,164`)
   *  - `_Value` synthetic field receives the text of simpleContent elements
   *
-  * Leaves go from the tokenizer's byte slices straight to `UTF8String` or a
-  * number, with no `String` in between on the common path. Each struct of
-  * the schema gets one [[StructPlan]], built with the iterator: a byte-keyed
-  * field table, the per-field value kind and coercion, and the plans of its
-  * nested structs, so nothing is looked up by name or type per record.
+  * Rows are Spark's `UnsafeRow`s, one independent row (its own exact-size
+  * `byte[]`) per record, so callers may keep them (`.toList`) and the scan
+  * hands them to Spark with no projection. Leaves go from the tokenizer's
+  * byte slices into a reused [[RowBuffer]]: numbers as slot bits, with no
+  * boxing and no `String` on the common path; text and bytes copied once.
+  * At the record's END the buffer writes the row in Spark's canonical
+  * layout. Each struct of the schema gets one [[StructPlan]], built with the
+  * iterator: a byte-keyed field table, the per-field value kind, coercion
+  * and row layout, and the plans of its nested structs, so nothing is looked
+  * up by name or type per record.
   *
   * Improvement over the reference (documented, not parity-locked): elements
   * absent from the supplied schema are skipped subtree-wise, which is what
@@ -84,6 +85,7 @@ final class XmlRecordIterator(input: InputStream, schema: StructType,
 
   private val tok = new XmlTokenizer(input, fragment = splitLength >= 0)
   private val plan = new StructPlan(schema)
+  private val rows = new RowBuffer(tok.text)
   private val sep = separatorTag.getBytes(UTF_8)
   private val ns = namespaceUri.orNull
   private val corruptIdx = {
@@ -123,12 +125,14 @@ final class XmlRecordIterator(input: InputStream, schema: StructType,
       if (ev == Start && tok.localIs(sep) && nsMatches()) {
         val recordDepth = tok.depth // depth of the separator element itself
         try {
+          rows.reset()
           corruptMessages = null
-          val row = parseStruct(plan)
+          val node = parseStruct(plan)
           if (permissive && corruptMessages != null && corruptIdx >= 0) {
-            row.update(corruptIdx, UTF8String.fromString(corruptMessages.toString))
+            val m = corruptMessages.toString.getBytes(UTF_8)
+            rows.setBytes(node + corruptIdx, m, 0, m.length)
           }
-          nextRecord = row
+          nextRecord = rows.toRow(plan, node)
           onRecord()
           return
         } catch {
@@ -147,17 +151,23 @@ final class XmlRecordIterator(input: InputStream, schema: StructType,
     tok.close()
   }
 
-  /** Parse the struct whose START the tokenizer is on, through its END. */
-  private def parseStruct(p: StructPlan): InternalRow = {
-    val values = new Array[Any](p.size)
+  /** Parse the struct whose START the tokenizer is on, through its END,
+    * into a fresh node of [[rows]]; returns the node.
+    */
+  private def parseStruct(p: StructPlan): Int = {
+    val node = rows.alloc(p.size)
     // Attributes present in the schema are set; unknown ones dropped (:180-188).
+    // The schema lists a type's attributes after its elements, so with k
+    // attributes on the tag the first is most likely field size - k.
     var i = 0
+    var hint = p.size - tok.attrCount
     while (i < tok.attrCount) {
-      val idx = p.lookup(tok.buf, tok.attrLocalStart(i), tok.attrLocalLength(i))
+      val idx = p.lookupNext(hint, tok.buf, tok.attrLocalStart(i), tok.attrLocalLength(i))
       if (idx >= 0) {
+        hint = idx + 1
         tok.attrValue(i)
-        values(idx) = coerce(p, idx, p.fieldKind(idx), p.fieldType(idx),
-          tok.valueArr, tok.valueOff, tok.valueLen)
+        coerce(p, idx, p.fieldKind(idx), p.fieldType(idx),
+          tok.valueArr, tok.valueOff, tok.valueLen, node + idx)
       }
       i += 1
     }
@@ -166,8 +176,8 @@ final class XmlRecordIterator(input: InputStream, schema: StructType,
       i = 0
       while (i < p.size) {
         val d = p.attrDefaults(i)
-        if (d != null && values(i) == null) {
-          values(i) = coerce(p, i, p.fieldKind(i), p.fieldType(i), d, 0, d.length)
+        if (d != null && rows.isNull(node + i)) {
+          coerce(p, i, p.fieldKind(i), p.fieldType(i), d, 0, d.length, node + i)
         }
         i += 1
       }
@@ -176,80 +186,148 @@ final class XmlRecordIterator(input: InputStream, schema: StructType,
     val valueIdx = p.valueIdx
     val collect = valueIdx >= 0
     var valueText: ByteBuilder = null // the element's own text, for _Value
-    var arrays: Array[mutable.ArrayBuffer[Any]] = null
-    if (collect) tok.text.clear()
+    var repeatedSeen = false
+    hint = 0 // the element expected next
+    val t = tok.text
+    var mark = t.length // the element's own text is appended from here
     var ev = tok.next(collect)
     while (ev != End) {
-      if (collect && tok.text.length > 0) {
-        if (valueText == null) valueText = new ByteBuilder(tok.text.length)
-        valueText.append(tok.text.arr, 0, tok.text.length)
+      if (collect && t.length > mark) {
+        if (valueText == null) valueText = new ByteBuilder(t.length - mark)
+        valueText.append(t.arr, mark, t.length - mark)
       }
-      val idx = if (nsMatches()) p.lookup(tok.buf, tok.localStart, tok.localLength) else -1
+      val idx =
+        if (nsMatches()) p.lookupNext(hint, tok.buf, tok.localStart, tok.localLength) else -1
+      if (idx >= 0) hint = if (p.repeated(idx)) idx else idx + 1
       if (idx < 0) tok.skipElement() // pruned, undeclared, or wrong ns
       else if (tok.isNil) tok.skipElement() // xsi:nil="true": explicit null
       else if (p.repeated(idx)) {
-        val v = parseValue(p, idx)
         // a PERMISSIVE-rescued element is logged but not appended
         // (the array types are containsNull = false)
-        if (v != null) {
-          if (arrays == null) arrays = new Array[mutable.ArrayBuffer[Any]](p.size)
-          if (arrays(idx) == null) arrays(idx) = mutable.ArrayBuffer[Any]()
-          arrays(idx) += v
-        }
-      } else values(idx) = parseValue(p, idx)
-      if (collect) tok.text.clear()
+        val x = rows.alloc(1)
+        if (parseValue(p, idx, x)) { rows.append(node + idx, x); repeatedSeen = true }
+      } else parseValue(p, idx, node + idx)
+      mark = t.length
       ev = tok.next(collect)
     }
-    if (collect && tok.text.length > 0) {
-      if (valueText == null) valueText = new ByteBuilder(tok.text.length)
-      valueText.append(tok.text.arr, 0, tok.text.length)
+    if (collect && t.length > mark) {
+      if (valueText == null) valueText = new ByteBuilder(t.length - mark)
+      valueText.append(t.arr, mark, t.length - mark)
     }
-    if (arrays != null) {
+    if (repeatedSeen) {
       i = 0
       while (i < p.size) {
-        if (arrays(i) != null) values(i) = new GenericArrayData(arrays(i).toArray)
+        if (p.repeated(i) && rows.isOpen(node + i)) rows.closeArray(node + i, p.elemWidth(i))
         i += 1
       }
     }
     if (valueText != null) {
-      values(valueIdx) = coerce(p, valueIdx, p.fieldKind(valueIdx),
-        p.fieldType(valueIdx), valueText.arr, 0, valueText.length)
+      coerce(p, valueIdx, p.fieldKind(valueIdx), p.fieldType(valueIdx),
+        valueText.arr, 0, valueText.length, node + valueIdx)
     }
-    new GenericInternalRow(values)
+    node
   }
 
-  /** Parse one element value of field `idx` (START already read): a nested
-    * struct, or leaf text, where the XSD default=/fixed= lexical form
-    * replaces EMPTY text.
+  /** Parse one element value of field `idx` (START already read) into entry
+    * `dst`: a nested struct, or leaf text, where the XSD default=/fixed=
+    * lexical form replaces EMPTY text. False when PERMISSIVE rescued it.
     */
-  private def parseValue(p: StructPlan, idx: Int): Any = {
+  private def parseValue(p: StructPlan, idx: Int, dst: Int): Boolean = {
     val child = p.child(idx)
-    if (child != null) parseStruct(child)
-    else {
-      tok.readLeaf()
+    if (child != null) {
+      val node = parseStruct(child)
+      rows.setStruct(dst, node, rows.structSize(child, node))
+      true
+    } else {
       val t = tok.text
+      val start = t.length
+      tok.readLeaf()
       val d = p.elemDefaults(idx)
-      if (d != null && isBlank(t.arr, 0, t.length)) {
-        coerce(p, idx, p.elemKind(idx), p.elemType(idx), d, 0, d.length)
-      } else coerce(p, idx, p.elemKind(idx), p.elemType(idx), t.arr, 0, t.length)
+      if (d != null && isBlank(t.arr, start, t.length - start)) {
+        coerce(p, idx, p.elemKind(idx), p.elemType(idx), d, 0, d.length, dst)
+      } else coerce(p, idx, p.elemKind(idx), p.elemType(idx), t.arr, start, t.length - start, dst)
     }
   }
 
-  /** convert(), rescued to null + a corrupt-record note in PERMISSIVE mode.
-    * Only leaf coercions are rescued — structural failures still follow the
-    * fail-fast / DROPMALFORMED record rule.
+  /** convert(), rescued to null + a corrupt-record note in PERMISSIVE mode
+    * (then false). Only leaf coercions are rescued — structural failures
+    * still follow the fail-fast / DROPMALFORMED record rule.
     */
   private def coerce(p: StructPlan, idx: Int, kind: Int, dt: DataType,
-      b: Array[Byte], off: Int, len: Int): Any =
-    if (!permissive) convert(kind, dt, b, off, len)
-    else try convert(kind, dt, b, off, len) catch {
+      b: Array[Byte], off: Int, len: Int, dst: Int): Boolean =
+    if (!permissive) { convert(kind, dt, b, off, len, dst); true }
+    else try { convert(kind, dt, b, off, len, dst); true } catch {
       case e: Exception =>
+        rows.setNull(dst)
         if (corruptMessages == null) {
           corruptMessages = new java.lang.StringBuilder
         } else corruptMessages.append("; ")
         corruptMessages.append(p.names(idx)).append(": ").append(e.getMessage)
-        null
+        false
     }
+
+  /** Trim-then-valueOf coercion, fail-fast (AvroTransormer.scala:194-208),
+    * of the UTF-8 text `b[off, off+len)` into entry `dst`. Trimming drops
+    * bytes <= 0x20, which in UTF-8 are exactly the chars String.trim drops.
+    */
+  private def convert(kind: Int, dt: DataType, b: Array[Byte], off: Int, len: Int,
+      dst: Int): Unit = {
+    var s = off
+    var e = off + len
+    while (s < e && isSpace(b(s))) s += 1
+    while (e > s && isSpace(b(e - 1))) e -= 1
+    (kind: @annotation.switch) match {
+      case KString => rows.setBytes(dst, b, s, e - s)
+      case KInt =>
+        val v = digits(b, s, e, 9)
+        rows.setFixed(dst,
+          if (v != Long.MinValue) v else java.lang.Integer.parseInt(str(b, s, e)).toLong)
+      case KLong =>
+        val v = digits(b, s, e, 18)
+        rows.setFixed(dst, if (v != Long.MinValue) v else java.lang.Long.parseLong(str(b, s, e)))
+      case KFloat =>
+        rows.setFixed(dst,
+          java.lang.Float.floatToRawIntBits(java.lang.Float.parseFloat(str(b, s, e))).toLong)
+      case KDouble =>
+        val v = decimal(b, s, e)
+        rows.setFixed(dst, java.lang.Double.doubleToRawLongBits(
+          if (!java.lang.Double.isNaN(v)) v else java.lang.Double.parseDouble(str(b, s, e))))
+      case KBoolean =>
+        // XSD's boolean lexical space is {true, false, 1, 0}; plain
+        // parseBoolean (reference behavior) silently reads "1" as false.
+        val v =
+          if (e - s == 1 && (b(s) == '1' || b(s) == '0')) b(s) == '1'
+          else java.lang.Boolean.parseBoolean(str(b, s, e))
+        rows.setFixed(dst, if (v) 1L else 0L)
+      case KDecimal => // xml.decimal.as.decimal / xs:unsignedLong
+        val d = dt.asInstanceOf[DecimalType]
+        val v = Decimal(new java.math.BigDecimal(str(b, s, e)), d.precision, d.scale)
+        if (d.precision <= Decimal.MAX_LONG_DIGITS) rows.setFixed(dst, v.toUnscaledLong)
+        else {
+          val u = v.toJavaBigDecimal.unscaledValue.toByteArray
+          rows.setBytes(dst, u, 0, u.length)
+        }
+      case KBinary => // xs:base64Binary (MIME decoder tolerates line wraps)
+        val v = java.util.Base64.getMimeDecoder.decode(java.util.Arrays.copyOfRange(b, s, e))
+        rows.setBytes(dst, v, 0, v.length)
+      case KList => // xs:list: whitespace-separated item lexical forms
+        val et = dt.asInstanceOf[ArrayType].elementType
+        val ek = kindOf(et)
+        rows.openArray(dst)
+        var i = s
+        while (i < e) {
+          val t = i
+          while (i < e && !isSpace(b(i))) i += 1
+          val x = rows.alloc(1)
+          convert(ek, et, b, t, i - t, x)
+          rows.append(dst, x)
+          while (i < e && isSpace(b(i))) i += 1
+        }
+        rows.closeArray(dst, slotWidth(et))
+      case _ => throw new IllegalArgumentException(
+        s"unsupported leaf type in XML schema: $dt")
+    }
+  }
 }
 
 /** The read plan of one struct of the schema: everything the per-record
@@ -271,6 +349,23 @@ private[xml] final class StructPlan(st: StructType) {
     var s = hash(b, 0, b.length) & mask
     while (slots(s) >= 0 && !java.util.Arrays.equals(nameBytes(slots(s)), b)) s = (s + 1) & mask
     slots(s) = i
+  }
+
+  /** The field each field's name resolves to: itself, or the last field of
+    * the same name.
+    */
+  private val resolved = Array.tabulate(size)(i => lookup(nameBytes(i), 0, nameBytes(i).length))
+
+  /** [[lookup]] that first tries field `hint` (any Int): a sequence's
+    * elements mostly arrive in schema order, so the next one is usually the
+    * field after the last, and a name compare costs less than hashing it.
+    */
+  def lookupNext(hint: Int, b: Array[Byte], off: Int, len: Int): Int = {
+    if (hint >= 0 && hint < size) {
+      val n = nameBytes(hint)
+      if (XmlTokenizer.sameBytes(n, 0, n.length, b, off, len)) return resolved(hint)
+    }
+    lookup(b, off, len)
   }
 
   /** Index of the field named `b[off, off+len)`, or -1. */
@@ -310,6 +405,23 @@ private[xml] final class StructPlan(st: StructType) {
     case s: StructType => new StructPlan(s)
     case _ => null
   }
+
+  // UnsafeRow layout: null words, then one 8-byte slot per field.
+  val nullBytes: Int = RowBuffer.nullWords(size) * 8
+  val fixedBytes: Int = nullBytes + 8 * size
+  /** Bytes a fixed-width value writes into its slot. */
+  val fieldWidth: Array[Int] = fieldType.map(slotWidth)
+  /** Decimals wider than a long: 16 bytes in the row even when null. */
+  val wide: Array[Boolean] = fieldType.map {
+    case d: DecimalType => d.precision > Decimal.MAX_LONG_DIGITS
+    case _ => false
+  }
+  /** An array field's element type, and its element slot width. */
+  val arrayElem: Array[DataType] = fieldType.map {
+    case ArrayType(et, _) => et
+    case _ => null
+  }
+  val elemWidth: Array[Int] = arrayElem.map(et => if (et == null) 0 else slotWidth(et))
 
   // XSD default=/fixed=: attribute defaults fill ABSENT attributes; element
   // defaults fill PRESENT-but-EMPTY leaf elements.
@@ -359,7 +471,7 @@ private[xml] object StructPlan {
     h ^ (h >>> 15)
   }
 
-  private def isSpace(c: Byte): Boolean = c >= 0 && c <= 0x20
+  def isSpace(c: Byte): Boolean = c >= 0 && c <= 0x20
 
   /** Only whitespace (String.trim's notion: chars <= U+0020). */
   def isBlank(b: Array[Byte], off: Int, len: Int): Boolean = {
@@ -368,55 +480,16 @@ private[xml] object StructPlan {
     true
   }
 
-  private def str(b: Array[Byte], s: Int, e: Int): String = new String(b, s, e - s, UTF_8)
+  def str(b: Array[Byte], s: Int, e: Int): String = new String(b, s, e - s, UTF_8)
 
-  /** Trim-then-valueOf coercion, fail-fast (AvroTransormer.scala:194-208),
-    * of the UTF-8 text `b[off, off+len)`. Trimming drops bytes <= 0x20,
-    * which in UTF-8 are exactly the chars String.trim drops.
+  /** Bytes of one value's slot in an array of `dt` (a row slot is always
+    * 8): Spark's `UnsafeArrayWriter` element size, or an 8-byte offset and
+    * size for variable-length values.
     */
-  def convert(kind: Int, dt: DataType, b: Array[Byte], off: Int, len: Int): Any = {
-    var s = off
-    var e = off + len
-    while (s < e && isSpace(b(s))) s += 1
-    while (e > s && isSpace(b(e - 1))) e -= 1
-    (kind: @annotation.switch) match {
-      case KString => UTF8String.fromBytes(java.util.Arrays.copyOfRange(b, s, e))
-      case KInt =>
-        val v = digits(b, s, e, 9)
-        if (v != Long.MinValue) v.toInt else java.lang.Integer.parseInt(str(b, s, e))
-      case KLong =>
-        val v = digits(b, s, e, 18)
-        if (v != Long.MinValue) v else java.lang.Long.parseLong(str(b, s, e))
-      case KFloat => java.lang.Float.parseFloat(str(b, s, e))
-      case KDouble =>
-        val v = decimal(b, s, e)
-        if (!java.lang.Double.isNaN(v)) v else java.lang.Double.parseDouble(str(b, s, e))
-      case KBoolean =>
-        // XSD's boolean lexical space is {true, false, 1, 0}; plain
-        // parseBoolean (reference behavior) silently reads "1" as false.
-        if (e - s == 1 && b(s) == '1') java.lang.Boolean.TRUE
-        else if (e - s == 1 && b(s) == '0') java.lang.Boolean.FALSE
-        else java.lang.Boolean.parseBoolean(str(b, s, e))
-      case KDecimal => // xml.decimal.as.decimal / xs:unsignedLong
-        val d = dt.asInstanceOf[DecimalType]
-        Decimal(new java.math.BigDecimal(str(b, s, e)), d.precision, d.scale)
-      case KBinary => // xs:base64Binary (MIME decoder tolerates line wraps)
-        java.util.Base64.getMimeDecoder.decode(java.util.Arrays.copyOfRange(b, s, e))
-      case KList => // xs:list: whitespace-separated item lexical forms
-        val et = dt.asInstanceOf[ArrayType].elementType
-        val ek = kindOf(et)
-        val items = mutable.ArrayBuffer[Any]()
-        var i = s
-        while (i < e) {
-          val t = i
-          while (i < e && !isSpace(b(i))) i += 1
-          items += convert(ek, et, b, t, i - t)
-          while (i < e && isSpace(b(i))) i += 1
-        }
-        new GenericArrayData(items.toArray)
-      case _ => throw new IllegalArgumentException(
-        s"unsupported leaf type in XML schema: $dt")
-    }
+  def slotWidth(dt: DataType): Int = dt match {
+    case IntegerType | FloatType => 4
+    case BooleanType => 1
+    case _ => 8
   }
 
   private val Pow10 = Array.tabulate(16)(i => math.pow(10, i))
@@ -426,7 +499,7 @@ private[xml] object StructPlan {
     * digits and the power of ten are both exact doubles, and one IEEE
     * division rounds correctly (the fast path of every correct parser).
     */
-  private def decimal(b: Array[Byte], s: Int, e: Int): Double = {
+  def decimal(b: Array[Byte], s: Int, e: Int): Double = {
     var i = s
     val neg = i < e && b(i) == '-'
     if (i < e && (b(i) == '-' || b(i) == '+')) i += 1
@@ -454,7 +527,7 @@ private[xml] object StructPlan {
     * anything else, so the caller falls back to the JDK parser (and its
     * exact error message).
     */
-  private def digits(b: Array[Byte], s: Int, e: Int, maxDigits: Int): Long = {
+  def digits(b: Array[Byte], s: Int, e: Int, maxDigits: Int): Long = {
     var i = s
     val neg = i < e && b(i) == '-'
     if (i < e && (b(i) == '-' || b(i) == '+')) i += 1

@@ -52,7 +52,7 @@ private[xml] object XmlTokenizer {
   *
   * It reads `input` in 64 KiB chunks into one buffer and hands out element
   * names, attribute values and character data as slices of that buffer, so
-  * a leaf never becomes a `String` on its way to a `UTF8String` or a number.
+  * a leaf never becomes a `String` on its way to a row.
   * [[next]] yields START, END and EOF; character data (text and CDATA
   * sections) between them is validated and, when the caller asks, decoded
   * into [[text]]. Comments, processing instructions and the DOCTYPE are
@@ -89,7 +89,9 @@ private[xml] final class XmlTokenizer(input: InputStream, fragment: Boolean) {
   private var base = 0L // stream offset of buf(0)
   private var eof = false
 
-  /** Decoded character data collected by `next(collect = true)`. */
+  /** Decoded character data appended by `next(collect = true)`; only the
+    * caller clears it.
+    */
   val text = new ByteBuilder(256)
   private val value = new ByteBuilder(64) // decoded attribute value
 
@@ -247,11 +249,10 @@ private[xml] final class XmlTokenizer(input: InputStream, fragment: Boolean) {
     while (depth >= d) next(collect = false)
   }
 
-  /** Reads a leaf element's character data into [[text]] through its END,
+  /** Appends a leaf element's character data to [[text]] through its END,
     * skipping child elements (mixed content).
     */
   def readLeaf(): Unit = {
-    text.clear()
     var ev = next(collect = true)
     while (ev != End) {
       skipElement()

@@ -3,8 +3,13 @@ package graft.xml
 import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
+import org.apache.hadoop.fs.Path
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.types.StructType
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -16,7 +21,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the unsplit read equals Spark's built-in `xml` reader within their
   *    shared subset (no XSD defaults; `attributePrefix=""`,
   *    `valueTag=_Value`, `ignoreNamespace`, `ignoreSurroundingSpaces`);
-  *  - DROPMALFORMED and PERMISSIVE counts agree on corrupted leaf values.
+  *  - DROPMALFORMED and PERMISSIVE counts agree on corrupted leaf values;
+  *  - every row the scan hands out is its own canonical `UnsafeRow`.
   *
   * Documents mix comments, CDATA, entity and character references, CR LF,
   * multi-byte UTF-8, and prefixed, self-closing and same-name nested
@@ -181,6 +187,49 @@ class XmlDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 
+  private def scanOf(df: DataFrame): FileSourceScanExec =
+    df.queryExecution.executedPlan.collectFirst { case s: FileSourceScanExec => s }
+      .getOrElse(fail("no file scan in the plan"))
+
+  /** Checks every row the scan of `df` hands out: an `UnsafeRow`, a new
+    * object per record (Spark's projection reuses one), with canonical bytes
+    * at every depth ([[XmlFixtures.canonicalBytes]]). Returns the number of
+    * rows.
+    */
+  private def assertCanonicalScan(df: DataFrame, what: => String): Int = {
+    val scan = scanOf(df)
+    val schema = scan.requiredSchema
+    val problems = scan.inputRDDs().head.mapPartitions { it =>
+      val canonical = XmlFixtures.canonicalBytes(schema)
+      var prev: InternalRow = null
+      it.map { r =>
+        val problem = r match {
+          case _ if r eq prev => "one row object handed out twice"
+          case u: UnsafeRow =>
+            val want = canonical(u)
+            if (java.util.Arrays.equals(u.getBytes, want)) ""
+            else s"bytes ${XmlDifferentialSpec.hex(u.getBytes)}\n" +
+              s"canonical ${XmlDifferentialSpec.hex(want)}"
+          case o => s"not an UnsafeRow: ${o.getClass.getName}"
+        }
+        prev = r
+        problem
+      }
+    }.collect()
+    problems.find(_.nonEmpty).foreach(p => fail(s"$p\nof:\n$what"))
+    problems.length
+  }
+
+  private def fixture(dir: String, sep: String, typ: String, ns: String = "",
+      opts: Map[String, String] = Map.empty): DataFrame =
+    spark.read.format("graft.xml")
+      .option("xml.schema.location", s"$dir/schema")
+      .option("xml.separator.tag", sep)
+      .option("xml.separator.tag.type", typ)
+      .option("xml.separator.tag.type.ns", ns)
+      .options(opts)
+      .load(s"$dir/data")
+
   test("split reads over random split points equal the unsplit read") {
     val rnd = new scala.util.Random(7)
     cases(corrupt = false, 40).filterNot(_.nested).foreach { d =>
@@ -219,6 +268,52 @@ class XmlDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("every scanned row is its own canonical UnsafeRow") {
+    cases(corrupt = false, 40).foreach { d =>
+      val (schemaDir, dataDir) = write(d)
+      assert(assertCanonicalScan(ours(schemaDir, dataDir, "FAILFAST"), d.xml) === d.records)
+    }
+    cases(corrupt = true, 6).foreach { d =>
+      val (schemaDir, dataDir) = write(d)
+      assert(assertCanonicalScan(ours(schemaDir, dataDir, "PERMISSIVE"), d.xml) === d.records)
+    }
+    val res = "src/test/resources/graftxml"
+    val team = "http://example.org/graft/team"
+    def inline(f: XmlFixtures.Fixture, mode: String) = {
+      val (schemaDir, _) = XmlFixtures.write(f)
+      fixture(new java.io.File(schemaDir).getParent, f.separator, f.typeName,
+        opts = Map("mode" -> mode))
+    }
+    Seq(
+      "library" -> (fixture(s"$res/library", "item", "itemType"), 4),
+      "library, xml.decimal.as.decimal" -> (fixture(s"$res/library", "item", "itemType",
+        opts = Map("xml.decimal.as.decimal" -> "true")), 4),
+      "venetian" -> (fixture(s"$res/venetian", "Player", "PlayerType", team), 3),
+      "simpleContent" -> (fixture(s"$res/simplecontent", "sample", "sampleType"), 2),
+      "nil and defaults" -> (fixture(s"$res/nildefaults", "reading", "readingType"), 3),
+      "long-tail primitives" -> (inline(XmlFixtures.longTail, "FAILFAST"), 1),
+      "extension + xs:list" -> (inline(XmlFixtures.extensionList, "FAILFAST"), 2),
+      "PERMISSIVE" -> (inline(XmlFixtures.permissive, "PERMISSIVE"), 3)
+    ).foreach { case (name, (df, n)) => assert(assertCanonicalScan(df, name) === n, name) }
+  }
+
+  test("an unpartitioned scan hands out the record iterator itself, no projection") {
+    val dir = "src/test/resources/graftxml/library"
+    val scan = scanOf(fixture(dir, "item", "itemType"))
+    assert(scan.relation.partitionSchema.isEmpty)
+    val reader = scan.relation.fileFormat.buildReaderWithPartitionValues(spark,
+      scan.relation.dataSchema, scan.relation.partitionSchema, scan.requiredSchema,
+      Nil, scan.relation.options, spark.sessionState.newHadoopConf())
+    new java.io.File(s"$dir/data").listFiles().filter(_.getName.endsWith(".xml")).foreach { f =>
+      val it = reader(PartitionedFile(InternalRow.empty,
+        SparkPath.fromPath(new Path(f.toURI)), 0L, f.length()))
+      assert(it.isInstanceOf[XmlRecordIterator], it.getClass.getName)
+      val rows = it.toList
+      assert(rows.nonEmpty && rows.forall(_.isInstanceOf[UnsafeRow]))
+      assert(rows.zip(rows.tail).forall { case (a, b) => !(a eq b) })
+    }
+  }
+
   test("DROPMALFORMED and PERMISSIVE counts agree with the built-in reader on corrupt leaves") {
     cases(corrupt = true, 6).foreach { d =>
       val (schemaDir, dataDir) = write(d)
@@ -240,6 +335,8 @@ class XmlDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object XmlDifferentialSpec {
+  def hex(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02x").mkString
+
   /** A stream that returns 1 to 7 bytes per read. */
   final class Trickle(bytes: Array[Byte], seed: Long) extends java.io.InputStream {
     private val rnd = new scala.util.Random(seed)

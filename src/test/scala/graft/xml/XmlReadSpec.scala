@@ -273,28 +273,13 @@ class XmlReadSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("mode=PERMISSIVE keeps bad records: null leaf + corrupt-record column") {
-    val dir = java.nio.file.Files.createTempDirectory("xmlperm").toFile
-    val schemaDir = new java.io.File(dir, "schema"); schemaDir.mkdirs()
-    val dataDir = new java.io.File(dir, "data"); dataDir.mkdirs()
-    java.nio.file.Files.writeString(new java.io.File(schemaDir, "s.xsd").toPath,
-      """<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
-        |  <xs:complexType name="rType">
-        |    <xs:sequence>
-        |      <xs:element type="xs:string" name="id"/>
-        |      <xs:element type="xs:int" name="n" minOccurs="0"/>
-        |    </xs:sequence>
-        |  </xs:complexType>
-        |</xs:schema>""".stripMargin)
-    java.nio.file.Files.writeString(new java.io.File(dataDir, "d.xml").toPath,
-      "<root><r><id>a</id><n>1</n></r>" +
-        "<r><id>b</id><n>bogus</n></r>" +
-        "<r><id>c</id><n>3</n></r></root>")
+    val (schemaDir, dataDir) = XmlFixtures.write(XmlFixtures.permissive)
     val df = spark.read.format("graft.xml")
-      .option("xml.schema.location", schemaDir.getAbsolutePath)
+      .option("xml.schema.location", schemaDir)
       .option("xml.separator.tag", "r")
       .option("xml.separator.tag.type", "rType")
       .option("mode", "PERMISSIVE")
-      .load(dataDir.getAbsolutePath)
+      .load(dataDir)
     assert(df.schema.fieldNames.toSeq === Seq("id", "n", "_corrupt_record"))
     val rows = df.collect().sortBy(_.getString(0))
     assert(rows.length === 3) // nothing dropped
@@ -474,39 +459,19 @@ class XmlReadSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("XSD long-tail primitives: ints, unsigned, token/anyURI, base64Binary, bool 1/0") {
-    val dir = java.nio.file.Files.createTempDirectory("xmlprims").toFile
-    val schemaDir = new java.io.File(dir, "schema"); schemaDir.mkdirs()
-    val dataDir = new java.io.File(dir, "data"); dataDir.mkdirs()
-    java.nio.file.Files.writeString(new java.io.File(schemaDir, "p.xsd").toPath,
-      """<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
-        |  <xs:complexType name="recType">
-        |    <xs:sequence>
-        |      <xs:element type="xs:short" name="a"/>
-        |      <xs:element type="xs:unsignedInt" name="b"/>
-        |      <xs:element type="xs:unsignedLong" name="c"/>
-        |      <xs:element type="xs:anyURI" name="u"/>
-        |      <xs:element type="xs:base64Binary" name="payload"/>
-        |      <xs:element type="xs:boolean" name="flag"/>
-        |    </xs:sequence>
-        |  </xs:complexType>
-        |</xs:schema>""".stripMargin)
-    val b64 = java.util.Base64.getEncoder.encodeToString(
-      "binary payload!".getBytes("UTF-8"))
-    java.nio.file.Files.writeString(new java.io.File(dataDir, "d.xml").toPath,
-      s"""<root><r><a>-7</a><b>4294967295</b><c>18446744073709551615</c>
-         |<u>https://example.org/x</u><payload>$b64</payload><flag>1</flag></r></root>""".stripMargin)
+    val (schemaDir, dataDir) = XmlFixtures.write(XmlFixtures.longTail)
     val rows = spark.read.format("graft.xml")
-      .option("xml.schema.location", schemaDir.getAbsolutePath)
+      .option("xml.schema.location", schemaDir)
       .option("xml.separator.tag", "r")
       .option("xml.separator.tag.type", "recType")
-      .load(dataDir.getAbsolutePath).collect()
+      .load(dataDir).collect()
     assert(rows.length === 1)
     val r = rows(0)
     assert(r.getInt(0) === -7)
     assert(r.getLong(1) === 4294967295L)
     assert(r.getDecimal(2).toBigInteger.toString === "18446744073709551615")
     assert(r.getString(3) === "https://example.org/x")
-    assert(new String(r.getAs[Array[Byte]](4), "UTF-8") === "binary payload!")
+    assert(new String(r.getAs[Array[Byte]](4), "UTF-8") === XmlFixtures.longTailPayload)
     assert(r.getBoolean(5) === true) // XSD "1" is true (plain parseBoolean isn't)
   }
 
@@ -575,41 +540,12 @@ class XmlReadSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("complexContent extension + xs:list records read end-to-end") {
-    val dir = java.nio.file.Files.createTempDirectory("xmlext").toFile
-    val schemaDir = new java.io.File(dir, "schema"); schemaDir.mkdirs()
-    val dataDir = new java.io.File(dir, "data"); dataDir.mkdirs()
-    java.nio.file.Files.writeString(new java.io.File(schemaDir, "s.xsd").toPath,
-      """<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
-        |  <xs:simpleType name="intList">
-        |    <xs:list itemType="xs:int"/>
-        |  </xs:simpleType>
-        |  <xs:complexType name="BaseType">
-        |    <xs:sequence>
-        |      <xs:element type="xs:string" name="id"/>
-        |    </xs:sequence>
-        |    <xs:attribute name="version" type="xs:int"/>
-        |  </xs:complexType>
-        |  <xs:complexType name="EventType">
-        |    <xs:complexContent>
-        |      <xs:extension base="BaseType">
-        |        <xs:sequence>
-        |          <xs:element type="xs:double" name="score"/>
-        |          <xs:element type="intList" name="pages" minOccurs="0"/>
-        |        </xs:sequence>
-        |      </xs:extension>
-        |    </xs:complexContent>
-        |  </xs:complexType>
-        |</xs:schema>""".stripMargin)
-    java.nio.file.Files.writeString(new java.io.File(dataDir, "d.xml").toPath,
-      """<root>
-        |  <ev version="3"><id>a1</id><score>0.5</score><pages>1 2  3</pages></ev>
-        |  <ev><id>a2</id><score>1.5</score></ev>
-        |</root>""".stripMargin)
+    val (schemaDir, dataDir) = XmlFixtures.write(XmlFixtures.extensionList)
     val df = spark.read.format("graft.xml")
-      .option("xml.schema.location", schemaDir.getAbsolutePath)
+      .option("xml.schema.location", schemaDir)
       .option("xml.separator.tag", "ev")
       .option("xml.separator.tag.type", "EventType")
-      .load(dataDir.getAbsolutePath)
+      .load(dataDir)
     // inherited fields come first in the schema
     assert(df.schema.fieldNames.toSeq === Seq("id", "version", "score", "pages"))
     val rows = df.orderBy("id").collect()
@@ -621,6 +557,115 @@ class XmlReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(1).getAs[String]("id") === "a2")
     assert(rows(1).isNullAt(rows(1).fieldIndex("version")))
     assert(rows(1).isNullAt(rows(1).fieldIndex("pages")))
+  }
+
+  /** Records `<r>` with a string, a nested struct, a repeated string, an
+    * xs:list of ints and an int.
+    */
+  private val recXsd =
+    """<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
+      |  <xs:simpleType name="intList"><xs:list itemType="xs:int"/></xs:simpleType>
+      |  <xs:complexType name="subType"><xs:sequence>
+      |    <xs:element name="a" type="xs:int"/>
+      |    <xs:element name="b" type="xs:string" minOccurs="0"/>
+      |  </xs:sequence></xs:complexType>
+      |  <xs:complexType name="rType"><xs:sequence>
+      |    <xs:element name="id" type="xs:string"/>
+      |    <xs:element name="sub" type="subType" minOccurs="0"/>
+      |    <xs:element name="tag" type="xs:string" minOccurs="0" maxOccurs="unbounded"/>
+      |    <xs:element name="pages" type="intList" minOccurs="0"/>
+      |    <xs:element name="n" type="xs:int" minOccurs="0"/>
+      |  </xs:sequence></xs:complexType>
+      |</xs:schema>""".stripMargin
+
+  private def recSchemaDir(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("xmlrec").toFile
+    java.nio.file.Files.writeString(new java.io.File(dir, "s.xsd").toPath, recXsd)
+    dir.getAbsolutePath
+  }
+
+  test("partitioned directory: each row carries its region, and a region filter prunes") {
+    val dir = java.nio.file.Files.createTempDirectory("xmlpart").toFile
+    def part(region: String, recs: String*): Unit = {
+      val d = new java.io.File(dir, s"data/region=$region"); d.mkdirs()
+      java.nio.file.Files.writeString(new java.io.File(d, s"$region.xml").toPath,
+        recs.mkString("<root>", "", "</root>"))
+    }
+    part("eu",
+      "<r><id>e1</id><sub><a>1</a><b>x</b></sub><tag>t1</tag><tag>t2</tag><n>10</n></r>",
+      "<r><id>e2</id><pages>4 5</pages></r>")
+    part("us",
+      "<r><id>u1</id><sub><a>3</a></sub><n>30</n></r>",
+      "<r><id>u2</id><tag>t3</tag></r>",
+      "<r><id>u3</id></r>")
+    val df = spark.read.format("graft.xml")
+      .option("xml.schema.location", recSchemaDir())
+      .option("xml.separator.tag", "r")
+      .option("xml.separator.tag.type", "rType")
+      .load(s"$dir/data")
+    assert(df.schema.fieldNames.toSeq === Seq("id", "sub", "tag", "pages", "n", "region"))
+    val rows = df.orderBy("id").collect().map(_.toString).toSeq
+    assert(rows === Seq(
+      "[e1,[1,x],ArraySeq(t1, t2),null,10,eu]",
+      "[e2,null,null,ArraySeq(4, 5),null,eu]",
+      "[u1,[3,null],null,null,30,us]",
+      "[u2,null,ArraySeq(t3),null,null,us]",
+      "[u3,null,null,null,null,us]"))
+    val eu = df.filter(org.apache.spark.sql.functions.col("region") === "eu")
+    assert(eu.select("id").collect().map(_.getString(0)).sorted.toSeq === Seq("e1", "e2"))
+    val scan = eu.queryExecution.executedPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.get
+    assert(scan.partitionFilters.nonEmpty)
+    // only the eu file was opened: its two records are all the scan parsed
+    assert(XmlFileFormat.counters(eu).get.parsed.value === 2L)
+  }
+
+  test("a failed record leaves nothing behind; huge leaves and arrays grow the scratch") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+    val schema = XsdSchema.structTypeFor(recSchemaDir(), "", "rType")
+    val withCorrupt = schema.add("_corrupt_record", org.apache.spark.sql.types.StringType)
+    def read(xml: String, s: org.apache.spark.sql.types.StructType,
+        drop: Boolean = false, permissive: Boolean = false): List[UnsafeRow] =
+      new XmlRecordIterator(new java.io.ByteArrayInputStream(xml.getBytes("UTF-8")), s, "r",
+        dropMalformed = drop, permissive = permissive).map(_.asInstanceOf[UnsafeRow]).toList
+    // fails in `pages` after its nested struct, two repeated elements and
+    // two list items were written, then again at `n`
+    val bad = "<r><id>bad</id><sub><a>1</a><b>bb</b></sub><tag>t1</tag><tag>t2</tag>" +
+      "<pages>4 5 x</pages><n>bogus</n></r>"
+    val good = "<r><id>good</id><sub><a>2</a></sub><tag>t3</tag><pages>7 8</pages><n>9</n></r>"
+    def doc(recs: String*) = recs.mkString("<root>", "", "</root>")
+
+    val dropped = read(doc(bad, good), schema, drop = true)
+    assert(dropped.length === 1)
+    assert(dropped.head.getBytes.toSeq === read(doc(good), schema).head.getBytes.toSeq)
+
+    val kept = read(doc(bad, good), withCorrupt, permissive = true)
+    assert(kept.length === 2)
+    val rescued = kept.head
+    assert(rescued.getUTF8String(0).toString === "bad")
+    assert(rescued.isNullAt(3) && rescued.isNullAt(4)) // pages and n rescued to null
+    assert(rescued.getUTF8String(5).toString.startsWith("pages: "))
+    assert(kept(1).getBytes.toSeq ===
+      read(doc(good), withCorrupt, permissive = true).head.getBytes.toSeq)
+    val canonical = XmlFixtures.canonicalBytes(withCorrupt)
+    kept.foreach(r => assert(r.getBytes.toSeq === canonical(r).toSeq))
+
+    // a 1 MiB leaf and 10,000 repeated elements, between two small records
+    val text = Array.tabulate(1 << 20)(i => ('a' + i % 26).toChar).mkString
+    val tags = (0 until 10000).map(i => s"t$i")
+    val big = s"<r><id>big</id><sub><a>7</a><b>$text</b></sub>" +
+      tags.map(t => s"<tag>$t</tag>").mkString + "</r>"
+    val rows = read(doc(good, big, good), schema)
+    assert(rows.length === 3)
+    val b = rows(1)
+    assert(b.getUTF8String(0).toString === "big")
+    assert(b.getStruct(1, 2).getUTF8String(1).toString === text)
+    val got = b.getArray(2)
+    assert(got.numElements() === tags.length)
+    assert((0 until got.numElements()).map(got.getUTF8String(_).toString) === tags)
+    assert(b.getBytes.toSeq === XmlFixtures.canonicalBytes(schema)(b).toSeq)
+    assert(rows(0).getBytes.toSeq === rows(2).getBytes.toSeq)
   }
 
   test("missing required option yields a clear error naming the key") {
