@@ -715,6 +715,7 @@ object Versioned {
     * deterministic — the oracle-able slice of DESCRIBE HISTORY).
     */
   def history(s: SparkSession, dir: String): DataFrame = {
+    val footers = new FooterReader(s)
     val rows = (0 to latest(dir)).filter(isCommitted(dir, _)).map { v =>
       val kind =
         if (isDvVersion(dir, v)) "dv"
@@ -726,11 +727,11 @@ object Versioned {
           "partitioned"
         else "snapshot"
       val n = kind match {
-        case "dv" => footerRowCount(s, dvPath(dir, v))
-        case "append" => footerRowCount(s, addPath(dir, v))
+        case "dv" => footerRowCount(footers, dvPath(dir, v))
+        case "append" => footerRowCount(footers, addPath(dir, v))
         case "rename" | "clone" => 0L
-        case "partitioned" => footerRowCount(s, s"$dir/v$v/data")
-        case _ => footerRowCount(s, s"$dir/v$v")
+        case "partitioned" => footerRowCount(footers, s"$dir/v$v/data")
+        case _ => footerRowCount(footers, s"$dir/v$v")
       }
       (v, kind, n)
     }
@@ -743,10 +744,9 @@ object Versioned {
     * job, no row materialization. The row-count sidecar posture applied
     * to history: cost ∝ number of files, never rows.
     */
-  private def footerRowCount(s: SparkSession, path: String): Long = {
-    val conf = s.sessionState.newHadoopConf()
+  private def footerRowCount(footers: FooterReader, path: String): Long = {
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
+    val fs = root.getFileSystem(footers.conf)
     // manual recursion (not fs.listFiles(recursive)) so Spark's
     // hidden-path convention holds: `_`/`.`-prefixed entries (sidecars
     // like `_stats`/`_bloom`, `_SUCCESS`) are skipped exactly as the
@@ -759,14 +759,34 @@ object Versioned {
         if ((name.startsWith("_") && !name.contains("=")) ||
             name.startsWith(".")) 0L
         else if (st.isDirectory) walk(st.getPath)
-        else if (name.endsWith(".parquet")) {
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(st.getPath, conf))
-          try r.getRecordCount finally r.close()
-        } else 0L
+        else if (name.endsWith(".parquet"))
+          footers(st.getPath)(_.getRecordCount)
+        else 0L
       }.sum
     walk(root)
+  }
+
+  /** Driver-side parquet footer reads over the session's Hadoop
+    * configuration, which is already loaded, with ONE set of read options
+    * per instance. `ParquetFileReader.open(file)` without options builds
+    * a fresh `Configuration` for every file, and each one re-parses
+    * `core-default.xml` and scans the classpath for `*-site.xml`. Files
+    * open through the configuration's own file system (the checksummed
+    * local FS for plain paths), so `.crc` files are still verified.
+    */
+  private final class FooterReader(s: SparkSession) {
+    val conf: org.apache.hadoop.conf.Configuration =
+      s.sessionState.newHadoopConf()
+    private val options =
+      org.apache.parquet.HadoopReadOptions.builder(conf).build()
+
+    def apply[A](file: org.apache.hadoop.fs.Path)(
+        f: org.apache.parquet.hadoop.ParquetFileReader => A): A = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf),
+        options)
+      try f(r) finally r.close()
+    }
   }
 
   /** Selective OPTIMIZE (manifest de-fragmentation — the Delta
@@ -1039,21 +1059,22 @@ object Versioned {
       nulls: Long, mm: Option[(Long, Long)])
 
   /** Harvest per-column stats from the parquet footers under `path`
-    * (driver-side metadata reads — the files are the batch just staged).
+    * (driver-side metadata reads — the files are the batch just staged;
+    * cost ∝ files, each one footer read through one [[FooterReader]] on
+    * the session's loaded configuration, with no configuration parse per
+    * file).
     * Returns (all top-level column names in the batch's layout, tracked
     * column → stats). A column is dropped from tracking the moment any
     * block lacks exact stats for it; an unreadable file aborts the whole
     * harvest (caller treats None as "no sidecar").
     */
-  private def harvestAddStats(
+  private def harvestAddStats(s: SparkSession,
       path: String): Option[(Seq[String], Map[String, AddColStats])] =
     scala.util.Try {
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
       import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
       import org.apache.parquet.schema.LogicalTypeAnnotation
       import scala.jdk.CollectionConverters._
-      val conf = new org.apache.hadoop.conf.Configuration()
+      val footers = new FooterReader(s)
       val files = Option(new java.io.File(path).listFiles())
         .getOrElse(Array.empty[java.io.File])
         .filter(f => f.isFile && f.getName.endsWith(".parquet"))
@@ -1063,9 +1084,7 @@ object Versioned {
       val untrackable = scala.collection.mutable.Set.empty[String]
       var names = Seq.empty[String]
       files.foreach { f =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf))
-        try {
+        footers(new org.apache.hadoop.fs.Path(f.getAbsolutePath)) { r =>
           val footer = r.getFooter
           val schemaNames = footer.getFileMetaData.getSchema.getFields
             .asScala.map(_.getName).toSeq
@@ -1133,7 +1152,7 @@ object Versioned {
               }
             }
           }
-        } finally r.close()
+        }
       }
       (names, acc.toMap)
     }.toOption
@@ -1212,7 +1231,7 @@ object Versioned {
         "must be a full commit")
     val staging = s"$dir/.staging-append-${java.util.UUID.randomUUID()}"
     df.write.mode("overwrite").parquet(staging)
-    adoptStagedAppend(dir, staging)
+    adoptStagedAppend(df.sparkSession, dir, staging)
   }
 
   // ---- staged commits (the DSv2 write path, graft.sources.GraftCatalog) --
@@ -1253,12 +1272,12 @@ object Versioned {
   private[graft] def adoptStagedSnapshot(dir: String, staging: String): Int =
     adoptStaged(dir, staging, delta = false)
 
-  private[graft] def adoptStagedAppend(dir: String,
+  private[graft] def adoptStagedAppend(s: SparkSession, dir: String,
       staging: String): Int = {
     // footer harvest runs on the staged files OUTSIDE the claim (the
     // claim window stays metadata-scale); only the sidecar write lands
     // inside, before the seal — sealed-together like every other sidecar
-    val harvested = harvestAddStats(staging)
+    val harvested = harvestAddStats(s, staging)
     withMutateClaim(dir) {
       require(latest(dir) >= 0,
         s"staged append: no committed versions in $dir — the initial " +
@@ -1287,11 +1306,11 @@ object Versioned {
         "initial version must be a full commit")
     val batch = s.read.parquet(staging)
     val (ok, viol) = gateCols(expectations)
-    if (batch.filter(!ok).isEmpty) adoptStagedAppend(dir, staging)
+    if (batch.filter(!ok).isEmpty) adoptStagedAppend(s, dir, staging)
     else {
       val valid = s"$dir/.staging-valid-${java.util.UUID.randomUUID()}"
       batch.filter(ok).write.mode("overwrite").parquet(valid)
-      val harvested = harvestAddStats(valid)
+      val harvested = harvestAddStats(s, valid)
       val v = adoptStaged(dir, valid, delta = true, harvested,
         v => batch.filter(!ok).withColumn("violations", viol)
           .withColumn("commit_version", lit(v))
@@ -1475,7 +1494,7 @@ object Versioned {
       // check and commit the batch twice
       val staging = s"$dir/.staging-batch-${java.util.UUID.randomUUID()}"
       df.write.mode("overwrite").parquet(staging)
-      val harvested = harvestAddStats(staging)
+      val harvested = harvestAddStats(df.sparkSession, staging)
       withMutateClaim(dir) {
         if (seen()) { rmTree(new java.io.File(staging)); None }
         else Some(adoptStaged(dir, staging, delta = latest(dir) >= 0,

@@ -1332,7 +1332,7 @@ private[sources] class GraftBatchWrite(spark: SparkSession, dir: String,
         // only the ingest path is gated (see GraftTable.expectationGates).
         if (!stagedParquet()) cleanup()
         else if (expectations.isEmpty) {
-          Versioned.adoptStagedAppend(dir, staging); ()
+          Versioned.adoptStagedAppend(spark, dir, staging); ()
         } else {
           Versioned.adoptStagedAppendExpect(spark, dir, staging,
             expectations)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, LogicalRelation, OutputWriter, OutputWriterFactory, PartitionedFile}
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.apache.spark.util.{LongAccumulator, SerializableConfiguration}
+import org.apache.spark.util.LongAccumulator
 
 /** XML DataSource (SURVEY.md §2.1 S2–S5): `spark.read.format("graft.xml")`.
   *
@@ -43,6 +43,12 @@ import org.apache.spark.util.{LongAccumulator, SerializableConfiguration}
   *  - schema derived ONCE on the driver by `inferSchema` and shipped to tasks
   *    inside the closure — fixes the reference's per-task XSD re-parse
   *    (`AvroTransormer.scala:26-43`, SURVEY.md §4.1).
+  *  - tasks open files with the scan's own Hadoop configuration (session
+  *    settings plus reader options), loaded once on the driver and
+  *    broadcast once per scan as its bare key/value entries
+  *    ([[ConfEntries]]) rather than through `Configuration.write`, which
+  *    gzips each of its ~1,100 keys' provenance; an executor rebuilds it
+  *    once per broadcast, with no default-resource parse.
   *  - `requiredSchema` (Catalyst's pruned projection) is handed straight to
   *    the record reader, so unprojected XML subtrees are skipped, not built.
   *  - the record reader writes each record straight into an `UnsafeRow`;
@@ -151,7 +157,7 @@ class XmlFileFormat extends FileFormat with DataSourceRegister with Serializable
       "graft.xml: records parsed")
     scanCounters = Some(XmlScanCounters(dropped, parsed))
     val confBroadcast = sparkSession.sparkContext.broadcast(
-      new SerializableConfiguration(hadoopConf))
+      new ConfEntries(hadoopConf))
     val splittable = boolOpt(options, "xml.splittable")
     (file: PartitionedFile) => {
       val path = file.toPath

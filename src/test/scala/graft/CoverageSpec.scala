@@ -527,6 +527,44 @@ class CoverageSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(_.getAs[Long]("k")).toSet === Set(2L, 3L, 4L))
   }
 
+  test("LK: the _addstats sidecar of a multi-file append is pinned byte for byte") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val dir = java.nio.file.Files.createTempDirectory("graft-vtaddstats").toString
+    val schema = StructType(Seq(
+      StructField("i", IntegerType), StructField("l", LongType),
+      StructField("d", DateType), StructField("ln", LongType),
+      StructField("z", IntegerType), StructField("s", StringType),
+      StructField("nest", StructType(Seq(StructField("a", IntegerType),
+        StructField("b", ArrayType(IntegerType)))))))
+    val rows = (0 until 9).map { k =>
+      Row(k - 4, 1000000000000L * k, java.sql.Date.valueOf(
+        java.time.LocalDate.of(2024, 1, 1).plusDays(k.toLong * 40)),
+        if (k % 3 == 0) null else -7L * k, null, s"s$k",
+        Row(k, Seq(k, k + 1)))
+    }
+    operators.Versioned.commit(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.take(1), 1), schema), dir)
+    // three partitions: the batch lands as three parquet files
+    val batch = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 3), schema)
+    assert(operators.Versioned.appendRows(batch, dir) === 1)
+    val parts = new java.io.File(operators.Versioned.addPath(dir, 1))
+      .listFiles().count(_.getName.endsWith(".parquet"))
+    assert(parts === 3)
+    val text = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(dir, "v1", "_addstats"))
+    // string and nested columns are named in the layout but untracked;
+    // the all-null column keeps its counts with an empty min/max
+    assert(text === Seq(
+      "#cols\ti,l,d,ln,z,s,nest",
+      "d\td\t9\t0\t19723\t20043",
+      "i\ti\t9\t0\t-4\t4",
+      "l\ti\t9\t0\t0\t8000000000000",
+      "ln\ti\t9\t3\t-56\t-7",
+      "z\ti\t9\t9\t\t").mkString("\n"))
+  }
+
   test("LK: append-chain scan coalescing — plan size tracks boundaries, not commits") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

@@ -697,4 +697,57 @@ class XmlReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     val e = intercept[org.apache.spark.SparkException] { df.collect() }
     assert(e.getCause != null)
   }
+
+  test("a Hadoop key passed as a reader option reaches the tasks that open the files") {
+    // the scan ships its option-derived configuration: with `fs.file.impl`
+    // naming a counting local FS (uncached, so the option is honoured on
+    // every lookup), the tasks' opens go through it, and the rows match
+    val before = CountingLocalFs.xmlOpens.get
+    val viaOption = spark.read.format("graft.xml")
+      .option("xml.schema.location", s"$base/library/schema")
+      .option("xml.separator.tag", "item")
+      .option("xml.separator.tag.type", "itemType")
+      .option("fs.file.impl", classOf[CountingLocalFs].getName)
+      .option("fs.file.impl.disable.cache", "true")
+      .load(s"$base/library/data")
+    val a = viaOption.orderBy("sku").collect().map(_.toString).toSeq
+    val b = readLibrary.orderBy("sku").collect().map(_.toString).toSeq
+    assert(a === b && a.length === 4)
+    assert(CountingLocalFs.xmlOpens.get > before)
+  }
+
+  test("ConfEntries round-trips every session entry, long and non-ASCII values") {
+    import scala.jdk.CollectionConverters._
+    def entries(c: org.apache.hadoop.conf.Configuration): Map[String, String] =
+      c.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    val conf = spark.sessionState.newHadoopConf()
+    // DataOutput.writeUTF refuses strings whose encoding passes 65,535 bytes
+    conf.set("graft.test.long", "x" * 70000)
+    conf.set("graft.test.unicode", "Zürich — 東京 — \uD83D\uDE00")
+    val want = entries(conf)
+    assert(want.size > 100 && want("graft.test.long").length === 70000)
+    val serializers = Seq(
+      new org.apache.spark.serializer.JavaSerializer(spark.sparkContext.getConf),
+      new org.apache.spark.serializer.KryoSerializer(spark.sparkContext.getConf))
+    serializers.foreach { ser =>
+      val inst = ser.newInstance()
+      val back = inst.deserialize[ConfEntries](
+        inst.serialize(new ConfEntries(conf))).value
+      assert(back ne conf)
+      assert(entries(back) === want, ser.getClass.getSimpleName)
+    }
+  }
+}
+
+/** A local file system that counts the XML files it opens. */
+class CountingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(p: org.apache.hadoop.fs.Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    if (p.getName.endsWith(".xml")) CountingLocalFs.xmlOpens.incrementAndGet()
+    super.open(p, bufferSize)
+  }
+}
+
+object CountingLocalFs {
+  val xmlOpens = new java.util.concurrent.atomic.AtomicInteger()
 }
